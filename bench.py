@@ -364,7 +364,18 @@ def main() -> None:
         )
 
     anchor_samples.append(_anchor_once())
-    tiled = tiled_layout_compare(spark)
+    # same isolation as the per-query loop: a JVM death here (seen on a
+    # 4-core host) must not swallow the JSON line of the finished queries
+    try:
+        tiled = tiled_layout_compare(spark)
+    except Exception as exc:  # noqa: BLE001 — report and continue
+        tiled = None
+        errors["tiled_layout_compare"] = f"{type(exc).__name__}: {exc}"[:300]
+        print(
+            f"[bench] tiled_layout_compare: ERROR "
+            f"{errors['tiled_layout_compare']}",
+            file=sys.stderr,
+        )
     total = round(sum(times.values()), 3)
     a_sorted = sorted(anchor_samples)
     anchor_median = round(

@@ -2749,10 +2749,8 @@ def resample_spatial_warp_tiled(
                         out["w"].append(chunk_w)
             yield pd.DataFrame(out)
 
-    import os as _os
-
     spark = tc.df.sparkSession
-    cpus = int(_os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark.sparkContext.defaultParallelism
     req_schema = ("st_r int, st_c int, tt_r int, tt_c int, "
                   "spos array<int>, tpos array<int>")
     if bilinear:

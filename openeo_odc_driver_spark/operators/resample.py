@@ -320,10 +320,8 @@ def resample_spatial_warp(
                     }))
             yield pd.concat(parts, ignore_index=True)
 
-    import os
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = cube.df.sparkSession
+    cpus = spark.sparkContext.defaultParallelism
     targets = (
         spark.range(nyt * nxt)
         .repartition(min(max(nyt * nxt // 65536, 1), cpus * 4))

@@ -841,7 +841,6 @@ def _bloom_positions(gh: F.Column) -> list:
 
 def bloom_decontaminate(
     docs: DataFrame, reference: DataFrame, n: int = 8,
-    materialize: str = "local",
 ) -> DataFrame:
     """Decontamination with a **Bloom-filter pre-filter**: the reference
     n-gram set is compressed to its set bit positions (≤ BLOOM_M rows —
@@ -861,10 +860,6 @@ def bloom_decontaminate(
     bloom_filter_agg is not SQL-exposed, and this form keeps the DuckDB
     twin expressible.
     """
-    if materialize not in ("local", "none"):
-        raise ValueError(
-            f"materialize must be local|none, got {materialize!r}"
-        )
     # Round-15 optimization (guide §3.3/§5): the K broadcast builds of
     # `bit_set` plus the exact-verify join each re-embedded the
     # reference n-gram subtree (tokenize + md5 per gram, 4 runs at
@@ -875,17 +870,14 @@ def bloom_decontaminate(
     # eager=False: both reference-side tables materialize inside the
     # first screen join's broadcast build instead of two separate
     # barrier jobs per invocation (round-16, guide §5).
-    _mat = (
-        (lambda df: df.localCheckpoint(eager=False))
-        if materialize == "local"
-        else (lambda df: df)
-    )
-    ref_grams = _mat(
+    ref_grams = (
         _token_ngram_hashes(reference, n).select("gh").distinct()
+        .localCheckpoint(eager=False)
     )
-    bit_set = _mat(
+    bit_set = (
         ref_grams.select(F.explode(F.array(*_bloom_positions(F.col("gh")))).alias("pos"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
     corpus_grams = _token_ngram_hashes(docs, n)
     screened = corpus_grams

@@ -28,7 +28,6 @@ def pagerank_integer(
     iterations: int = 3,
     join_impl: str = "auto",
     broadcast_max_nodes: int = 5_000_000,
-    materialize: str = "local",
 ) -> DataFrame:
     """Weighted PageRank over directed ``(src, dst, w)`` edges in exact
     integer micro-unit arithmetic, fixed ``iterations`` rounds.
@@ -74,10 +73,6 @@ def pagerank_integer(
         raise ValueError(
             f"join_impl must be auto|broadcast|shuffle, got {join_impl!r}"
         )
-    if materialize not in ("local", "none"):
-        raise ValueError(
-            f"materialize must be local|none, got {materialize!r}"
-        )
     # Iterative-algorithm lineage discipline (round-15 optimization):
     # every reference to `e` / `nodes` inside the unrolled loop embeds
     # its whole upstream subtree into the plan — for a derived edge
@@ -94,18 +89,13 @@ def pagerank_integer(
     # first action that needs it instead of paying a separate barrier
     # job per invariant per invocation — the r15 eager barriers cost
     # ~2x warm wall on this pair at sf0.1 (driver best-of-n).
-    # ``materialize="none"`` keeps the pure-lineage plan (A/B leg).
-    _mat = (
-        (lambda df: df.localCheckpoint(eager=False))
-        if materialize == "local"
-        else (lambda df: df)
-    )
-    edges = _mat(edges)
+    edges = edges.localCheckpoint(eager=False)
     deg = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("d"))
-    nodes = _mat(
+    nodes = (
         edges.select(F.col("src").alias("pk"))
         .union(edges.select(F.col("dst").alias("pk")))
         .distinct()
+        .localCheckpoint(eager=False)
     )
     if join_impl == "auto":
         join_impl = (
@@ -180,9 +170,7 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def label_propagation(
-    edges: DataFrame, iterations: int = 3, materialize: str = "local"
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Synchronous label-propagation community detection over directed
     weighted ``(src, dst, w)`` edges, fixed ``iterations`` rounds,
     fully deterministic: a node adopts the label with the greatest
@@ -209,26 +197,20 @@ def label_propagation(
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if materialize not in ("local", "none"):
-        raise ValueError(
-            f"materialize must be local|none, got {materialize!r}"
-        )
     # same loop-invariant materialization as pagerank_integer (see its
     # comment): edges + the initial label table are referenced by every
     # unrolled round; checkpointing them keeps the per-round plan
     # shallow. Values unchanged (integer votes, deterministic argmax).
     # eager=False: materialize inside the first action, not as a
     # separate per-invocation barrier job (round-16, guide §5).
-    if materialize == "local":
-        edges = edges.localCheckpoint(eager=False)
+    edges = edges.localCheckpoint(eager=False)
     labels = (
         edges.select(F.col("src").alias("pk"))
         .union(edges.select(F.col("dst").alias("pk")))
         .distinct()
         .select("pk", F.col("pk").alias("label"))
+        .localCheckpoint(eager=False)
     )
-    if materialize == "local":
-        labels = labels.localCheckpoint(eager=False)
     w_top = Window.partitionBy("dst").orderBy(
         F.desc("_wsum"), F.asc("label")
     )

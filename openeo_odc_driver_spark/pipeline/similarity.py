@@ -488,7 +488,6 @@ def ivf_pq_ann(
     n_centroids: int = 16,
     nprobe: int = 4,
     centroids: DataFrame | None = None,
-    argmin_impl: str = "agg",
 ) -> DataFrame:
     """IVF-PQ ANN (the FAISS IVFPQ shape, no-residual variant): the
     corpus is partitioned into inverted lists by nearest centroid AND
@@ -502,7 +501,7 @@ def ivf_pq_ann(
     (order-free integer arithmetic), rank ties → neighbor_id.
 
     Plan at scale (offline): ONE corpus pass assigns lists (broadcast
-    centroids + per-vector window), then encodes codes carrying the
+    centroids + per-vector max_by), then encodes codes carrying the
     list id — codes+list is the serving table (M small ints + one int
     per vector). (Query time): probes and the ADC LUT are
     queries×nprobe / queries×M×PQ_K rows — both broadcast; corpus codes
@@ -511,10 +510,6 @@ def ivf_pq_ann(
     shuffle is candidate-sized (× nprobe/n_centroids of the corpus),
     never corpus-sized.
     """
-    if argmin_impl not in ("agg", "window"):
-        raise ValueError(
-            f"argmin_impl must be agg|window, got {argmin_impl!r}"
-        )
     if centroids is None:
         centroids = embeddings.where(F.col("vec_id") < n_centroids).select(
             F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
@@ -531,7 +526,7 @@ def ivf_pq_ann(
     # exchanges carry n and n×M rows after map-side combine. Same floats
     # and tie-breaks (struct ordering: NULL sorts smallest ≡
     # desc-nulls-last; -cent_id ≡ cent_id asc / min dist ties → lowest
-    # code). ``argmin_impl="window"`` keeps the old plan (A/B leg).
+    # code).
     scored = embeddings.withColumn("e_norm", norm_expr("embedding")).crossJoin(
         F.broadcast(cents)
     ).withColumn(
@@ -539,31 +534,19 @@ def ivf_pq_ann(
         dot_expr("embedding", "c_emb")
         / F.nullif(F.col("e_norm") * F.col("c_norm"), F.lit(0.0)),
     )
-    if argmin_impl == "agg":
-        best = F.max_by(
-            F.struct(F.col("cent_id"), F.col("embedding")),
-            F.struct(F.col("_cs"), (-F.col("cent_id")).alias("_nc")),
+    best = F.max_by(
+        F.struct(F.col("cent_id"), F.col("embedding")),
+        F.struct(F.col("_cs"), (-F.col("cent_id")).alias("_nc")),
+    )
+    assigned = (
+        scored.groupBy("vec_id")
+        .agg(best.alias("_b"))
+        .select(
+            "vec_id",
+            F.col("_b.embedding").alias("embedding"),
+            F.col("_b.cent_id").alias("list_id"),
         )
-        assigned = (
-            scored.groupBy("vec_id")
-            .agg(best.alias("_b"))
-            .select(
-                "vec_id",
-                F.col("_b.embedding").alias("embedding"),
-                F.col("_b.cent_id").alias("list_id"),
-            )
-        )
-    else:
-        w1 = Window.partitionBy("vec_id").orderBy(
-            F.col("_cs").desc(), F.col("cent_id")
-        )
-        assigned = (
-            scored.withColumn("_rn", F.row_number().over(w1))
-            .where(F.col("_rn") == 1)
-            .select(
-                "vec_id", "embedding", F.col("cent_id").alias("list_id")
-            )
-        )
+    )
     cb = _pq_codebook(embeddings)
     sub = (
         assigned.crossJoin(F.broadcast(cb))
@@ -577,32 +560,21 @@ def ivf_pq_ann(
         )
         .withColumn("dist", _sub_l2_expr("embedding", "c_emb", "s"))
     )
-    if argmin_impl == "agg":
-        codes = (
-            sub.groupBy("vec_id", "s")
-            .agg(
-                F.min_by(
-                    F.struct(F.col("code"), F.col("list_id")),
-                    F.struct(F.col("dist"), F.col("code")),
-                ).alias("_b")
-            )
-            .select(
-                "vec_id",
-                F.col("_b.list_id").alias("list_id"),
-                F.col("s").cast("int").alias("s"),
-                F.col("_b.code").alias("code"),
-            )
+    codes = (
+        sub.groupBy("vec_id", "s")
+        .agg(
+            F.min_by(
+                F.struct(F.col("code"), F.col("list_id")),
+                F.struct(F.col("dist"), F.col("code")),
+            ).alias("_b")
         )
-    else:
-        w2 = Window.partitionBy("vec_id", "s").orderBy("dist", "code")
-        codes = (
-            sub.withColumn("_rn", F.row_number().over(w2))
-            .where(F.col("_rn") == 1)
-            .select(
-                "vec_id", "list_id", F.col("s").cast("int").alias("s"),
-                "code",
-            )
+        .select(
+            "vec_id",
+            F.col("_b.list_id").alias("list_id"),
+            F.col("s").cast("int").alias("s"),
+            F.col("_b.code").alias("code"),
         )
+    )
 
     # queries: nprobe nearest lists + the ADC lookup table, both broadcast
     q = queries.select(
@@ -889,13 +861,56 @@ def centroids_for_corpus(
     return max(min_centroids, min(max_centroids, need))
 
 
+def _semdedup_members(
+    embeddings: DataFrame,
+    n_centroids: int | None,
+    centroids: DataFrame | None,
+    assign_impl: str,
+) -> DataFrame:
+    """The centroid assignment of :func:`semantic_dedup_clusters`:
+    ``(cluster_id, vec_id, embedding, e_norm)`` per vector, before the
+    caller's checkpoint (its plan is the assignment-stage lineage)."""
+    if centroids is None:
+        if n_centroids is None:
+            n_centroids = centroids_for_corpus(embeddings.count())
+        k_known = n_centroids
+        centroids = embeddings.where(F.col("vec_id") < n_centroids).select(
+            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
+        )
+    else:
+        k_known = None
+    if assign_impl == "auto":
+        # the centroid table is k rows (it gets collected/broadcast
+        # either way), so counting it to pick the engine is free
+        k = k_known if k_known is not None else centroids.count()
+        assign_impl = "vectorized" if k >= VECTORIZE_K_THRESHOLD else "fold"
+    if assign_impl not in ("fold", "vectorized"):
+        raise ValueError(
+            f"assign_impl must be 'auto', 'fold' or 'vectorized', "
+            f"got {assign_impl!r}"
+        )
+    if assign_impl == "vectorized":
+        return assign_nearest_centroid_vectorized(embeddings, centroids)
+    # fold SEMANTICS, numpy execution (round-16, guide §4.2): the
+    # interpreted per-(row, centroid) fold dominated the small-k
+    # assignment (~1 s at 2000×16×64);
+    # assign_nearest_centroid_foldexact reproduces the fold's
+    # sequential-sum cosines, e_norm, NULL handling and argmax
+    # tie-break bit-for-bit (tests/test_round16_opt.py), so the
+    # DuckDB twins that re-state the fold floats cannot move.
+    return assign_nearest_centroid_foldexact(
+        embeddings,
+        centroids.select("cent_id", "c_emb").collect(),
+        with_norm=True,
+    )
+
+
 def semantic_dedup_clusters(
     embeddings: DataFrame,
     n_centroids: int | None = None,
     threshold: float = 0.95,
     centroids: DataFrame | None = None,
     assign_impl: str = "auto",
-    materialize: str = "local",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication census: partition vectors by
     nearest pseudo-centroid, then inside each cluster drop any vector
@@ -931,44 +946,6 @@ def semantic_dedup_clusters(
     its docstring, and fold ≡ vectorized is pinned on the fixture at
     20k×160 by tests/test_round6_ops.py).
     """
-    if centroids is None:
-        if n_centroids is None:
-            n_centroids = centroids_for_corpus(embeddings.count())
-        k_known = n_centroids
-        centroids = embeddings.where(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
-        )
-    else:
-        k_known = None
-    if assign_impl == "auto":
-        # the centroid table is k rows (it gets collected/broadcast
-        # either way), so counting it to pick the engine is free
-        k = k_known if k_known is not None else centroids.count()
-        assign_impl = "vectorized" if k >= VECTORIZE_K_THRESHOLD else "fold"
-    if assign_impl not in ("fold", "vectorized"):
-        raise ValueError(
-            f"assign_impl must be 'auto', 'fold' or 'vectorized', "
-            f"got {assign_impl!r}"
-        )
-    if assign_impl == "vectorized":
-        members = assign_nearest_centroid_vectorized(embeddings, centroids)
-    else:
-        # fold SEMANTICS, numpy execution (round-16, guide §4.2): the
-        # interpreted per-(row, centroid) fold dominated the small-k
-        # assignment (~1 s at 2000×16×64);
-        # assign_nearest_centroid_foldexact reproduces the fold's
-        # sequential-sum cosines, e_norm, NULL handling and argmax
-        # tie-break bit-for-bit (tests/test_round16_opt.py), so the
-        # DuckDB twins that re-state the fold floats cannot move.
-        members = assign_nearest_centroid_foldexact(
-            embeddings,
-            centroids.select("cent_id", "c_emb").collect(),
-            with_norm=True,
-        )
-    if materialize not in ("local", "none"):
-        raise ValueError(
-            f"materialize must be local|none, got {materialize!r}"
-        )
     # Round-15 optimization (guide §3.3/§5, the pagerank/kmeans
     # discipline): `members` feeds BOTH sides of the pairwise self-join
     # AND the final census join — three references, each re-running the
@@ -981,9 +958,9 @@ def semantic_dedup_clusters(
     # lazy form materializes inside the first action instead of a
     # separate per-invocation barrier job (the r15 eager barrier cost
     # semantic_dedup_auto ~1.6 s at sf0.1, driver best-of-n).
-    # ``materialize="none"`` keeps pure lineage (A/B leg).
-    if materialize == "local":
-        members = members.localCheckpoint(eager=False)
+    members = _semdedup_members(
+        embeddings, n_centroids, centroids, assign_impl
+    ).localCheckpoint(eager=False)
     a = members.select(
         "cluster_id", F.col("vec_id").alias("vid_a"),
         F.col("embedding").alias("emb_a"), F.col("e_norm").alias("norm_a"),
@@ -1023,7 +1000,6 @@ def kmeans_train(
     iters: int = 3,
     quant: int = 6,
     assign_impl: str = "auto",
-    materialize: str = "local",
 ) -> DataFrame:
     """Spherical k-means (Lloyd) centroid training — the real-centroid
     path that :func:`ivf_flat_ann` / :func:`semantic_dedup_clusters`
@@ -1062,10 +1038,6 @@ def kmeans_train(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    if materialize not in ("local", "none"):
-        raise ValueError(
-            f"materialize must be local|none, got {materialize!r}"
-        )
     # Iterative-algorithm lineage discipline (round-15 optimization,
     # same as pagerank_integer): the Lloyd loop references the corpus
     # iters times (plus the dim probe and the init collect), so a
@@ -1075,9 +1047,7 @@ def kmeans_train(
     # order-quantized), and each invocation still computes fresh from
     # the inputs. eager=False: materialize inside the first action (the
     # dim probe), not as a separate barrier job (round-16, guide §5).
-    # ``materialize="none"`` keeps pure lineage (A/B leg).
-    if materialize == "local":
-        embeddings = embeddings.localCheckpoint(eager=False)
+    embeddings = embeddings.localCheckpoint(eager=False)
     spark = embeddings.sparkSession
     dim = len(
         embeddings.where(F.col("vec_id") < 1).select("embedding").first()[0]

@@ -362,9 +362,7 @@ BIGRAM_LAMBDA = 0.7  # interpolation weight on the bigram ML estimate
 BIGRAM_UNI_W = 0.3
 
 
-def bigram_logprob(
-    docs: DataFrame, top_m: int = 50_000, model_build: str = "rollup"
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame, top_m: int = 50_000) -> DataFrame:
     """Interpolated-bigram LM quality proxy — the step up from
     :func:`unigram_logprob` toward the KenLM filter: each document
     scored by its mean token log-prob under the corpus's own bigram
@@ -391,15 +389,10 @@ def bigram_logprob(
     over the model; bigram pruning by TakeOrdered. Both models
     broadcast back — the corpus pair stream reaches the per-doc
     aggregate with zero shuffles. Counts are exact integers either
-    way, so the rollup cannot move a value. ``model_build="twopass"``
-    keeps the old two-corpus-pass model build (A/B leg).
+    way, so the rollup cannot move a value.
     """
     from pyspark.sql import Window
 
-    if model_build not in ("rollup", "twopass"):
-        raise ValueError(
-            f"model_build must be rollup|twopass, got {model_build!r}"
-        )
     staged = docs.select(
         "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("_toks")
     )
@@ -411,43 +404,27 @@ def bigram_logprob(
     stream = staged.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", F.col("p.a").alias("a"), F.col("p.b").alias("b")
     )
-    if model_build == "rollup":
-        # eager=False (round-16, ADVICE r15): constructing the
-        # DataFrame no longer runs a corpus-scale job at call time —
-        # the pair-count table materializes inside the first action
-        # and both model tables then read the persisted rows.
-        pair_counts = (
-            stream.groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("n_ab"))
-            .localCheckpoint(eager=False)
+    # eager=False (round-16, ADVICE r15): constructing the
+    # DataFrame no longer runs a corpus-scale job at call time —
+    # the pair-count table materializes inside the first action
+    # and both model tables then read the persisted rows.
+    pair_counts = (
+        stream.groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("n_ab"))
+        .localCheckpoint(eager=False)
+    )
+    uni = (
+        pair_counts.groupBy(F.col("b").alias("term"))
+        .agg(F.sum("n_ab").alias("n_term"))
+        .withColumn(
+            "n_total", F.sum("n_term").over(Window.partitionBy())
         )
-        uni = (
-            pair_counts.groupBy(F.col("b").alias("term"))
-            .agg(F.sum("n_ab").alias("n_term"))
-            .withColumn(
-                "n_total", F.sum("n_term").over(Window.partitionBy())
-            )
-        )
-        bi = (
-            pair_counts.where(F.col("a").isNotNull())
-            .orderBy(F.desc("n_ab"), "a", "b")
-            .limit(top_m)
-        )
-    else:
-        uni = (
-            stream.groupBy(F.col("b").alias("term"))
-            .agg(F.count(F.lit(1)).alias("n_term"))
-            .withColumn(
-                "n_total", F.sum("n_term").over(Window.partitionBy())
-            )
-        )
-        bi = (
-            stream.where(F.col("a").isNotNull())
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("n_ab"))
-            .orderBy(F.desc("n_ab"), "a", "b")
-            .limit(top_m)
-        )
+    )
+    bi = (
+        pair_counts.where(F.col("a").isNotNull())
+        .orderBy(F.desc("n_ab"), "a", "b")
+        .limit(top_m)
+    )
     lam = F.lit(float(BIGRAM_LAMBDA))
     p_uni = F.col("n_term").cast("double") / F.col("n_total").cast("double")
     p_bi = F.coalesce(

@@ -14,7 +14,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
 
 
 def get_spark(app_name: str = "openeo-odc-spark", cpus: str | None = None) -> SparkSession:

@@ -856,7 +856,7 @@ def load_gtiff_tiled(spark, path: str, bands=None, level=None):
         finally:
             os.close(fd)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark.sparkContext.defaultParallelism
     df = (
         spark.range(planes * per_plane)
         .repartition(min(planes * per_plane, cpus * 4))

@@ -20,96 +20,6 @@ sys.path.insert(0, "/root/repo")
 SF_DIR = "/root/testdata/sf0.1"
 
 
-def _pagerank(join_impl, materialize):
-    def build(spark):
-        from openeo_odc_driver_spark.pipeline.graph import (
-            copurchase_edges,
-            pagerank_integer,
-        )
-        from openeo_odc_driver_spark.registry_pipeline import load_table
-        from pyspark.sql import functions as F
-
-        li = load_table(spark, SF_DIR, "lineitem")
-        ranks = pagerank_integer(
-            copurchase_edges(li), iterations=3, join_impl=join_impl,
-            materialize=materialize,
-        )
-        return (
-            ranks.select(F.col("pk").alias("part_key"),
-                         F.col("r").alias("score"))
-            .orderBy(F.desc("score"), F.asc("part_key"))
-            .limit(20)
-        )
-
-    return build
-
-
-def _ivf_pq_trained(impl):
-    def build(spark):
-        from openeo_odc_driver_spark import registry_pipeline as rp
-        from openeo_odc_driver_spark.pipeline import similarity as psim
-
-        e = rp._embs(spark, SF_DIR)
-        return psim.ivf_pq_ann(
-            e, e.where("vec_id < 8"), k=5, nprobe=rp._IVFPQ_NPROBE,
-            centroids=psim.centroids_from_kmeans(
-                psim.kmeans_train(e, k=16, iters=3, materialize=impl[0])
-            ),
-            argmin_impl=impl[1],
-        )
-
-    return build
-
-
-def _semdedup(materialize):
-    def build(spark):
-        from openeo_odc_driver_spark import registry_pipeline as rp
-        from openeo_odc_driver_spark.pipeline import similarity as psim
-
-        return psim.semantic_dedup_clusters(
-            rp._embs(spark, SF_DIR), n_centroids=rp._SEM_NC,
-            threshold=rp._SEM_TAU, materialize=materialize,
-        )
-
-    return build
-
-
-def _bloom(materialize):
-    def build(spark):
-        from openeo_odc_driver_spark import registry_pipeline as rp
-        from openeo_odc_driver_spark.pipeline import dedup as pdedup
-        from pyspark.sql import functions as F
-
-        docs = rp._docs(spark, SF_DIR)
-        return pdedup.bloom_decontaminate(
-            docs.where(F.col("doc_id") % 10 != 0),
-            docs.where(F.col("doc_id") % 10 == 0),
-            n=rp._BLOOM_N, materialize=materialize,
-        )
-
-    return build
-
-
-def _lpa(materialize):
-    def build(spark):
-        from openeo_odc_driver_spark.pipeline.graph import (
-            copurchase_edges,
-            label_propagation,
-        )
-        from openeo_odc_driver_spark.registry_pipeline import load_table
-        from pyspark.sql import functions as F
-
-        li = load_table(spark, SF_DIR, "lineitem")
-        labels = label_propagation(
-            copurchase_edges(li), iterations=3, materialize=materialize
-        )
-        return labels.groupBy("label").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_members")
-        )
-
-    return build
-
-
 def _reduce_sweep(variant: str):
     def build(spark):
         from openeo_odc_driver_spark.operators.reducers import (
@@ -206,18 +116,6 @@ def _py_floor_q(qname, py_floor: bool):
     return build
 
 
-def _bigram(model_build):
-    def build(spark):
-        from openeo_odc_driver_spark import registry_pipeline as rp
-        from openeo_odc_driver_spark.pipeline import text as ptext
-
-        return ptext.bigram_logprob(
-            rp._docs(spark, SF_DIR), model_build=model_build
-        )
-
-    return build
-
-
 def _sweep_share(qname, enabled):
     def build(spark):
         from pyspark.sql import DataFrame
@@ -243,7 +141,6 @@ def _sweep_share(qname, enabled):
 
 
 PAIRS = {
-    "lpa": (_lpa("none"), _lpa("local")),
     "zonal_sweep_share": (
         _sweep_share("tiled_zonal_sweep", False),
         _sweep_share("tiled_zonal_sweep", True),
@@ -267,18 +164,9 @@ PAIRS = {
     "kernel_sweep": (_kernel_sweep(False), _kernel_sweep(True)),
     "kernel_single": (_kernel_single(False), _kernel_single(True)),
     "reduce_sweep_repart": (_reduce_sweep("plain"), _reduce_sweep("repart")),
-    "semdedup": (_semdedup("none"), _semdedup("local")),
-    "bloom": (_bloom("none"), _bloom("local")),
     "reduce_sweep_ckpt": (_reduce_sweep("plain"), _reduce_sweep("checkpoint")),
     "radar_tiled": (_radar_tiled(False), _radar_tiled(True)),
-    "pagerank_broadcast": (_pagerank("broadcast", "none"),
-                           _pagerank("broadcast", "local")),
-    "pagerank_shuffle": (_pagerank("shuffle", "none"),
-                         _pagerank("shuffle", "local")),
-    "ivf_pq_trained": (_ivf_pq_trained(("none", "window")),
-                       _ivf_pq_trained(("local", "agg"))),
     # --- round-15 continuation pairs ---
-    "bigram_rollup": (_bigram("twopass"), _bigram("rollup")),
     "floor_rcs": (_py_floor_q("tiled_resample_cube_spatial", False),
                   _py_floor_q("tiled_resample_cube_spatial", True)),
     "floor_rcs_bilinear": (

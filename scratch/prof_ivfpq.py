@@ -36,7 +36,7 @@ import pyspark.sql.functions as F
 dim = len(e.where(F.col("vec_id") < 1).select("embedding").first()[0])
 init = e.where(F.col("vec_id") < 16).orderBy("vec_id").select("embedding").collect()
 t2 = time.time()
-tr = psim.kmeans_train(e, k=16, iters=3, materialize="none")
+tr = psim.kmeans_train(e, k=16, iters=3)
 tr.collect()
 t3 = time.time()
 print(f"ckpt={t1-t0:.2f}s probe+init={t2-t1:.2f}s "

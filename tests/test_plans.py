@@ -204,14 +204,12 @@ def test_semantic_dedup_no_cartesian_pairing(spark):
     # the declared query materializes the centroid assignment
     # (localCheckpoint, round 15) so its plan truncates at Scan
     # ExistingRDD; the assignment-stage shape is pinned on the
-    # pure-lineage leg (materialize="none"), which shares every operator
-    # with the shipped path up to the checkpoint
+    # assignment DataFrame the query checkpoints
     from openeo_odc_driver_spark import registry_pipeline as RP
     from openeo_odc_driver_spark.pipeline import similarity as psim
 
-    lineage = psim.semantic_dedup_clusters(
-        RP._embs(spark, SF), n_centroids=RP._SEM_NC, threshold=RP._SEM_TAU,
-        materialize="none",
+    lineage = psim._semdedup_members(
+        RP._embs(spark, SF), RP._SEM_NC, None, "auto",
     )._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in lineage
     # nested-loop joins are only the 16-row centroid broadcasts
@@ -388,3 +386,32 @@ def test_pq_encode_single_exchange_min_by(spark):
     # runs eagerly at query-build time and the returned DataFrame is a
     # literal LocalTableScan — its argmax shape is covered by this
     # test's shared assign path and the exact-value oracle.)
+
+
+def test_gtiff_read_width_follows_session_not_env(spark, tmp_path, monkeypatch):
+    """The tiled GeoTIFF reader sizes its read stage from the session's
+    defaultParallelism: a stale SPARK_GRAFT_CPUS naming more cores than
+    the session has must not widen the stage past 4 × the session's
+    parallelism."""
+    from openeo_odc_driver_spark.core import tiled as t
+    from openeo_odc_driver_spark.operators.reducers import reduce_dimension
+    from openeo_odc_driver_spark.sinks.gtiff_tiled import (
+        load_gtiff_tiled,
+        save_gtiff_tiled,
+    )
+    from openeo_odc_driver_spark.sources.synthetic import (
+        CubeSpec,
+        synthetic_cube,
+    )
+
+    spec = CubeSpec(n_times=1, ny=48, nx=48)
+    cube = reduce_dimension(synthetic_cube(spark, spec), "time", "max")
+    # 3 bands × 3×3 tiles of 16 px: 27 tile reads, more than 4 × 4
+    path = save_gtiff_tiled(
+        t.to_tiled(cube, tile=16, n_y=48, n_x=48), str(tmp_path / "scene")
+    )
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    plan = load_gtiff_tiled(spark, path).df._jdf.queryExecution() \
+        .executedPlan().toString()
+    width = int(re.search(r"RoundRobinPartitioning\((\d+)\)", plan).group(1))
+    assert width <= 4 * spark.sparkContext.defaultParallelism

@@ -1,6 +1,8 @@
 """Contract-level invariants of the query registry (the full oracle
 comparison runs in scratch/verify_local.py / the driver gate)."""
 
+import pytest
+
 from openeo_odc_driver_spark.registry import ORACLE, QUERIES
 
 
@@ -15,15 +17,22 @@ def test_every_query_has_an_oracle():
     assert set(QUERIES) - set(ORACLE) == set()
 
 
-def test_spot_query_runs_and_matches_oracle(spark, sf_dir):
-    """One end-to-end oracle comparison inside pytest (cheap smoke of the
-    gate machinery itself)."""
+@pytest.mark.parametrize("name", ["reduce_time_sweep", "bigram_logprob"])
+def test_spot_query_runs_and_matches_oracle(spark, sf_dir, name):
+    """End-to-end oracle comparisons inside pytest (cheap smoke of the
+    gate machinery itself). The ``bigram_logprob`` oracle builds the
+    unigram and bigram models in two corpus passes, so it pins the
+    engine's one-pass rollup build."""
     import duckdb
     import pandas as pd
 
-    name = "reduce_time_sweep"
     sdf = QUERIES[name](spark, sf_dir).toPandas()
     con = duckdb.connect()
+    for t in ("region", "nation", "customer", "supplier", "part", "orders",
+              "lineitem", "events", "documents", "embeddings"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
     ddf = con.execute(ORACLE[name]).df()
     cols = sorted(sdf.columns)
     sdf = sdf[cols].sort_values(cols).reset_index(drop=True)

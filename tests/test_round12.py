@@ -182,7 +182,7 @@ def test_band_quantiles_stay_tiled(spark):
     pd.testing.assert_frame_equal(a, b, check_exact=True, check_dtype=False)
 
 
-# --- numpy twin of the band-expression compiler (round 12) -------------------
+# --- band-expression reducer, tiled vs long tier -----------------------------
 
 
 def _band_graph(pid_tree):
@@ -244,63 +244,26 @@ _TWIN_GRAPHS = {
 
 @pytest.mark.parametrize("name", sorted(_TWIN_GRAPHS))
 def test_band_expr_numpy_twin_matches_sql(spark, name):
-    """Every numpy-twin primitive against the zip_with/transform engine
-    it replaces, on the fixture's mixed data (negatives, zeros, ~4%
-    NULLs): exact frame equality. Pins the empirically-verified
-    non-ANSI corners — x/0 → NULL, ln/log(≤0) → NULL, clip(NULL) → lo,
-    mod via composed floor-divide."""
+    """The tiled band-expression reducer against the long-tier one it
+    twins, on the fixture's mixed data (negatives, zeros, ~4% NULLs):
+    exact frame equality. Pins the non-ANSI corners across tiers —
+    x/0 → NULL, clip(NULL) → lo, mod via composed floor-divide, and
+    constant operands."""
     import pandas as pd
 
     from openeo_odc_driver_spark.core.tiled import to_tiled, from_tiled
     from openeo_odc_driver_spark.plans.graph import (
+        _reduce_bands_expression,
         _reduce_bands_expression_tiled,
     )
     from openeo_odc_driver_spark.sources.synthetic import synthetic_cube
 
     child = _band_graph(_TWIN_GRAPHS[name])
-    tc = to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16)
-    a = from_tiled(
-        _reduce_bands_expression_tiled(tc, child, impl="numpy")
-    ).df
-    b = from_tiled(
-        _reduce_bands_expression_tiled(tc, child, impl="sql")
-    ).df
-    cols = sorted(a.columns)
-    pa = a.toPandas()[cols].sort_values(cols).reset_index(drop=True)
-    pb = b.toPandas()[cols].sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(pa, pb, check_exact=True)
-
-
-def test_band_expr_twin_unsupported_falls_back(spark):
-    """sqrt produces NaN VALUES from valid inputs (sqrt(−1)) — outside
-    the twin's NaN≡NULL subset — so auto dispatch at a scale tile must
-    fall back to the sql engine, never error, and stay exact."""
-    import pandas as pd
-
-    from openeo_odc_driver_spark.core.tiled import to_tiled, from_tiled
-    from openeo_odc_driver_spark.plans.graph import (
-        _TwinUnsupported,
-        _compile_expr_numpy,
-        _reduce_bands_expression_tiled,
-    )
-    from openeo_odc_driver_spark.sources.synthetic import synthetic_cube
-
-    # sqrt (NaN values from valid inputs) and ALL transcendentals
-    # (last-ulp libm/JVM divergence - measured on ln(1.25)) are out
-    for tree in (("sqrt", ("add", "B04", "B08")), ("ln", "B04"),
-                 ("log", ("absolute", "B08"), 10.0),
-                 ("arctan", ("exp", ("multiply", "B04", 0.25)))):
-        with pytest.raises(_TwinUnsupported):
-            _compile_expr_numpy(_band_graph(tree), {"data": lambda a: 0.0})
-    child = _band_graph(("sqrt", ("add", "B04", "B08")))
-    tc = to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16)
-    a = from_tiled(
-        _reduce_bands_expression_tiled(tc, child, impl="numpy")
-    ).df  # falls back internally
-    b = from_tiled(
-        _reduce_bands_expression_tiled(tc, child, impl="sql")
-    ).df
-    cols = sorted(a.columns)
+    cube = synthetic_cube(spark)
+    tc = to_tiled(cube, tile=8, n_y=16, n_x=16)
+    a = from_tiled(_reduce_bands_expression_tiled(tc, child)).df
+    b = _reduce_bands_expression(cube, child).df
+    cols = sorted(b.columns)
     pa = a.toPandas()[cols].sort_values(cols).reset_index(drop=True)
     pb = b.toPandas()[cols].sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(pa, pb, check_exact=True)

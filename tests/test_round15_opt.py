@@ -93,23 +93,6 @@ def test_numpy_fold_permutation_invariant(spark):
     assert a == b
 
 
-def test_bigram_rollup_matches_twopass(spark):
-    """The one-corpus-pass (a,b) rollup model build is count-exact
-    against the two-pass build (integer counts — no float path)."""
-    from openeo_odc_driver_spark.pipeline.text import bigram_logprob
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 3} common w{i % 5} tail common w{i % 3}")
-         for i in range(40)],
-        "doc_id long, text string",
-    )
-    roll = sorted(map(tuple, bigram_logprob(docs).collect()))
-    two = sorted(
-        map(tuple, bigram_logprob(docs, model_build="twopass").collect())
-    )
-    assert roll == two
-
-
 def test_canvas_assembly_floor_in_plan(spark):
     """The resample_cube_spatial fragment-canvas assembly pre-clusters
     at the pandas-stage width: a REPARTITION_BY_NUM hash partitioning

@@ -425,6 +425,7 @@ def test_assign_impl_auto_dispatches_on_k(spark):
 
     from openeo_odc_driver_spark.pipeline.similarity import (
         VECTORIZE_K_THRESHOLD,
+        _semdedup_members,
         kmeans_train,
         semantic_dedup_clusters,
     )
@@ -436,16 +437,11 @@ def test_assign_impl_auto_dispatches_on_k(spark):
         "vec_id long, embedding array<double>",
     )
 
-    # materialize="none" keeps the assignment lineage visible in the
-    # physical plan (the shipped default localCheckpoints it, truncating
-    # the plan at Scan ExistingRDD); dispatch is identical on both legs
-    small = semantic_dedup_clusters(
-        e, n_centroids=8, threshold=0.95, materialize="none"
-    )
-    large = semantic_dedup_clusters(
-        e, n_centroids=VECTORIZE_K_THRESHOLD, threshold=0.95,
-        materialize="none",
-    )
+    # the assignment DataFrame keeps its lineage visible in the physical
+    # plan (semantic_dedup_clusters localCheckpoints it, truncating the
+    # plan at Scan ExistingRDD)
+    small = _semdedup_members(e, 8, None, "auto")
+    large = _semdedup_members(e, VECTORIZE_K_THRESHOLD, None, "auto")
     # round 16: BOTH engines are Arrow-batched numpy stages now, but the
     # dispatch stays visible in the plan — the small-k fold semantics
     # execute via assign_nearest_centroid_foldexact, a SCALAR pandas_udf
