@@ -145,7 +145,7 @@ def tiled_layout_compare(spark) -> dict:
 
     from openeo_odc_driver_spark.core.tiled import (
         TiledCube,
-        reduce_time_mean_tiled,
+        reduce_time_tiled,
         to_tiled,
     )
     from openeo_odc_driver_spark.sources.synthetic import (
@@ -194,7 +194,7 @@ def tiled_layout_compare(spark) -> dict:
                 512,
                 512,
             )
-            reduce_time_mean_tiled(rb).df.write.format("noop").mode(
+            reduce_time_tiled(rb, "mean").df.write.format("noop").mode(
                 "overwrite"
             ).save()
 

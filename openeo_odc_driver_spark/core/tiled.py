@@ -135,14 +135,7 @@ def _raster_exchange_width(tc: "TiledCube") -> int | None:
         default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         default = 200
-    tiles = (-(-tc.n_y // tc.tile)) * (-(-tc.n_x // tc.tile))
-    bands = max(len(tc.schema.bands), 1) if BAND in tc.schema.dims else 1
-    if TIME in tc.schema.dims:
-        ax = tc.schema.time_axis
-        n_t = len(ax) if ax else _ASSUMED_TIME_STEPS
-    else:
-        n_t = 1
-    payload = tiles * bands * n_t * tc.tile * tc.tile * 8
+    payload = _tile_group_count(tc) * tc.tile * tc.tile * 8
     width = -(-payload // _EXCHANGE_TARGET_BYTES)
     if width <= default:
         return None
@@ -280,12 +273,74 @@ def _indices(cube: Cube):
     return x_idx, y_idx
 
 
+TILE_VECTORIZE_CELLS = 4096  # engine choice: sql fold below, numpy at/above
+
+
+def _numpy_engine(tile: int) -> bool:
+    """The engine choice of every dual-engine tiled operator, a function
+    of tile size only: Arrow-batched numpy stages at/above
+    ``TILE_VECTORIZE_CELLS`` cells per tile, SQL higher-order functions
+    below. Interpreted HOFs cost ~µs per element, so scale tiles want
+    numpy; at small tiles the Python boundary dominates instead
+    (PLANS.md "Item E": the numpy pack 1.6× faster at tile 256, the sql
+    pack 1.5× faster at tile 32, a tie at 64). Every gate fixture
+    (tile ≤ 8) plans on the sql engine its oracle row pins."""
+    return tile * tile >= TILE_VECTORIZE_CELLS
+
+
+# ---- the tile payload boundary ------------------------------------------
+# A tile's ``data`` crosses into pandas stages as a list of doubles with
+# NULL elements; inside a stage it is float64 with NaN. These helpers are
+# the only places that spell that encoding (NULL → NaN in, NaN → None
+# out), plus the key echo and output DDL every tile stage repeats.
+
+
+def _tile_stack(pdf) -> "np.ndarray":
+    """A group's ``data`` column as one (rows, cells) float64 array,
+    NULL elements as NaN. ``np.asarray(dtype=float64)`` maps None → NaN
+    in C — never walk the elements in Python (measured: the
+    comprehension cost more than the reduction)."""
+    import numpy as np
+
+    return np.array([np.asarray(d, dtype="float64") for d in pdf["data"]])
+
+
+def _tile_list(arr) -> list:
+    """Encode a float64 array as a ``data`` payload: flattened
+    row-major, NaN → None (the tiled NULL). Vectorized: the
+    per-element comprehension was ~1/3 of a repack's wall at 12.6 M px."""
+    import numpy as np
+
+    flat = np.asarray(arr, dtype="float64").reshape(-1)
+    obj = flat.astype(object)
+    obj[np.isnan(flat)] = None
+    return obj.tolist()
+
+
+def _group_keys(row, keys: Sequence[str]) -> dict:
+    """A group's key values echoed from one of its rows, with
+    ``tile_row``/``tile_col`` cast back to int."""
+    return {
+        k: int(row[k]) if k in ("tile_row", "tile_col") else row[k]
+        for k in keys
+    }
+
+
+def _ddl(schema, cols: Sequence[str], *fields: str) -> str:
+    """DDL field list for a pandas stage's output: ``cols`` typed as in
+    ``schema`` (a derived label like ``month`` keeps its own type),
+    then the literal ``fields``."""
+    return ", ".join([
+        *(f"{c} {schema[c].dataType.simpleString()}" for c in cols),
+        *fields,
+    ])
+
+
 def to_tiled(
     cube: Cube,
     tile: int = 256,
     n_y: int | None = None,
     n_x: int | None = None,
-    impl: str = "auto",
 ) -> TiledCube:
     """Long → tiled: one aggregation keyed by (band, time, tile_row,
     tile_col); each group assembles its dense row-major pixel array via
@@ -294,15 +349,13 @@ def to_tiled(
     them to keep the plan action-free — sources that know their grid
     statically should).
 
-    Two physical engines behind one semantics (the ``assign_impl``
-    dispatch pattern): ``"sql"`` — collect_list + array_sort + a
+    Two physical engines behind one semantics, chosen by tile size
+    (:func:`_numpy_engine`): sql — collect_list + array_sort + a
     gap-filling HOF fold, engine-exact and oracle-mode for small tiles
-    — and ``"numpy"`` — Arrow-batched ``applyInPandas`` position
-    scatter per tile group, the scale path (the round-12 probe
-    measured the interpreted per-element HOF at ~200k cells/s/32cores:
-    63 s to pack 12.6 M cells that the scatter does in ~2 s). ``auto``
-    picks numpy at/above ``TILE_VECTORIZE_CELLS`` (gate fixtures at
-    tile ≤ 8 stay on the sql path their oracles pin).
+    — and numpy — Arrow-batched ``applyInPandas`` position scatter per
+    tile group, the scale path (the round-12 probe measured the
+    interpreted per-element HOF at ~200k cells/s/32cores: 63 s to pack
+    12.6 M cells that the scatter does in ~2 s).
 
     **Tiled-boundary convention (round 13)**: the packed array's ONLY
     missing-value representation is NULL — a float NaN input VALUE
@@ -321,8 +374,6 @@ def to_tiled(
     exactly tile² candidate cells)."""
     if tile < 1:
         raise ValueError(f"tile must be >= 1, got {tile}")
-    if impl == "auto":
-        impl = "numpy" if tile * tile >= TILE_VECTORIZE_CELLS else "sql"
     x_idx, y_idx = _indices(cube)
     if n_y is None or n_x is None:
         ext = cube.df.agg(
@@ -367,11 +418,10 @@ def to_tiled(
         "raise_error('to_tiled: duplicate pixel keys within a tile "
         "(one row per (band, time, y, x) required)') END)[0]"
     )
-    if impl == "numpy":
+    if _numpy_engine(tile):
         import numpy as np
         import pandas as pd
 
-        T2n = tile * tile
         gkeys = [*keys, "tile_row", "tile_col"]
 
         def scatter(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -381,24 +431,12 @@ def to_tiled(
                     "to_tiled: duplicate pixel keys within a tile "
                     "(one row per (band, time, y, x) required)"
                 )
-            arr = np.full(T2n, np.nan)
+            arr = np.full(T2, np.nan)
             arr[pos] = pdf[VALUE].to_numpy(dtype="float64")
-            obj = arr.astype(object)
-            obj[np.isnan(arr)] = None
-            row0 = pdf.iloc[0]
-            rec = {
-                c: [int(row0[c]) if c in ("tile_row", "tile_col")
-                    else row0[c]]
-                for c in gkeys
-            }
-            rec["data"] = [obj.tolist()]
-            return pd.DataFrame(rec)
+            return pd.DataFrame([
+                {**_group_keys(pdf.iloc[0], gkeys), "data": _tile_list(arr)}
+            ])
 
-        out_fields = ", ".join(
-            f"{c} {cube.df.schema[c].dataType.simpleString()}"
-            if c in keys else f"{c} int"
-            for c in gkeys
-        )
         # round-15 continuation (guide §2.2/§4): the numpy pack is
         # per-GROUP Python work invisible to byte-based AQE
         # coalescing; pre-cluster at the pandas-stage width. The
@@ -409,7 +447,7 @@ def to_tiled(
         df = _widen_py(_w_handle, staged, gkeys).groupBy(
             *gkeys
         ).applyInPandas(
-            scatter, f"{out_fields}, data array<double>"
+            scatter, _ddl(staged.schema, gkeys, "data array<double>")
         )
         return TiledCube(df, cube.schema, tile, n_y, n_x)
     # sql pack branch: NO parallelism floor — measured negative, see
@@ -463,38 +501,6 @@ def from_tiled(tc: TiledCube) -> Cube:
     return Cube(df, tc.schema)
 
 
-def reduce_time_mean_tiled(tc: TiledCube, impl: str = "auto") -> TiledCube:
-    """Mean over the time axis natively on tiles — see
-    :func:`reduce_time_tiled` (this is its ``reducer="mean"`` form,
-    kept as the named op the gate row pins).
-
-    Two physical engines behind the same semantics (the
-    ``assign_impl`` dispatch pattern):
-
-    - ``"sql"`` — a time-sorted element-wise sum+count fold in pure SQL
-      higher-order functions. Engine-exact (the oracle-mode gate row
-      pins it at tile=8), but interpreted lambdas cost ~µs per element
-      — fine for small tiles, wrong for 256² arrays (measured: the SQL
-      fold LOST to the long-format codegen avg, 5.8 s vs 3.6 s on
-      9.4 M px).
-    - ``"numpy"`` — Arrow-batched ``applyInPandas`` per tile group:
-      stack the group's arrays, one vectorized nansum/count. The scale
-      path. Same ulp caveat as `assign_nearest_centroid_vectorized`
-      (numpy's pairwise sums vs sequential folds); exact on dyadic
-      inputs, pinned ≡ sql on the fixture by pytest.
-    - ``"auto"`` (default): numpy at/above ``TILE_VECTORIZE_CELLS``
-      cells per tile, sql below.
-
-    Scale shape vs the long reducer: the same single exchange, but
-    keyed by tile (tile²× fewer, perfectly uniform keys) and carrying
-    packed arrays instead of per-pixel rows; group state is bounded by
-    n_times · tile² doubles (24×256² ≈ 12 MB — sized so a tile-group
-    fits comfortably in an executor task)."""
-    return reduce_time_tiled(tc, "mean", impl=impl)
-
-
-TILE_VECTORIZE_CELLS = 4096  # auto dispatch: sql fold below, numpy at/above
-
 # per-reducer pieces of the sorted element-wise SQL fold: the merge
 # lambda (null elements skipped) and the finisher combining the value
 # fold `s` with the non-null count fold `c` (all-NULL positions → NULL)
@@ -521,7 +527,7 @@ _TILE_SQL_REDUCERS = {
 
 
 def aggregate_temporal_period_tiled(
-    tc: TiledCube, period: str, reducer: str = "mean", impl: str = "auto"
+    tc: TiledCube, period: str, reducer: str = "mean"
 ) -> TiledCube:
     """Calendar-period resample natively on tiles (the long
     ``aggregate_temporal_period`` on the packed layout): date_trunc
@@ -532,7 +538,7 @@ def aggregate_temporal_period_tiled(
     the per-group state, so the bound on group memory only improves.
 
     Engines and NULL semantics are exactly :func:`reduce_time_tiled`'s
-    (sql oracle mode / numpy scale path under the auto dispatch);
+    (sql oracle mode / numpy scale path, by tile size);
     period names and time-metadata handling mirror the long operator
     (stale extent dropped; a known input axis maps to its truncation
     image)."""
@@ -560,9 +566,7 @@ def aggregate_temporal_period_tiled(
             relabeled, [*band, TIME, "tile_row", "tile_col"]
         )
     else:
-        out = _fold_time_groups(
-            relabeled, reducer, impl, extra_keys=[TIME]
-        )
+        out = _fold_time_groups(relabeled, reducer, extra_keys=[TIME])
     schema = tc.schema.with_time_extent(None)
     if tc.schema.time_axis is not None:
         schema = schema.with_time_axis(
@@ -572,7 +576,7 @@ def aggregate_temporal_period_tiled(
 
 
 def climatological_normal_tiled(
-    tc: TiledCube, frequency: str = "monthly", impl: str = "auto"
+    tc: TiledCube, frequency: str = "monthly"
 ) -> TiledCube:
     """The long ``climatological_normal`` (reference
     ``openeo_odc_driver.py:1354-1373``: groupby('time.month') mean)
@@ -594,37 +598,33 @@ def climatological_normal_tiled(
         tc.schema, tc.tile, tc.n_y, tc.n_x,
     )
     out = _fold_groups(
-        labeled, "mean", impl,
+        labeled, "mean",
         keys=[*band, "month", "tile_row", "tile_col"],
         sort_field=TIME,
     )
     return TiledCube(out, tc.schema.drop(TIME), tc.tile, tc.n_y, tc.n_x)
 
 
-def reduce_time_tiled(
-    tc: TiledCube, reducer: str = "mean", impl: str = "auto"
-) -> TiledCube:
+def reduce_time_tiled(tc: TiledCube, reducer: str = "mean") -> TiledCube:
     """Reduce the time axis natively on tiles — mean / sum / min / max
-    with the long reducer's NULL semantics (NULL elements skipped,
-    all-NULL positions stay NULL).
+    / sd / variance with the long reducer's NULL semantics (NULL
+    elements skipped, all-NULL positions stay NULL).
 
-    Two physical engines behind the same semantics (the
-    ``assign_impl`` dispatch pattern):
+    Two physical engines behind the same semantics, chosen by tile size
+    (:func:`_numpy_engine`):
 
-    - ``"sql"`` — a time-sorted element-wise fold in pure SQL
-      higher-order functions. Engine-exact (the oracle-mode gate rows
-      pin it at tile=8), but interpreted lambdas cost ~µs per element
-      — fine for small tiles, wrong for 256² arrays (measured: the SQL
-      fold LOST to the long-format codegen avg, 5.8 s vs 3.6 s on
-      9.4 M px).
-    - ``"numpy"`` — Arrow-batched ``applyInPandas`` per tile group:
-      stack the group's arrays, one vectorized nan-reduction. The
-      scale path. Same ulp caveat as
+    - sql (below ``TILE_VECTORIZE_CELLS`` cells per tile) — a
+      time-sorted element-wise fold in pure SQL higher-order functions.
+      Engine-exact (the oracle-mode gate rows run it at tile=8), but
+      interpreted lambdas cost ~µs per element — fine for small tiles,
+      wrong for 256² arrays (measured: the SQL fold LOST to the
+      long-format codegen avg, 5.8 s vs 3.6 s on 9.4 M px).
+    - numpy (at/above) — Arrow-batched ``applyInPandas`` per tile
+      group: stack the group's arrays, one vectorized nan-reduction.
+      The scale path. Same ulp caveat as
       `assign_nearest_centroid_vectorized` for mean/sum (numpy's
       pairwise sums vs sequential folds — exact on dyadic inputs,
       irrelevant for min/max); pinned ≡ sql on the fixture by pytest.
-    - ``"auto"`` (default): numpy at/above ``TILE_VECTORIZE_CELLS``
-      cells per tile, sql below.
 
     Scale shape vs the long reducer: the same single exchange, but
     keyed by tile (tile²× fewer, perfectly uniform keys) and carrying
@@ -633,15 +633,13 @@ def reduce_time_tiled(
     fits comfortably in an executor task)."""
     if TIME not in tc.schema.dims:
         raise ValueError("reduce_time_tiled needs a time dimension")
-    df = _fold_time_groups(tc, reducer, impl, extra_keys=[])
+    df = _fold_time_groups(tc, reducer, extra_keys=[])
     return TiledCube(
         df, tc.schema.drop(TIME), tc.tile, tc.n_y, tc.n_x
     )
 
 
-def reduce_bands_tiled(
-    tc: TiledCube, reducer: str = "mean", impl: str = "auto"
-) -> TiledCube:
+def reduce_bands_tiled(tc: TiledCube, reducer: str = "mean") -> TiledCube:
     """Reduce the BAND axis natively on tiles — the other long-format
     reducer dimension (``reduce_dimension(dim='bands')``): the same
     element-wise fold as :func:`reduce_time_tiled`, grouped by
@@ -651,8 +649,7 @@ def reduce_bands_tiled(
         raise ValueError("reduce_bands_tiled needs a band dimension")
     keys = [d for d in (TIME,) if d in tc.schema.dims]
     df = _fold_groups(
-        tc, reducer, impl, keys=[*keys, "tile_row", "tile_col"],
-        sort_field=BAND,
+        tc, reducer, keys=[*keys, "tile_row", "tile_col"], sort_field=BAND,
     )
     return TiledCube(
         df, tc.schema.drop(BAND), tc.tile, tc.n_y, tc.n_x
@@ -698,32 +695,21 @@ def quantiles_tiled(
     gkeys = [*keys, "tile_row", "tile_col"]
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        stack = np.array(
-            [np.asarray(d, dtype="float64") for d in pdf["data"]]
-        )
+        stack = _tile_stack(pdf)
         all_nan = np.isnan(stack).all(axis=0)
         safe = np.where(all_nan[None, :], 0.0, stack)
         qs = np.nanpercentile(
             safe, [p * 100.0 for p in probs], axis=0
         )  # (len(probs), T2)
-        row0 = pdf.iloc[0]
-        base = {
-            k: row0[k] if k == BAND else
-            (int(row0[k]) if k in ("tile_row", "tile_col") else row0[k])
-            for k in gkeys
-        }
-        rows = []
-        for i, p in enumerate(probs):
-            arr = qs[i].astype(object)
-            arr[all_nan] = None
-            rows.append({**base, "prob": p, "data": arr.tolist()})
-        return pd.DataFrame(rows)
+        qs[:, all_nan] = np.nan
+        base = _group_keys(pdf.iloc[0], gkeys)
+        return pd.DataFrame([
+            {**base, "prob": p, "data": _tile_list(qs[i])}
+            for i, p in enumerate(probs)
+        ])
 
-    fields = ", ".join(
-        f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in gkeys
-    )
     df = _widen_py(tc, tc.df, gkeys).groupBy(*gkeys).applyInPandas(
-        fold, f"{fields}, prob double, data array<double>"
+        fold, _ddl(tc.df.schema, gkeys, "prob double", "data array<double>")
     )
     return TiledCube(df, tc.schema.drop(dim), tc.tile, tc.n_y, tc.n_x)
 
@@ -752,9 +738,7 @@ def array_interpolate_linear_tiled(tc: TiledCube) -> TiledCube:
 
     def fill(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(TIME).reset_index(drop=True)
-        stack = np.array(
-            [np.asarray(d, dtype="float64") for d in pdf["data"]]
-        )
+        stack = _tile_stack(pdf)
         nt = stack.shape[0]
         # epoch micros as double — the long plan's coordinate
         coord = (
@@ -779,23 +763,15 @@ def array_interpolate_linear_tiled(tc: TiledCube) -> TiledCube:
         with np.errstate(invalid="ignore", divide="ignore"):
             interp = pv + (coord[:, None] - pc) / (ncd - pc) * (nv - pv)
         out = np.where(fillable, interp, stack)
-        recs = []
-        row0 = pdf.iloc[0]
-        base = {
-            k: row0[k] if k == BAND else int(row0[k]) for k in gkeys
-        }
-        for i in range(nt):
-            arr = out[i].astype(object)
-            arr[np.isnan(out[i])] = None
-            recs.append({**base, TIME: pdf[TIME].iloc[i],
-                         "data": arr.tolist()})
-        return pd.DataFrame(recs)
+        base = _group_keys(pdf.iloc[0], gkeys)
+        return pd.DataFrame([
+            {**base, TIME: pdf[TIME].iloc[i], "data": _tile_list(out[i])}
+            for i in range(nt)
+        ])
 
-    fields = ", ".join(
-        f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in gkeys
-    )
     df = _widen_py(tc, tc.df, gkeys).groupBy(*gkeys).applyInPandas(
-        fill, f"{fields}, {TIME} timestamp, data array<double>"
+        fill, _ddl(tc.df.schema, gkeys, f"{TIME} timestamp",
+                   "data array<double>")
     )
     # column order back to the canonical (keys, time, tiles, data)
     df = df.select(*keys, TIME, "tile_row", "tile_col", "data")
@@ -806,9 +782,7 @@ _SPATIAL_REDUCERS = ("mean", "sum", "min", "max", "count", "sd", "variance")
 _SPATIAL_MULTISET = ("median", "product")
 
 
-def reduce_spatial_tiled(
-    tc: TiledCube, dim: str, reducer: str, impl: str = "auto"
-) -> Cube:
+def reduce_spatial_tiled(tc: TiledCube, dim: str, reducer: str) -> Cube:
     """Reduce a SPATIAL axis (x or y) natively on tiles — the last
     reducer dimension without a tile path (reference reduces over x/y
     too, ``openeo_odc_driver.py:728-733``; long twin
@@ -830,10 +804,9 @@ def reduce_spatial_tiled(
     hash-aggregate — the fold here is per-tile arithmetic instead of a
     T²-row hash probe per tile.
 
-    Engines (the :func:`reduce_time_tiled` dispatch pattern): ``"sql"``
-    — HOF folds, the pinned oracle mode; ``"numpy"`` — vectorized axis
-    reductions per tile, the scale path; ``"auto"`` by
-    ``TILE_VECTORIZE_CELLS``. NULL semantics match the long reducers
+    Engines (by tile size, :func:`_numpy_engine`): sql — HOF folds,
+    the oracle mode; numpy — vectorized axis reductions per tile, the
+    scale path. NULL semantics match the long reducers
     (NULLs skipped; empty lines → NULL value rows, the long groupBy's
     behavior on all-NULL lines of a dense cube).
 
@@ -854,14 +827,11 @@ def reduce_spatial_tiled(
     if g is None:
         raise ValueError("reduce_spatial_tiled needs a GridSpec")
     T = tc.tile
-    T2 = T * T
     keys = tc.key_dims
-    if impl == "auto":
-        impl = "numpy" if T2 >= TILE_VECTORIZE_CELLS else "sql"
     if reducer in _SPATIAL_MULTISET:
-        return _reduce_spatial_multiset(tc, dim, reducer, impl)
+        return _reduce_spatial_multiset(tc, dim, reducer)
 
-    if impl == "sql":
+    if not _numpy_engine(T):
         # per-line element gather: reducing x folds each ROW slice;
         # reducing y gathers each COLUMN by strided indexing
         line_vals = (
@@ -890,19 +860,16 @@ def reduce_spatial_tiled(
             F.col("_p.c").alias("_c"),
             F.col("_p.mn").alias("_mn"), F.col("_p.mx").alias("_mx"),
         )
-    elif impl == "numpy":
+    else:
         import numpy as np
         import pandas as pd
         from typing import Iterator
 
         axis = 1 if dim == X else 0
-        key_fields = ", ".join(
-            f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
-        )
-        out_schema = (
-            (f"{key_fields}, " if keys else "")
-            + "tile_row int, tile_col int, _lp int, _s double, _ss double, "
-            "_c bigint, _mn double, _mx double"
+        out_schema = _ddl(
+            tc.df.schema, keys,
+            "tile_row int, tile_col int, _lp int, _s double, _ss double, "
+            "_c bigint, _mn double, _mx double",
         )
 
         def partials(
@@ -926,9 +893,7 @@ def reduce_spatial_tiled(
                     )
                     mn = np.nanmin(safe, axis=axis)
                     mx = np.nanmax(safe, axis=axis)
-                    base = {k: rec[k] for k in keys}
-                    base["tile_row"] = int(rec["tile_row"])
-                    base["tile_col"] = int(rec["tile_col"])
+                    base = _group_keys(rec, [*keys, "tile_row", "tile_col"])
                     for lp in range(T):
                         out.append({
                             **base, "_lp": lp,
@@ -940,10 +905,6 @@ def reduce_spatial_tiled(
                 yield pd.DataFrame(out)
 
         lines = tc.df.mapInPandas(partials, out_schema)
-    else:
-        raise ValueError(
-            f"impl must be 'auto', 'sql' or 'numpy', got {impl!r}"
-        )
 
     if dim == X:
         idx = F.col("tile_row").cast("long") * T + F.col("_lp")
@@ -983,7 +944,7 @@ def _partial_finish(reducer: str):
     }[reducer]
 
 
-def _spatial_line_values(tc: TiledCube, dim: str, impl: str):
+def _spatial_line_values(tc: TiledCube, dim: str):
     """Stage 1 of the spatial-axis multiset path: per-line non-NULL
     value arrays out of each tile, rows
     ``(*keys, tile_row, tile_col, _lp, _vals)`` — sql HOF filter
@@ -991,7 +952,7 @@ def _spatial_line_values(tc: TiledCube, dim: str, impl: str):
     line-keyed exchange below per-pixel keyed rows."""
     T = tc.tile
     keys = tc.key_dims
-    if impl == "sql":
+    if not _numpy_engine(T):
         line_vals = (
             f"slice(data, r * {T} + 1, {T})" if dim == X
             else f"transform(sequence(0, {T - 1}), q -> data[q * {T} + r])"
@@ -1004,47 +965,40 @@ def _spatial_line_values(tc: TiledCube, dim: str, impl: str):
             *keys, "tile_row", "tile_col",
             F.posexplode(F.expr(vals)).alias("_lp", "_vals"),
         )
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
-        from typing import Iterator
+    import numpy as np
+    import pandas as pd
+    from typing import Iterator
 
-        axis = 1 if dim == X else 0
-        key_fields = ", ".join(
-            f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
-        )
-        out_schema = (
-            (f"{key_fields}, " if keys else "")
-            + "tile_row int, tile_col int, _lp int, _vals array<double>"
-        )
+    axis = 1 if dim == X else 0
+    out_schema = _ddl(
+        tc.df.schema, keys,
+        "tile_row int, tile_col int, _lp int, _vals array<double>",
+    )
 
-        def emit(
-            batches: "Iterator[pd.DataFrame]",
-        ) -> "Iterator[pd.DataFrame]":
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out = []
-                for row in pdf.itertuples(index=False):
-                    rec = row._asdict()
-                    a = np.asarray(
-                        rec["data"], dtype="float64"
-                    ).reshape(T, T)
-                    if axis == 0:
-                        a = a.T
-                    base = {k: rec[k] for k in keys}
-                    base["tile_row"] = int(rec["tile_row"])
-                    base["tile_col"] = int(rec["tile_col"])
-                    for lp in range(T):
-                        line = a[lp]
-                        out.append({
-                            **base, "_lp": lp,
-                            "_vals": line[~np.isnan(line)].tolist(),
-                        })
-                yield pd.DataFrame(out)
+    def emit(
+        batches: "Iterator[pd.DataFrame]",
+    ) -> "Iterator[pd.DataFrame]":
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = []
+            for row in pdf.itertuples(index=False):
+                rec = row._asdict()
+                a = np.asarray(
+                    rec["data"], dtype="float64"
+                ).reshape(T, T)
+                if axis == 0:
+                    a = a.T
+                base = _group_keys(rec, [*keys, "tile_row", "tile_col"])
+                for lp in range(T):
+                    line = a[lp]
+                    out.append({
+                        **base, "_lp": lp,
+                        "_vals": line[~np.isnan(line)].tolist(),
+                    })
+            yield pd.DataFrame(out)
 
-        return tc.df.mapInPandas(emit, out_schema)
-    raise ValueError(f"impl must be 'auto', 'sql' or 'numpy', got {impl!r}")
+    return tc.df.mapInPandas(emit, out_schema)
 
 
 def quantiles_spatial_tiled(
@@ -1052,7 +1006,6 @@ def quantiles_spatial_tiled(
     dim: str,
     probabilities: "Sequence[float] | None" = None,
     q: int | None = None,
-    impl: str = "auto",
 ) -> Cube:
     """openEO ``quantiles`` over a SPATIAL axis natively on tiles — the
     x/y twin of :func:`quantiles_tiled` (long:
@@ -1074,9 +1027,7 @@ def quantiles_spatial_tiled(
         raise ValueError("quantiles_spatial_tiled needs a GridSpec")
     T = tc.tile
     keys = tc.key_dims
-    if impl == "auto":
-        impl = "numpy" if T * T >= TILE_VECTORIZE_CELLS else "sql"
-    lines = _spatial_line_values(tc, dim, impl)
+    lines = _spatial_line_values(tc, dim)
     if dim == X:
         idx = F.col("tile_row").cast("long") * T + F.col("_lp")
         kept, n_kept = Y, tc.n_y
@@ -1101,9 +1052,7 @@ def quantiles_spatial_tiled(
     return Cube(out, tc.schema.drop(dim))
 
 
-def _reduce_spatial_multiset(
-    tc: TiledCube, dim: str, reducer: str, impl: str
-) -> Cube:
+def _reduce_spatial_multiset(tc: TiledCube, dim: str, reducer: str) -> Cube:
     """median/product over a spatial axis (see
     :func:`reduce_spatial_tiled`): per-line non-NULL value arrays out
     of each tile (sql HOF filter or numpy), one line-keyed exchange of
@@ -1114,7 +1063,7 @@ def _reduce_spatial_multiset(
     g = tc.schema.grid
     T = tc.tile
     keys = tc.key_dims
-    lines = _spatial_line_values(tc, dim, impl)
+    lines = _spatial_line_values(tc, dim)
     if dim == X:
         idx = F.col("tile_row").cast("long") * T + F.col("_lp")
         kept, n_kept = Y, tc.n_y
@@ -1138,7 +1087,7 @@ def _reduce_spatial_multiset(
 
 
 def _fold_time_groups(
-    tc: TiledCube, reducer: str, impl: str, extra_keys: list[str]
+    tc: TiledCube, reducer: str, extra_keys: list[str]
 ) -> DataFrame:
     """Shared engine of reduce_time_tiled / aggregate_temporal_period_
     tiled: the element-wise fold over each (band, *extra_keys, tile)
@@ -1146,15 +1095,14 @@ def _fold_time_groups(
     reducer's output) group on the remaining keys."""
     band = [BAND] if BAND in tc.schema.dims else []
     return _fold_groups(
-        tc, reducer, impl,
+        tc, reducer,
         keys=[*band, *extra_keys, "tile_row", "tile_col"],
         sort_field=TIME,
     )
 
 
 def _fold_groups(
-    tc: TiledCube, reducer: str, impl: str, keys: list[str],
-    sort_field: str,
+    tc: TiledCube, reducer: str, keys: list[str], sort_field: str,
 ) -> DataFrame:
     """The element-wise fold over each key-group's arrays (sql or
     numpy), collapsing whatever dimension is NOT in ``keys``;
@@ -1167,15 +1115,9 @@ def _fold_groups(
             f"got {reducer!r} (median has its own op: "
             "reduce_time_median_tiled)"
         )
-    T2 = tc.tile * tc.tile
-    if impl == "auto":
-        impl = "numpy" if T2 >= TILE_VECTORIZE_CELLS else "sql"
-    if impl == "numpy":
+    if _numpy_engine(tc.tile):
         return _reduce_time_numpy(tc, reducer, keys, sort_field)
-    if impl != "sql":
-        raise ValueError(
-            f"impl must be 'auto', 'sql' or 'numpy', got {impl!r}"
-        )
+    T2 = tc.tile * tc.tile
     if reducer in ("sd", "variance"):
         # exact-sums sample sd/variance per position (the long tier's
         # reducers.sd_expr arithmetic): three element-wise folds
@@ -1245,7 +1187,6 @@ def _reduce_time_numpy(
         "sd": None,   # exact sums below (reducers.sd_expr arithmetic)
         "variance": None,
     }[reducer]
-    int_keys = ("tile_row", "tile_col")
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         # pin the stack order by the collapsed axis: the sql fold's
@@ -1254,13 +1195,7 @@ def _reduce_time_numpy(
         # without the sort, a partitioning change upstream could move a
         # sum result (round-15 continuation; enables _widened's
         # parallelism floor unconditionally)
-        pdf = pdf.sort_values(sort_field)
-        # np.asarray(dtype=float64) maps None -> nan in C — never walk
-        # the 65k elements in Python (measured: the comprehension cost
-        # more than the reduction)
-        stack = np.array(
-            [np.asarray(d, dtype="float64") for d in pdf["data"]]
-        )
+        stack = _tile_stack(pdf.sort_values(sort_field))
         all_nan = np.isnan(stack).all(axis=0)
         if reducer in ("sd", "variance"):
             c = (~np.isnan(stack)).sum(axis=0)
@@ -1284,23 +1219,12 @@ def _reduce_time_numpy(
             safe = np.where(all_nan[None, :], 0.0, stack)
             out = nanop(safe, axis=0)
             out = np.where(all_nan, np.nan, out)
-        row0 = pdf.iloc[0]
-        rec = {
-            k: [int(row0[k]) if k in int_keys else row0[k]] for k in keys
-        }
-        obj = out.astype(object)
-        obj[np.isnan(out)] = None  # vectorized NaN->None (r13 profile)
-        rec["data"] = [obj.tolist()]
-        return pd.DataFrame(rec)
+        return pd.DataFrame([
+            {**_group_keys(pdf.iloc[0], keys), "data": _tile_list(out)}
+        ])
 
-    # key types come from the input schema itself (a derived label like
-    # climatological_normal_tiled's int `month` must not default to
-    # timestamp)
-    fields = ", ".join(
-        f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
-    )
     return _widen_py(tc, tc.df, keys).groupBy(*keys).applyInPandas(
-        fold, f"{fields}, data array<double>"
+        fold, _ddl(tc.df.schema, keys, "data array<double>")
     )
 
 
@@ -1824,31 +1748,19 @@ def _median_groups(tc: TiledCube, keys: list[str]) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    int_keys = ("tile_row", "tile_col")
-
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        stack = np.array(
-            [np.asarray(d, dtype="float64") for d in pdf["data"]]
-        )
+        stack = _tile_stack(pdf)
         all_nan = np.isnan(stack).all(axis=0)
         # nanmedian warns on all-nan slices; mask them out first
         safe = np.where(all_nan[None, :], 0.0, stack)
         med = np.nanmedian(safe, axis=0)
         med[all_nan] = np.nan
-        row0 = pdf.iloc[0]
-        rec = {
-            k: [int(row0[k]) if k in int_keys else row0[k]] for k in keys
-        }
-        obj = med.astype(object)
-        obj[np.isnan(med)] = None  # vectorized NaN->None (r13 profile)
-        rec["data"] = [obj.tolist()]
-        return pd.DataFrame(rec)
+        return pd.DataFrame([
+            {**_group_keys(pdf.iloc[0], keys), "data": _tile_list(med)}
+        ])
 
-    fields = ", ".join(
-        f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
-    )
     return _widen_py(tc, tc.df, keys).groupBy(*keys).applyInPandas(
-        fold, f"{fields}, data array<double>"
+        fold, _ddl(tc.df.schema, keys, "data array<double>")
     )
 
 
@@ -2010,10 +1922,7 @@ def apply_kernel_tiled_layout(
         out = {k: [row0[k]] for k in keys}
         out["tile_row"] = [int(row0["_tr"])]
         out["tile_col"] = [int(row0["_tc"])]
-        flat = acc.reshape(-1)
-        obj = flat.astype(object)
-        obj[np.isnan(flat)] = None  # vectorized NaN->None (r13 profile)
-        out["data"] = [obj.tolist()]
+        out["data"] = [_tile_list(acc)]
         return pd.DataFrame(out)
 
     df = _widen_py(tc, pieces, [*keys, "_tr", "_tc"]) \
@@ -2219,12 +2128,8 @@ def radar_mask_tiled(
     )
     pieces = _halo_pieces(dem, keys, 2, 2).join(F.broadcast(lia))
 
-    key_fields = ", ".join(
-        f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
-    )
-    out_schema = (
-        f"{BAND} string, " + (f"{key_fields}, " if keys else "")
-        + "tile_row int, tile_col int, data array<double>"
+    out_schema = f"{BAND} string, " + _ddl(
+        tc.df.schema, keys, "tile_row int, tile_col int, data array<double>"
     )
 
     def masks(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2276,16 +2181,16 @@ def radar_mask_tiled(
                     1.0, 0.0,
                 ),
             }
-        # out-of-scene padding stays NULL so from_tiled drops it
+        # out-of-scene padding stays NULL so from_tiled drops it (the
+        # masks are 0/1 elsewhere, so NaN marks exactly the padding)
         pad = (cy >= n_y) | (cx >= n_x)
         rows = []
         for b in MASK_BANDS:
-            a = out_arrays[b].astype(object)
-            a[pad] = None
+            out_arrays[b][pad] = np.nan
             rows.append({
                 BAND: b, **{k: row0[k] for k in keys},
                 "tile_row": tr, "tile_col": tcl,
-                "data": list(a.reshape(-1)),
+                "data": _tile_list(out_arrays[b]),
             })
         return pd.DataFrame(rows)
 
@@ -2459,7 +2364,7 @@ def merge_cubes_tiled(
 
 
 def resample_spatial_tiled(
-    tc: TiledCube, factor: int, reducer: str = "mean", impl: str = "auto"
+    tc: TiledCube, factor: int, reducer: str = "mean"
 ) -> TiledCube:
     """Integer-factor spatial downsampling natively on tiles — the
     block-aggregate semantics of the long
@@ -2477,11 +2382,10 @@ def resample_spatial_tiled(
     this is the layout paying for itself (the same reason the reference
     resamples inside dask chunks, ``load_odc_collection.py:130``).
 
-    Engines (the :func:`reduce_time_tiled` dispatch pattern): ``"sql"``
-    — a nested HOF fold, oracle mode at small tiles; ``"numpy"`` — an
-    Arrow-batched reshape + nan-reduction per tile, the scale path;
-    ``"auto"`` picks by ``TILE_VECTORIZE_CELLS``. Reducers: mean / sum /
-    min / max / nearest (upper-left sample — openEO ``near``)."""
+    Engines (by tile size, :func:`_numpy_engine`): sql — a nested HOF
+    fold, oracle mode at small tiles; numpy — an Arrow-batched reshape +
+    nan-reduction per tile, the scale path. Reducers: mean / sum / min /
+    max / nearest (upper-left sample — openEO ``near``)."""
     from dataclasses import replace as _dc_replace
 
     from .cube import GridSpec
@@ -2502,9 +2406,7 @@ def resample_spatial_tiled(
         raise ValueError("resample_spatial_tiled needs a GridSpec")
     OT = T // k
     OT2, K2 = OT * OT, k * k
-    if impl == "auto":
-        impl = "numpy" if T * T >= TILE_VECTORIZE_CELLS else "sql"
-    if impl == "sql":
+    if not _numpy_engine(T):
         gather = (
             f"data[((p DIV {OT}) * {k} + q DIV {k}) * {T} "
             f"+ (p % {OT}) * {k} + q % {k}]"
@@ -2534,7 +2436,7 @@ def resample_spatial_tiled(
             )
         out = F.expr(f"transform(sequence(0, {OT2 - 1}), p -> {pool})")
         df = tc.df.withColumn("data", out)
-    elif impl == "numpy":
+    else:
         import numpy as np
         import pandas as pd
         from typing import Iterator
@@ -2568,15 +2470,10 @@ def resample_spatial_tiled(
                             )
                             out = op(safe, axis=(1, 3))
                             out = np.where(all_nan, np.nan, out)
-                    flat = out.reshape(-1)
-                    obj = flat.astype(object)
-                    obj[np.isnan(flat)] = None
-                    pooled.append(obj.tolist())
+                    pooled.append(_tile_list(out))
                 yield pdf.assign(data=pooled)
 
         df = tc.df.mapInPandas(pool_batch, tc.df.schema)
-    else:
-        raise ValueError(f"impl must be 'auto', 'sql' or 'numpy', got {impl!r}")
     schema = _dc_replace(
         tc.schema,
         grid=GridSpec(x0=g.x0, y0=g.y0, resx=g.resx * k, resy=g.resy * k),
@@ -2796,14 +2693,11 @@ def resample_spatial_warp_tiled(
             rec["vals"] = vals
             yield pd.DataFrame(rec)
 
-    key_fields = ", ".join(
-        f"{k} {tc.df.schema[k].dataType.simpleString()}" for k in keys
+    frag_schema = _ddl(
+        tc.df.schema, keys,
+        "tt_r int, tt_c int, tpos array<int>, st_r int, st_c int",
+        *(["w array<double>"] if bilinear else []), "vals array<double>",
     )
-    frag_schema = (f"{key_fields}, tt_r int, tt_c int, "
-                   "tpos array<int>, st_r int, st_c int")
-    if bilinear:
-        frag_schema += ", w array<double>"
-    frag_schema += ", vals array<double>"
     frags = joined.mapInPandas(gather, frag_schema)
 
     T2t = Tt * Tt
@@ -2835,9 +2729,7 @@ def resample_spatial_warp_tiled(
         rec = {k: [row0[k]] for k in keys}
         rec["tile_row"] = [int(row0["tt_r"])]
         rec["tile_col"] = [int(row0["tt_c"])]
-        obj = canvas.astype(object)
-        obj[np.isnan(canvas)] = None
-        rec["data"] = [obj.tolist()]
+        rec["data"] = [_tile_list(canvas)]
         return pd.DataFrame(rec)
 
     out_tc = TiledCube(
@@ -2847,8 +2739,8 @@ def resample_spatial_warp_tiled(
         .groupBy(*keys, "tt_r", "tt_c") \
         .applyInPandas(
             scatter,
-            f"{key_fields}, tile_row int, tile_col int, "
-            "data array<double>",
+            _ddl(tc.df.schema, keys,
+                 "tile_row int, tile_col int, data array<double>"),
         )
     from dataclasses import replace as _rpl
 
@@ -3098,6 +2990,53 @@ def _axis_relabel(
     return origin, resp
 
 
+def _frag_ddl(schema, keys: list[str]) -> str:
+    """Output DDL of the fragment-emitting stages: rows ``(*keys,
+    tile_row, tile_col, _r0, _c0, _h, _w, _frag)`` — an ``_h × _w``
+    block of output tile (tile_row, tile_col) whose top-left cell is
+    (_r0, _c0)."""
+    return _ddl(
+        schema, keys,
+        "tile_row int, tile_col int, _r0 int, _c0 int, _h int, _w int, "
+        "_frag array<double>",
+    )
+
+
+def _assemble_fragments(
+    frags: DataFrame, keys: list[str], schema: CubeSchema, tile: int,
+    n_y: int, n_x: int,
+) -> TiledCube:
+    """Lay each output tile's fragments (:func:`_frag_ddl` rows) on a
+    tile×tile NaN canvas — the assembly stage shared by
+    :func:`resample_cube_spatial_tiled` and :func:`_retile_python`.
+    The canvas scatter is per-GROUP Python work (order-free — fragments
+    land in disjoint windows), so the output-raster exchange takes the
+    pandas-stage width."""
+    import numpy as np
+    import pandas as pd
+
+    gkeys = [*keys, "tile_row", "tile_col"]
+
+    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+        canvas = np.full((tile, tile), np.nan)
+        # plain tuples: itertuples RENAMES underscore-prefixed columns
+        for r0, c0, h, w, frag in pdf[
+            ["_r0", "_c0", "_h", "_w", "_frag"]
+        ].itertuples(index=False, name=None):
+            canvas[r0:r0 + h, c0:c0 + w] = np.asarray(
+                frag, dtype="float64"
+            ).reshape(h, w)
+        return pd.DataFrame([
+            {**_group_keys(pdf.iloc[0], gkeys), "data": _tile_list(canvas)}
+        ])
+
+    w_handle = TiledCube(frags, schema, tile, n_y, n_x)
+    df = _widen_py(w_handle, frags, gkeys).groupBy(*gkeys).applyInPandas(
+        assemble, _ddl(frags.schema, gkeys, "data array<double>")
+    )
+    return TiledCube(df, schema, tile, n_y, n_x)
+
+
 def resample_cube_spatial_tiled(
     source: TiledCube, target, method: str = "near"
 ) -> TiledCube:
@@ -3194,15 +3133,6 @@ def resample_cube_spatial_tiled(
         local = [int(winners[i2]) - t0 for i2 in idx]
         return idx, local
 
-    frag_fields = (
-        "tile_row int, tile_col int, _r0 int, _c0 int, _h int, _w int, "
-        "_frag array<double>"
-    )
-    key_fields = ", ".join(
-        f"{c} {source.df.schema[c].dataType.simpleString()}" for c in keys
-    )
-    frag_schema = f"{key_fields}, {frag_fields}" if keys else frag_fields
-
     def sample(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         for pdf in batches:
             out_rows = []
@@ -3249,44 +3179,8 @@ def resample_cube_spatial_tiled(
             if out_rows:
                 yield pd.DataFrame(out_rows)
 
-    frags = source.df.mapInPandas(sample, frag_schema)
-    gkeys = [*keys, "tile_row", "tile_col"]
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        canvas = np.full((Tt, Tt), np.nan)
-        # plain tuples: itertuples RENAMES underscore-prefixed columns
-        for r0, c0, h, w, frag in pdf[
-            ["_r0", "_c0", "_h", "_w", "_frag"]
-        ].itertuples(index=False, name=None):
-            canvas[r0:r0 + h, c0:c0 + w] = np.asarray(
-                frag, dtype="float64"
-            ).reshape(h, w)
-        row0 = pdf.iloc[0]
-        rec = {
-            c: [int(row0[c]) if c in ("tile_row", "tile_col") else row0[c]]
-            for c in gkeys
-        }
-        # vectorized NaN→None (the per-element comprehension was ~1/3
-        # of the op's wall at 12.6M px)
-        flat = canvas.reshape(-1)
-        obj = flat.astype(object)
-        obj[np.isnan(flat)] = None
-        rec["data"] = [obj.tolist()]
-        return pd.DataFrame(rec)
-
-    out_fields = ", ".join(
-        f"{c} {source.df.schema[c].dataType.simpleString()}"
-        if c in keys else f"{c} int"
-        for c in gkeys
-    )
-    # round-15 continuation: the canvas scatter is per-GROUP Python
-    # work (order-free — fragments land in disjoint windows), so the
-    # output-raster exchange takes the pandas-stage width
-    _w_handle = TiledCube(frags, schema, Tt, nt_y, nt_x)
-    df = _widen_py(_w_handle, frags, gkeys).groupBy(*gkeys).applyInPandas(
-        assemble, f"{out_fields}, data array<double>"
-    )
-    return TiledCube(df, schema, Tt, nt_y, nt_x)
+    frags = source.df.mapInPandas(sample, _frag_ddl(source.df.schema, keys))
+    return _assemble_fragments(frags, keys, schema, Tt, nt_y, nt_x)
 
 
 def resample_cube_spatial_bilinear_tiled(
@@ -3365,14 +3259,6 @@ def resample_cube_spatial_bilinear_tiled(
     wlo_y, whi_y = windows(ylo, nt_y, n_y, n_tr)
     wlo_x, whi_x = windows(xlo, nt_x, n_x, n_tc)
     keys = source.key_dims
-    key_fields = ", ".join(
-        f"{k} {source.df.schema[k].dataType.simpleString()}" for k in keys
-    )
-    frag_schema = (
-        (f"{key_fields}, " if keys else "")
-        + "tile_row int, tile_col int, _r0 int, _c0 int, _h int, _w int, "
-        "_frag array<double>"
-    )
 
     def overlaps(t0, wlo, whi, n_tiles):
         """Target tiles whose source window intersects span [t0, t0+T)."""
@@ -3416,7 +3302,7 @@ def resample_cube_spatial_bilinear_tiled(
             if rows:
                 yield pd.DataFrame(rows)
 
-    frags = source.df.mapInPandas(emit, frag_schema)
+    frags = source.df.mapInPandas(emit, _frag_ddl(source.df.schema, keys))
     gkeys = [*keys, "tile_row", "tile_col"]
 
     def blend(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -3459,21 +3345,10 @@ def resample_cube_spatial_bilinear_tiled(
         if pad_h or pad_w:
             out = np.pad(out, ((0, pad_h), (0, pad_w)),
                          constant_values=np.nan)
-        flat = out.reshape(-1)
-        obj = flat.astype(object)
-        obj[np.isnan(flat)] = None
-        rec = {
-            k: [int(row0[k]) if k in ("tile_row", "tile_col") else row0[k]]
-            for k in gkeys
-        }
-        rec["data"] = [obj.tolist()]
-        return pd.DataFrame(rec)
+        return pd.DataFrame([
+            {**_group_keys(row0, gkeys), "data": _tile_list(out)}
+        ])
 
-    out_fields = ", ".join(
-        f"{k} {source.df.schema[k].dataType.simpleString()}"
-        if k in keys else f"{k} int"
-        for k in gkeys
-    )
     # round-15 continuation: canvas assembly + blend is per-GROUP
     # Python work (order-free — disjoint-window scatter, then a
     # deterministic dy/dx accumulation), so the output-raster exchange
@@ -3481,7 +3356,7 @@ def resample_cube_spatial_bilinear_tiled(
     schema = _dc_replace(source.schema, grid=tg)
     _w_handle = TiledCube(frags, schema, Tt, nt_y, nt_x)
     df = _widen_py(_w_handle, frags, gkeys).groupBy(*gkeys).applyInPandas(
-        blend, f"{out_fields}, data array<double>"
+        blend, _ddl(frags.schema, gkeys, "data array<double>")
     )
     return TiledCube(df, schema, Tt, nt_y, nt_x)
 
@@ -3852,14 +3727,6 @@ def _retile_python(
 
     T, Tt = tc.tile, new_tile
     keys = tc.key_dims
-    key_fields = ", ".join(
-        f"{c} {tc.df.schema[c].dataType.simpleString()}" for c in keys
-    )
-    frag_fields = (
-        "tile_row int, tile_col int, _r0 int, _c0 int, _h int, _w int, "
-        "_frag array<double>"
-    )
-    frag_schema = f"{key_fields}, {frag_fields}" if keys else frag_fields
 
     def split_axis(t0: int, off: int, n: int):
         """[(dest_tile, dest_offset, local_start, length), ...] for the
@@ -3899,43 +3766,8 @@ def _retile_python(
             if rows:
                 yield pd.DataFrame(rows)
 
-    frags = tc.df.mapInPandas(split, frag_schema)
-    gkeys = [*keys, "tile_row", "tile_col"]
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        canvas = np.full((Tt, Tt), np.nan)
-        # plain tuples: itertuples RENAMES underscore-prefixed columns
-        for r0, c0, h, w, frag in pdf[
-            ["_r0", "_c0", "_h", "_w", "_frag"]
-        ].itertuples(index=False, name=None):
-            canvas[r0:r0 + h, c0:c0 + w] = np.asarray(
-                frag, dtype="float64"
-            ).reshape(h, w)
-        row0 = pdf.iloc[0]
-        rec = {
-            c: [int(row0[c]) if c in ("tile_row", "tile_col") else row0[c]]
-            for c in gkeys
-        }
-        # vectorized NaN→None (the per-element comprehension was ~1/3
-        # of the op's wall at 12.6M px)
-        flat = canvas.reshape(-1)
-        obj = flat.astype(object)
-        obj[np.isnan(flat)] = None
-        rec["data"] = [obj.tolist()]
-        return pd.DataFrame(rec)
-
-    out_fields = ", ".join(
-        f"{c} {tc.df.schema[c].dataType.simpleString()}"
-        if c in keys else f"{c} int"
-        for c in gkeys
-    )
-    # round-15 continuation: per-GROUP canvas scatter (order-free,
-    # disjoint windows) — pandas-stage width on the assembly exchange
-    _w_handle = TiledCube(frags, out_schema_obj, Tt, n_y, n_x)
-    df = _widen_py(_w_handle, frags, gkeys).groupBy(*gkeys).applyInPandas(
-        assemble, f"{out_fields}, data array<double>"
-    )
-    return TiledCube(df, out_schema_obj, Tt, n_y, n_x)
+    frags = tc.df.mapInPandas(split, _frag_ddl(tc.df.schema, keys))
+    return _assemble_fragments(frags, keys, out_schema_obj, Tt, n_y, n_x)
 
 
 def filter_bbox_tiled_native(
@@ -4123,7 +3955,6 @@ def aggregate_spatial_tiled(
     polygons: list,
     reducer: str,
     target_dimension: str = "geom_id",
-    impl: str = "auto",
 ) -> Cube:
     """Zonal statistics natively on tiles — the long
     ``aggregate_spatial`` (reference ``openeo_odc_driver.py:628-684``)
@@ -4168,12 +3999,12 @@ def aggregate_spatial_tiled(
     ``reducers.product_expr`` pins), so tagged pixel VALUES flow into
     one exchange instead.
 
-    Two engines behind identical semantics (the ``reduce_time_tiled``
-    dispatch pattern; ``"auto"`` picks by ``TILE_VECTORIZE_CELLS``):
+    Two engines behind identical semantics, chosen by tile size
+    (:func:`_numpy_engine`):
 
-    - ``"sql"`` — interpreted HOF folds and a posexplode boundary
-      tagging path; engine-exact, the pinned oracle mode.
-    - ``"numpy"`` — ONE Arrow-batched ``mapInPandas`` pass over the
+    - sql — interpreted HOF folds and a posexplode boundary tagging
+      path; engine-exact, the oracle mode.
+    - numpy — ONE Arrow-batched ``mapInPandas`` pass over the
       touched tiles does the interior folds AND the boundary per-pixel
       tagging vectorized (half-plane tests as array ops against the
       same CCW edges; first-match by ascending id over untagged
@@ -4211,7 +4042,6 @@ def aggregate_spatial_tiled(
     if g is None:
         raise ValueError("aggregate_spatial_tiled needs a GridSpec")
     T = tc.tile
-    T2 = T * T
     keys = tc.key_dims
 
     # scene-clipped tile-corner coordinates, projected ONCE as real
@@ -4276,15 +4106,9 @@ def aggregate_spatial_tiled(
         F.expr(ig_expr) if all_cvx else F.lit(None).cast("int"),
     )
 
-    if impl == "auto":
-        impl = "numpy" if T2 >= TILE_VECTORIZE_CELLS else "sql"
-    if impl == "numpy":
+    if _numpy_engine(T):
         return _zonal_numpy(
             tc, staged, polygons, reducer, target_dimension, all_cvx
-        )
-    if impl != "sql":
-        raise ValueError(
-            f"impl must be 'auto', 'sql' or 'numpy', got {impl!r}"
         )
 
     # ---- sql engine (interpreted HOFs; the pinned oracle mode) ----
@@ -4516,12 +4340,10 @@ def _zonal_numpy(
             tag[np.where(m)[0][inside]] = zid
         return tag
 
-    key_fields = ", ".join(
-        f"{k} {staged.schema[k].dataType.simpleString()}" for k in keys
-    )
-
     if reducer in ("median", "product"):
-        out_schema = f"{target_dimension} int, {key_fields}, {VALUE} double"
+        out_schema = f"{target_dimension} int, " + _ddl(
+            staged.schema, keys, f"{VALUE} double"
+        )
 
         def emit(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
             for pdf in batches:
@@ -4572,9 +4394,9 @@ def _zonal_numpy(
         )
         return Cube(out, tc.schema.drop(X).drop(Y))
 
-    part_schema = (
-        f"{target_dimension} int, {key_fields}, _s double, _ss double, "
-        "_c bigint, _mn double, _mx double"
+    part_schema = f"{target_dimension} int, " + _ddl(
+        staged.schema, keys,
+        "_s double, _ss double, _c bigint, _mn double, _mx double",
     )
 
     def partials(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":

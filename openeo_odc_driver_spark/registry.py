@@ -642,7 +642,7 @@ def _tiled_quantiles_x(spark, sf_dir):
     from .core.tiled import quantiles_spatial_tiled
 
     return quantiles_spatial_tiled(
-        _tiled_fixture(spark), "x", probabilities=_QPROBS, impl="sql"
+        _tiled_fixture(spark), "x", probabilities=_QPROBS
     ).df
 
 
@@ -874,18 +874,17 @@ def _tiled_roundtrip(spark, sf_dir):
 )
 def _tiled_reduce_time_sweep(spark, sf_dir):
     """Round-13 consolidation (was 4 gate rows): the tiled time-reducer
-    family natively on tiles — reduce_time_mean_tiled's element-wise
-    sorted fold plus the generalized reduce_time_tiled at max/sum/sd
+    family natively on tiles — reduce_time_tiled's element-wise sorted
+    fold at mean/max/sum/sd
     (NULL elements skipped, all-NULL stays NULL; sd combines exact
     (n, Σx, Σx²) partials with reducers.sd_expr arithmetic) — each
     expanded back to long and equi-joined per pixel into one sweep row
-    against a single multi-column GROUP BY oracle. Oracle mode pins
-    impl="sql" (the engine-exact fold); the numpy scale path is pinned
-    ≡ sql by pytest."""
+    against a single multi-column GROUP BY oracle. The tile-8 fixture
+    plans on the sql engine (the engine-exact fold); the numpy scale
+    path is pinned ≡ sql by pytest."""
     from .core.tiled import (
         from_tiled,
         materialize_tiled,
-        reduce_time_mean_tiled,
         reduce_time_tiled,
         to_tiled,
     )
@@ -895,10 +894,10 @@ def _tiled_reduce_time_sweep(spark, sf_dir):
     tc = materialize_tiled(
         to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16)
     )
-    out = from_tiled(reduce_time_mean_tiled(tc, impl="sql")).df
+    out = from_tiled(reduce_time_tiled(tc, "mean")).df
     out = out.withColumnRenamed(VALUE, "mean")
     for red in ("max", "sum", "sd"):
-        d = from_tiled(reduce_time_tiled(tc, red, impl="sql")).df
+        d = from_tiled(reduce_time_tiled(tc, red)).df
         out = out.join(d.withColumnRenamed(VALUE, red), ["band", "y", "x"])
     return out
 
@@ -1015,12 +1014,12 @@ def _tiled_reduce_bands_mean(spark, sf_dir):
     """Band-axis reduction natively on tiles (core/tiled.py:
     reduce_bands_tiled — the shared fold grouped by (time, tile)
     across the band rows, band-label sort order). Shares the long
-    reduce_bands_mean oracle; oracle mode pins impl="sql"."""
+    reduce_bands_mean oracle; tile 8 plans on the sql engine."""
     from .core.tiled import from_tiled, reduce_bands_tiled, to_tiled
 
     return from_tiled(
         reduce_bands_tiled(
-            to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16), "mean", impl="sql"
+            to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16), "mean"
         )
     ).df
 
@@ -1036,7 +1035,7 @@ def _tiled_atp_season(spark, sf_dir):
     aggregate_temporal_period_tiled — date_trunc relabel + the shared
     element-wise fold per (band, period, tile); time survives,
     coarsened 3→1 on the monthly fixture). Shares the long season/max
-    oracle; oracle mode pins impl="sql"."""
+    oracle; tile 8 plans on the sql engine."""
     from .core.tiled import (
         aggregate_temporal_period_tiled,
         from_tiled,
@@ -1046,7 +1045,6 @@ def _tiled_atp_season(spark, sf_dir):
     return from_tiled(
         aggregate_temporal_period_tiled(
             to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16), "season", "max",
-            impl="sql",
         )
     ).df
 
@@ -1217,12 +1215,12 @@ def _tiled_resample_spatial(spark, sf_dir):
     a ZERO-shuffle scan-fused projection (every output tile is a pure
     function of one input tile; only the tile edge and grid resolution
     change). Oracle: the same block reduction over the long cube,
-    upper-left grid alignment. Oracle mode pins impl="sql"."""
+    upper-left grid alignment. Tile 8 plans on the sql engine."""
     from .core.tiled import from_tiled, resample_spatial_tiled, to_tiled
 
     return from_tiled(
         resample_spatial_tiled(
-            to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16), 2, "mean", impl="sql"
+            to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16), 2, "mean"
         )
     ).df
 
@@ -1259,7 +1257,7 @@ def _tiled_zonal_sweep(spark, sf_dir):
     out = None
     for red in ("mean", "count", "median", "sd", "product"):
         d = aggregate_spatial_tiled(
-            tc, FIXTURE_POLYGONS, red, impl="sql",
+            tc, FIXTURE_POLYGONS, red,
         ).df.withColumnRenamed(VALUE, red)
         out = d if out is None else out.join(d, ["geom_id", "band", "time"])
     return out
@@ -1287,12 +1285,12 @@ def _tiled_clim(spark, sf_dir):
     """Round-10: climatological_normal natively on tiles (the r9
     doc-phantom made real) — month-keyed mean fold per (band, month,
     tile), the month label riding the tile rows through from_tiled.
-    Shares the long climatological_normal oracle. Oracle mode pins the
-    sql fold engine."""
+    Shares the long climatological_normal oracle. The tile-4 fixture
+    plans on the sql fold engine."""
     from .core.tiled import climatological_normal_tiled, from_tiled
 
     return from_tiled(
-        climatological_normal_tiled(_tiled_fixture(spark), impl="sql")
+        climatological_normal_tiled(_tiled_fixture(spark))
     ).df
 
 
@@ -1326,13 +1324,13 @@ def _tiled_zonal_concave(spark, sf_dir):
     still pruned at the scan). The oracle is the same crossing
     arithmetic in DuckDB (functions/geometry.raycast_geom_id_case_sql)
     — identical IEEE evaluation order, .5-offset vertices keep pixels
-    off every edge. Oracle mode pins the sql engine."""
+    off every edge. The tile-4 fixture plans on the sql engine."""
     from .core.tiled import aggregate_spatial_tiled
     from .functions.geometry import is_convex
 
     assert not all(is_convex(p) for p in _CONCAVE_ZONES)
     return aggregate_spatial_tiled(
-        _tiled_fixture(spark), _CONCAVE_ZONES, "mean", impl="sql",
+        _tiled_fixture(spark), _CONCAVE_ZONES, "mean",
     ).df
 
 
@@ -1350,15 +1348,15 @@ def _tiled_reduce_x_sweep(spark, sf_dir):
     partials for sd (cross-tile combine reproduces reducers.sd_expr
     bit-for-bit), and per-line compact value multisets for median
     (exploded after the shuffle into the long median_expr) — joined on
-    (band, time, y) into one sweep row. Oracle mode pins the sql HOF
-    fold (numpy scale path pinned ≡ sql by pytest); the y-axis gather
+    (band, time, y) into one sweep row. The tile-4 fixture plans on the
+    sql HOF fold (numpy scale path pinned ≡ sql by pytest); the y-axis gather
     keeps its own row (tiled_reduce_y_max)."""
     from .core.tiled import reduce_spatial_tiled
 
     out = None
     for red in ("sum", "sd", "median"):
         d = reduce_spatial_tiled(
-            _tiled_fixture(spark), "x", red, impl="sql"
+            _tiled_fixture(spark), "x", red
         ).df.withColumnRenamed(VALUE, red)
         out = d if out is None else out.join(d, ["band", "time", "y"])
     return out
@@ -1371,8 +1369,7 @@ def _tiled_reduce_y_max(spark, sf_dir):
     reduce_y_max's oracle."""
     from .core.tiled import reduce_spatial_tiled
 
-    return reduce_spatial_tiled(_tiled_fixture(spark), "y", "max",
-                                impl="sql").df
+    return reduce_spatial_tiled(_tiled_fixture(spark), "y", "max").df
 
 
 @q(

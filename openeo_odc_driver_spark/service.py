@@ -24,6 +24,7 @@ import csv
 import hashlib
 import json
 import os
+import re
 import shutil
 import threading
 from typing import Optional
@@ -178,6 +179,14 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
         job_id = payload.get("id") or hashlib.md5(
             os.urandom(16)
         ).hexdigest()[:12]
+        # the id names the job directory under work_dir: a path-shaped
+        # id ("../../x") would escape it
+        if not (isinstance(job_id, str)
+                and re.fullmatch(r"[A-Za-z0-9._-]{1,64}", job_id)
+                and job_id not in (".", "..")):
+            return jsonify({"code": "InvalidJobId",
+                            "message": "job id must match "
+                                       "[A-Za-z0-9._-]{1,64}"}), 400
         # execution-mode knobs ride the payload next to the graph
         # (this service's own shape — the reference has no tiled tier)
         tiled = bool(payload.get("tiled"))

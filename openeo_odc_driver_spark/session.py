@@ -17,6 +17,22 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap default: 90g, capped at half the host's MemTotal so
+    the JVM never asks the kernel for more than the host has (under
+    ``vm.overcommit_memory=0`` a 90g heap on a 16 GB host dies at JVM
+    start). Hosts without ``/proc/meminfo`` keep 90g."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024  # kB → MiB
+                    return f"{max(min(90 * 1024, total_mb // 2), 1)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "90g"
+
+
 def get_spark(app_name: str = "openeo-odc-spark", cpus: str | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
     builder = (
@@ -34,7 +50,9 @@ def get_spark(app_name: str = "openeo-odc-spark", cpus: str | None = None) -> Sp
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
         .config("spark.ui.enabled", "false")
         # bucketed-table layouts (co-located joins) land here, not in cwd
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")

@@ -746,7 +746,7 @@ def load_gtiff_tiled(spark, path: str, bands=None, level=None):
     import pandas as pd
 
     from ..core.cube import CubeSchema, GridSpec
-    from ..core.tiled import TiledCube
+    from ..core.tiled import TiledCube, _tile_list
 
     chain, big = _read_ifd_chain(path)
     tags = chain[0]
@@ -845,10 +845,9 @@ def load_gtiff_tiled(spark, path: str, bands=None, level=None):
                     if comp == 8:
                         raw = zlib.decompress(raw)
                     a = np.frombuffer(raw, dtype="<f4").astype("float64")
-                    obj = a.astype(object)
-                    obj[np.isnan(a)] = None  # NaN == nodata == NULL
+                    # NaN == nodata == NULL
                     out_rows.append((band_names[plane], trow, tcol,
-                                     obj.tolist()))
+                                     _tile_list(a)))
                 yield pd.DataFrame(
                     out_rows,
                     columns=["band", "tile_row", "tile_col", "data"],

@@ -10,7 +10,7 @@ cube = synthetic_cube(spark)
 tc = t.to_tiled(cube, tile=4)
 
 print("=== resample_spatial_tiled (expect: no Exchange beyond to_tiled's) ===")
-r = t.resample_spatial_tiled(tc, 2, "mean", impl="sql")
+r = t.resample_spatial_tiled(tc, 2, "mean")
 plan = r.df._jdf.queryExecution().executedPlan().toString()
 print("Exchanges:", plan.count("Exchange"), "| Generates:", plan.count("Generate"))
 

@@ -415,3 +415,33 @@ def test_gtiff_read_width_follows_session_not_env(spark, tmp_path, monkeypatch):
         .executedPlan().toString()
     width = int(re.search(r"RoundRobinPartitioning\((\d+)\)", plan).group(1))
     assert width <= 4 * spark.sparkContext.defaultParallelism
+
+
+def test_driver_memory_default_fits_host(spark, tmp_path):
+    """The driver heap default is min(90g, MemTotal/2): it never asks
+    for more memory than the host has. SPARK_GRAFT_DRIVER_MEM still
+    overrides it."""
+    import os
+
+    from openeo_odc_driver_spark.session import default_driver_memory
+
+    def mib(size: str) -> int:
+        return int(size[:-1]) * (1024 if size.endswith("g") else 1)
+
+    small = tmp_path / "meminfo_16g"
+    small.write_text("MemTotal:       16384000 kB\nMemFree:  1000 kB\n")
+    assert default_driver_memory(str(small)) == "8000m"
+    huge = tmp_path / "meminfo_1t"
+    huge.write_text("MemTotal:       1073741824 kB\n")
+    assert default_driver_memory(str(huge)) == "92160m"  # the 90g cap
+    assert default_driver_memory(str(tmp_path / "absent")) == "90g"
+
+    with open("/proc/meminfo") as fh:
+        total_mib = next(
+            int(line.split()[1]) // 1024
+            for line in fh if line.startswith("MemTotal:")
+        )
+    assert mib(default_driver_memory()) <= total_mib
+    if not os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        conf = spark.sparkContext.getConf().get("spark.driver.memory")
+        assert mib(conf) <= total_mib

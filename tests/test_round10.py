@@ -55,7 +55,7 @@ def _zone_centers(zones):
 
 
 @pytest.mark.parametrize("m", [15, 45])  # 225 and 2025 zones
-def test_zonal_tiled_many_zones(spark, m):
+def test_zonal_tiled_many_zones(spark, m, tile_engine):
     """The round-9 build died here (driver-side O(|zones|^2) expression
     + codegen fallback); the literal-array plan must both BUILD fast
     and answer exactly at hundreds-to-thousands of zones — pinned
@@ -68,15 +68,17 @@ def test_zonal_tiled_many_zones(spark, m):
     cube = synthetic_cube(spark)
     tc = t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny, n_x=DEFAULT_SPEC.nx)
     # m=45 runs the vectorized engine (the many-zone scale path); m=15
-    # stays on auto (sql at tile=4) so both engines face a zone swarm
-    impl = "numpy" if m == 45 else "auto"
+    # keeps the tile-size choice (sql at tile=4) so both engines face a
+    # zone swarm
+    if m == 45:
+        tile_engine("numpy")
     cols = ["geom_id", "band", "time", "value"]
     want = (
         aggregate_spatial(cube, zones, "count")
         .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
     )
     got = (
-        t.aggregate_spatial_tiled(tc, zones, "count", impl=impl)
+        t.aggregate_spatial_tiled(tc, zones, "count")
         .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
     )
     assert len(want) > 0
@@ -251,8 +253,8 @@ def test_tiled_plan_build_runs_zero_spark_jobs(spark):
     assert static_scene_dims("s2_l2a") == (full.n_y, full.n_x)
 
 
-@pytest.mark.parametrize("impl", ["sql", "numpy"])
-def test_climatological_normal_tiled_matches_long(spark, impl):
+@pytest.mark.parametrize("engine", ["sql", "numpy"])
+def test_climatological_normal_tiled_matches_long(spark, engine, tile_engine):
     """Round-10: the r9 doc-phantom is now a real op — month-keyed mean
     fold on tiles ≡ the long climatological_normal, both engines."""
     from openeo_odc_driver_spark.operators.aggregates import (
@@ -266,8 +268,9 @@ def test_climatological_normal_tiled_matches_long(spark, impl):
         climatological_normal(cube).df.toPandas()[cols]
         .sort_values(cols[:4]).reset_index(drop=True)
     )
+    tile_engine(engine)
     got = (
-        t.from_tiled(t.climatological_normal_tiled(tc, impl=impl))
+        t.from_tiled(t.climatological_normal_tiled(tc))
         .df.toPandas()[cols].sort_values(cols[:4]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(want, got, check_exact=True,
@@ -361,8 +364,8 @@ def test_tiled_store_ndvi_storage_first(spark):
     assert any("GreaterThanOrEqual(time" in s for s in scans)
 
 
-@pytest.mark.parametrize("impl", ["sql", "numpy"])
-def test_resample_tiled_partial_edge_blocks(spark, impl):
+@pytest.mark.parametrize("engine", ["sql", "numpy"])
+def test_resample_tiled_partial_edge_blocks(spark, engine, tile_engine):
     """Round-10 ADVICE: scene dims NOT divisible by factor*tile —
     13x15 px, tile=4, factor=2 → the last row/col blocks pool only
     their in-scene pixels (1x2 / 2x1 / 1x1 slivers) and padding never
@@ -376,8 +379,9 @@ def test_resample_tiled_partial_edge_blocks(spark, impl):
     cube = synthetic_cube(spark, spec)
     g = cube.schema.grid
     tc = t.to_tiled(cube, tile=4, n_y=13, n_x=15)
+    tile_engine(engine)
     out = (
-        t.from_tiled(t.resample_spatial_tiled(tc, 2, "mean", impl=impl))
+        t.from_tiled(t.resample_spatial_tiled(tc, 2, "mean"))
         .df.toPandas()
     )
     assert (t.resample_spatial_tiled(tc, 2, "mean").n_y,
@@ -400,8 +404,8 @@ def test_resample_tiled_partial_edge_blocks(spark, impl):
     )
 
 
-@pytest.mark.parametrize("impl", ["sql", "numpy"])
-def test_zonal_tiled_concave_native(spark, impl):
+@pytest.mark.parametrize("engine", ["sql", "numpy"])
+def test_zonal_tiled_concave_native(spark, engine, tile_engine):
     """Round-10: concave polygons natively on tiles — the long operator
     switches ALL polygons to the even-odd ray-cast rule when any is
     concave, and the tiled crossing test mirrors its float arithmetic
@@ -417,6 +421,7 @@ def test_zonal_tiled_concave_native(spark, impl):
     zones = [ell, rect]
     cube = synthetic_cube(spark)
     tc = t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny, n_x=DEFAULT_SPEC.nx)
+    tile_engine(engine)
     cols = ["geom_id", "band", "time", "value"]
     for reducer in ("count", "mean", "median"):
         want = (
@@ -424,7 +429,7 @@ def test_zonal_tiled_concave_native(spark, impl):
             .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
         )
         got = (
-            t.aggregate_spatial_tiled(tc, zones, reducer, impl=impl)
+            t.aggregate_spatial_tiled(tc, zones, reducer)
             .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(
@@ -546,7 +551,7 @@ def test_zonal_tiled_prunes_stored_scan(spark, tmp_path):
         store,
     )
     tc = t.load_tiled(spark, store)
-    out = t.aggregate_spatial_tiled(tc, FIXTURE_POLYGONS, "count", impl="sql")
+    out = t.aggregate_spatial_tiled(tc, FIXTURE_POLYGONS, "count")
     plan = out.df._jdf.queryExecution().executedPlan().toString()
     scans = re.findall(r"PushedFilters: \[[^\]]*\]", plan)
     assert scans and any(
@@ -563,8 +568,10 @@ def test_zonal_tiled_prunes_stored_scan(spark, tmp_path):
 
 
 @pytest.mark.parametrize("reducer", ["sd", "variance"])
-@pytest.mark.parametrize("impl", ["sql", "numpy"])
-def test_tiled_reduce_time_sd_variance_matches_long(spark, reducer, impl):
+@pytest.mark.parametrize("engine", ["sql", "numpy"])
+def test_tiled_reduce_time_sd_variance_matches_long(
+    spark, reducer, engine, tile_engine
+):
     """Round-10: sd/variance close the tiled named-time-reducer set —
     exact (n, Σx, Σx²) element-wise folds, both engines, pinned
     frame-exact against the long reducer."""
@@ -576,13 +583,11 @@ def test_tiled_reduce_time_sd_variance_matches_long(spark, reducer, impl):
         reduce_dimension(cube, "time", reducer)
         .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
     )
+    tc = t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny, n_x=DEFAULT_SPEC.nx)
+    tile_engine(engine)
     got = (
         t.from_tiled(
-            t.reduce_time_tiled(
-                t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny,
-                           n_x=DEFAULT_SPEC.nx),
-                reducer, impl=impl,
-            )
+            t.reduce_time_tiled(tc, reducer)
         ).df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(want, got, check_exact=True)
@@ -605,7 +610,7 @@ def test_tiled_period_sd_matches_long(spark):
             t.aggregate_temporal_period_tiled(
                 t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny,
                            n_x=DEFAULT_SPEC.nx),
-                "month", "sd", impl="sql",
+                "month", "sd",
             )
         ).df.toPandas()[cols].sort_values(cols[:4]).reset_index(drop=True)
     )

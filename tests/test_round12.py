@@ -105,7 +105,7 @@ def test_retile_same_edge_jvm_matches_python(spark, row0, col0, n_y, n_x):
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
-def test_to_tiled_numpy_impl_matches_sql(spark):
+def test_to_tiled_numpy_impl_matches_sql(spark, tile_engine):
     """to_tiled's scale engine (numpy position scatter) is row-identical
     to the sql HOF assembly the oracles pin — including NULL cells,
     edge-tile padding, and the duplicate-pixel named error."""
@@ -116,8 +116,10 @@ def test_to_tiled_numpy_impl_matches_sql(spark):
     from openeo_odc_driver_spark.sources.synthetic import synthetic_cube
 
     cube = synthetic_cube(spark)
-    a = t.to_tiled(cube, tile=5, n_y=16, n_x=16, impl="numpy").df
-    b = t.to_tiled(cube, tile=5, n_y=16, n_x=16, impl="sql").df
+    tile_engine("numpy")
+    a = t.to_tiled(cube, tile=5, n_y=16, n_x=16).df
+    tile_engine("sql")
+    b = t.to_tiled(cube, tile=5, n_y=16, n_x=16).df
     cols = ["band", "time", "tile_row", "tile_col"]
     pa = a.toPandas().sort_values(cols).reset_index(drop=True)
     pb = b.toPandas().sort_values(cols).reset_index(drop=True)
@@ -127,20 +129,26 @@ def test_to_tiled_numpy_impl_matches_sql(spark):
     dup = cube.df.unionAll(cube.df.limit(1))
     from openeo_odc_driver_spark.core.cube import Cube
 
-    for impl in ("numpy", "sql"):
+    for engine in ("numpy", "sql"):
+        tile_engine(engine)
         with _pt.raises(Exception, match="duplicate pixel keys"):
             t.to_tiled(
-                Cube(dup, cube.schema), tile=5, n_y=16, n_x=16, impl=impl
+                Cube(dup, cube.schema), tile=5, n_y=16, n_x=16
             ).df.collect()
 
 
 def test_to_tiled_auto_picks_numpy_at_scale_tiles():
-    """The dispatch constant: tile=256 -> numpy, fixture tiles -> sql
-    (the oracle-pinned path)."""
-    from openeo_odc_driver_spark.core.tiled import TILE_VECTORIZE_CELLS
+    """The engine follows tile size: tile=256 -> numpy, fixture tiles
+    -> sql (the oracle-pinned path)."""
+    from openeo_odc_driver_spark.core.tiled import (
+        TILE_VECTORIZE_CELLS,
+        _numpy_engine,
+    )
 
     assert 256 * 256 >= TILE_VECTORIZE_CELLS
     assert 8 * 8 < TILE_VECTORIZE_CELLS
+    assert _numpy_engine(256) and _numpy_engine(64)
+    assert not any(_numpy_engine(t) for t in (4, 5, 8, 32))
 
 
 def test_band_quantiles_stay_tiled(spark):

@@ -326,7 +326,7 @@ def test_planner_resample_spatial_projection(spark):
     assert out.df.count() > 0
 
 
-def test_to_tiled_nan_folds_to_null_both_engines(spark):
+def test_to_tiled_nan_folds_to_null_both_engines(spark, tile_engine):
     """Tiled-boundary convention (round 13): a float NaN input VALUE
     folds to NULL on pack in BOTH engines — the Arrow float64 transfer
     cannot distinguish NaN from NULL, so the sql HOF folds explicitly
@@ -340,8 +340,10 @@ def test_to_tiled_nan_folds_to_null_both_engines(spark):
                F.lit(float("nan"))).otherwise(F.col("value")),
     )
     cube = Cube(df, src.schema)
-    a = t.to_tiled(cube, tile=8, n_y=16, n_x=16, impl="sql")
-    b = t.to_tiled(cube, tile=8, n_y=16, n_x=16, impl="numpy")
+    tile_engine("sql")
+    a = t.to_tiled(cube, tile=8, n_y=16, n_x=16)
+    tile_engine("numpy")
+    b = t.to_tiled(cube, tile=8, n_y=16, n_x=16)
     keys = ["band", "time", "tile_row", "tile_col"]
     pa = a.df.toPandas().sort_values(keys).reset_index(drop=True)
     pb = b.df.toPandas().sort_values(keys).reset_index(drop=True)
@@ -355,6 +357,37 @@ def test_to_tiled_nan_folds_to_null_both_engines(spark):
         "exists(data, v -> isnan(v))"
     ).count()
     assert nan_tiles == 0
+
+
+def test_tile_payload_helpers_pin_null_encoding():
+    """The tile-payload boundary helpers: NULL -> NaN on the way into a
+    pandas stage, NaN -> None on the way out, -0.0 kept, and all-NULL
+    arrays survive both directions."""
+    import math
+
+    import numpy as np
+
+    stack = t._tile_stack(pd.DataFrame({"data": [
+        [1.5, None, -0.0, 2.0],
+        [None, None, None, None],
+    ]}))
+    assert stack.dtype == np.float64 and stack.shape == (2, 4)
+    assert stack[0, 0] == 1.5 and math.isnan(stack[0, 1])
+    assert stack[0, 2] == 0.0 and math.copysign(1.0, stack[0, 2]) == -1.0
+    assert np.isnan(stack[1]).all()
+
+    enc = t._tile_list(stack[0])
+    assert enc[0] == 1.5 and enc[1] is None and enc[3] == 2.0
+    assert math.copysign(1.0, enc[2]) == -1.0
+    assert all(type(v) is float for v in (enc[0], enc[2], enc[3]))
+    assert t._tile_list(stack[1]) == [None] * 4
+    # 2-D arrays flatten row-major
+    assert t._tile_list(np.array([[1.0, np.nan], [3.0, 4.0]])) == [
+        1.0, None, 3.0, 4.0,
+    ]
+    # round trip
+    back = t._tile_stack(pd.DataFrame({"data": [enc]}))
+    np.testing.assert_array_equal(back[0], stack[0])
 
 
 def _banded_grid_cube(spark, spec=None):

@@ -63,7 +63,7 @@ def test_kernel_results_invariant_under_stage_width(spark, t8, monkeypatch):
 # fold order pinned, bigram one-pass model build ---------------------
 
 
-def test_numpy_fold_permutation_invariant(spark):
+def test_numpy_fold_permutation_invariant(spark, numpy_tiles):
     """The numpy reduce fold sorts its group stack by the collapsed
     axis before summing — the result must be bit-identical however the
     input rows are partitioned/ordered (non-dyadic values on purpose:
@@ -82,8 +82,7 @@ def test_numpy_fold_permutation_invariant(spark):
 
     def run(df_variant):
         out = _fold_groups(
-            replace(nd, df=df_variant), "sum", "numpy", keys=keys,
-            sort_field="time",
+            replace(nd, df=df_variant), "sum", keys=keys, sort_field="time",
         )
         return sorted(map(tuple, out.collect()))
 

@@ -266,7 +266,7 @@ def test_tiled_roundtrip_lossless_across_tile_sizes(spark):
         pd.testing.assert_frame_equal(orig, rt, check_exact=True)
 
 
-def test_tiled_time_mean_matches_long_reducer(spark):
+def test_tiled_time_mean_matches_long_reducer(spark, tile_engine):
     import pandas as pd
 
     from openeo_odc_driver_spark.core.cube import BAND, VALUE, X, Y
@@ -281,21 +281,20 @@ def test_tiled_time_mean_matches_long_reducer(spark):
         .sort_values(cols[:3]).reset_index(drop=True)
     )
     tc = t.to_tiled(cube, tile=7)
-    for impl in ("sql", "numpy"):
+    for engine in ("sql", "numpy"):
+        tile_engine(engine)
         tiled = (
-            t.from_tiled(t.reduce_time_mean_tiled(tc, impl=impl))
+            t.from_tiled(t.reduce_time_tiled(tc, "mean"))
             .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(long, tiled, check_exact=True)
     import pytest
 
-    with pytest.raises(ValueError, match="impl"):
-        t.reduce_time_mean_tiled(tc, impl="nope")
     with pytest.raises(ValueError, match="reducer"):
         t.reduce_time_tiled(tc, "median")
 
 
-def test_tiled_reducers_match_long_across_engines(spark):
+def test_tiled_reducers_match_long_across_engines(spark, tile_engine):
     """sum/min/max per pixel: sql fold == numpy fold == the long
     relational reducer, including NULL-skip and all-NULL → NULL."""
     import pandas as pd
@@ -313,15 +312,16 @@ def test_tiled_reducers_match_long_across_engines(spark):
             reduce_dimension(cube, "time", red).df.toPandas()[cols]
             .sort_values(cols[:3]).reset_index(drop=True)
         )
-        for impl in ("sql", "numpy"):
+        for engine in ("sql", "numpy"):
+            tile_engine(engine)
             tiled = (
-                t.from_tiled(t.reduce_time_tiled(tc, red, impl=impl))
+                t.from_tiled(t.reduce_time_tiled(tc, red))
                 .df.toPandas()[cols].sort_values(cols[:3])
                 .reset_index(drop=True)
             )
             pd.testing.assert_frame_equal(
                 long, tiled, check_exact=True,
-            ), f"{red}/{impl}"
+            ), f"{red}/{engine}"
 
 
 def test_tiled_kernel_matches_long_scatter(spark):
@@ -534,7 +534,7 @@ def test_tiled_mask_matches_long_including_replacement(spark):
     pd.testing.assert_frame_equal(mixed, same, check_exact=True)
 
 
-def test_tiled_temporal_period_matches_long_across_engines(spark):
+def test_tiled_temporal_period_matches_long_across_engines(spark, tile_engine):
     """Calendar-period resample on tiles ≡ the long operator for both
     fold engines and two (period, reducer) combos, and the time-axis
     metadata maps to the truncation image."""
@@ -554,10 +554,9 @@ def test_tiled_temporal_period_matches_long_across_engines(spark):
             aggregate_temporal_period(cube, period, red).df.toPandas()[cols]
             .sort_values(cols[:4]).reset_index(drop=True)
         )
-        for impl in ("sql", "numpy"):
-            got_tc = t.aggregate_temporal_period_tiled(
-                tc, period, red, impl=impl
-            )
+        for engine in ("sql", "numpy"):
+            tile_engine(engine)
+            got_tc = t.aggregate_temporal_period_tiled(tc, period, red)
             got = (
                 t.from_tiled(got_tc).df.toPandas()[cols]
                 .sort_values(cols[:4]).reset_index(drop=True)
@@ -572,7 +571,7 @@ def test_tiled_temporal_period_matches_long_across_engines(spark):
         t.aggregate_temporal_period_tiled(tc, "fortnight", "max")
 
 
-def test_tiled_band_reduction_matches_long(spark):
+def test_tiled_band_reduction_matches_long(spark, tile_engine):
     import pandas as pd
 
     from openeo_odc_driver_spark.operators.reducers import reduce_dimension
@@ -586,9 +585,10 @@ def test_tiled_band_reduction_matches_long(spark):
         reduce_dimension(cube, "bands", "mean").df.toPandas()[cols]
         .sort_values(cols[:3]).reset_index(drop=True)
     )
-    for impl in ("sql", "numpy"):
+    for engine in ("sql", "numpy"):
+        tile_engine(engine)
         got = (
-            t.from_tiled(t.reduce_bands_tiled(tc, "mean", impl=impl))
+            t.from_tiled(t.reduce_bands_tiled(tc, "mean"))
             .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(long, got, check_exact=True)
@@ -635,9 +635,9 @@ def test_tiled_error_contracts(spark):
     # names and wrap-over-partial-tilings raise
     with pytest.raises(NotImplementedError, match="unknown border"):
         t.apply_kernel_tiled_layout(tc, [[1.0]], border="nope")
-    flat = t.reduce_time_mean_tiled(tc)
+    flat = t.reduce_time_tiled(tc, "mean")
     with pytest.raises(ValueError, match="time"):
-        t.reduce_time_mean_tiled(flat)
+        t.reduce_time_tiled(flat, "mean")
     # round-10 ADVICE fix: time-dim mismatch no longer raises — both
     # directions follow the long operator's key rule exactly
     # (test_round10.test_mask_tiled_time_parity_matches_long)

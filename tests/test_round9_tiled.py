@@ -48,7 +48,7 @@ def test_tiled_filters_match_long(spark):
     assert ftc.schema.time_extent is not None
     with pytest.raises(ValueError, match="time"):
         t.filter_temporal_tiled(
-            t.reduce_time_mean_tiled(tc), start, end
+            t.reduce_time_tiled(tc, "mean"), start, end
         )
 
 
@@ -154,19 +154,18 @@ def test_merge_tiled_resolver_sees_null_partner_for_missing_tile(spark):
 
 
 @pytest.mark.parametrize("reducer", ["mean", "sum", "min", "max"])
-def test_resample_tiled_sql_numpy_parity_and_block_semantics(spark, reducer):
+def test_resample_tiled_sql_numpy_parity_and_block_semantics(
+    spark, reducer, tile_engine
+):
     """sql and numpy engines agree bit-for-bit, and the block reduction
     matches a pandas reference computation on the long cube."""
     import numpy as np
 
     cube = synthetic_cube(spark)  # 16x16, dyadic values, ~4% NULLs
     tc = t.to_tiled(cube, tile=8)
-    a = t.from_tiled(
-        t.resample_spatial_tiled(tc, 2, reducer, impl="sql")
-    ).df
-    b = t.from_tiled(
-        t.resample_spatial_tiled(tc, 2, reducer, impl="numpy")
-    ).df
+    a = t.from_tiled(t.resample_spatial_tiled(tc, 2, reducer)).df
+    tile_engine("numpy")
+    b = t.from_tiled(t.resample_spatial_tiled(tc, 2, reducer)).df
     pa, pb = _long_sorted(a), _long_sorted(b)
     pd.testing.assert_frame_equal(pa, pb, check_exact=True)
     # brute-force reference: block-reduce the long cube in pandas
@@ -212,12 +211,12 @@ def test_resample_tiled_error_contracts_and_grid(spark):
         t.resample_spatial_tiled(tc, 3)
     with pytest.raises(ValueError, match="reducer"):
         t.resample_spatial_tiled(tc, 2, "median")
-    out = t.resample_spatial_tiled(tc, 4, "mean", impl="sql")
+    out = t.resample_spatial_tiled(tc, 4, "mean")
     assert out.tile == 2 and (out.n_y, out.n_x) == (4, 4)
     assert out.schema.grid.resx == cube.schema.grid.resx * 4
     # nearest = upper-left sample of each block
     near = t.from_tiled(
-        t.resample_spatial_tiled(tc, 2, "nearest", impl="sql")
+        t.resample_spatial_tiled(tc, 2, "nearest")
     ).df
     longp = cube.df.toPandas()
     g = cube.schema.grid
@@ -287,7 +286,7 @@ def test_zonal_tiled_classifies_interior_tiles(spark):
 
 
 @pytest.mark.parametrize("reducer", ["mean", "sum", "min", "max", "count"])
-def test_zonal_tiled_numpy_engine_matches_sql(spark, reducer):
+def test_zonal_tiled_numpy_engine_matches_sql(spark, reducer, tile_engine):
     """The vectorized interior-fold engine (scale path) is pinned
     element-exact against the interpreted SQL fold (oracle mode) on the
     dyadic fixture — the reduce_time_tiled dispatch discipline."""
@@ -297,10 +296,11 @@ def test_zonal_tiled_numpy_engine_matches_sql(spark, reducer):
     tc = t.to_tiled(cube, tile=4)
     cols = ["geom_id", "band", "time", "value"]
     frames = []
-    for impl in ("sql", "numpy"):
+    for engine in ("sql", "numpy"):
+        tile_engine(engine)
         frames.append(
             t.aggregate_spatial_tiled(
-                tc, FIXTURE_POLYGONS, reducer, impl=impl
+                tc, FIXTURE_POLYGONS, reducer
             ).df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
         )
     pd.testing.assert_frame_equal(

@@ -45,6 +45,19 @@ def test_post_bad_graph_returns_openeo_error(client):
     assert r.get_json()["code"] == "NotImplementedError"
 
 
+def test_post_graph_rejects_path_shaped_job_ids(client, tmp_path):
+    """The client id names the job directory under work_dir, so only
+    [A-Za-z0-9._-]{1,64} (and not "." or "..") is accepted; anything
+    else is a 400 before any directory is made or graph is run."""
+    escape = tmp_path / "escaped"
+    for bad in (f"../../../../../..{escape}", "../x", "a/b", ".", "..",
+                "x" * 65, "sp ace", 7):
+        r = client.post("/graph", json={**_graph(), "id": bad})
+        assert r.status_code == 400, bad
+        assert r.get_json()["code"] == "InvalidJobId"
+    assert not escape.exists()
+
+
 def test_collections_stac_shape(client):
     r = client.get("/collections")
     cols = {c["id"]: c for c in r.get_json()["collections"]}
