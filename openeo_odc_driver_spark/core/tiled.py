@@ -1228,12 +1228,7 @@ def _reduce_time_numpy(
     )
 
 
-def save_tiled(
-    tc: TiledCube,
-    path: str,
-    partition_by_band: bool = True,
-    overviews: tuple = (),
-) -> str:
+def save_tiled(tc: TiledCube, path: str, overviews: tuple = ()) -> str:
     """Persist the tiled layout as partitioned parquet + a metadata
     sidecar — the storage tier, not just an in-memory transform.
 
@@ -1278,10 +1273,8 @@ def save_tiled(
         if tc.schema.time_axis is None
         else [t.isoformat() for t in tc.schema.time_axis],
     }
-    w = tc.df.write.mode("overwrite")
-    if partition_by_band:
-        w = w.partitionBy(BAND)
-    w.parquet(path)  # base write first: overwrite clears the dir
+    # base write first: overwrite clears the dir
+    tc.df.write.mode("overwrite").partitionBy(BAND).parquet(path)
     # base sidecar BEFORE the level builds (round 16): the levels are
     # built from the JUST-WRITTEN store via load_tiled — a parquet scan
     # of exactly tc's rows — instead of re-executing tc's whole pack
@@ -1289,9 +1282,7 @@ def save_tiled(
     # pack N times for N levels).
     with open(os.path.join(path, "_tiled_meta.json"), "w") as fh:
         json.dump(meta, fh)
-    built = _build_overview_levels(
-        tc.df.sparkSession, path, overviews, partition_by_band
-    )
+    built = _build_overview_levels(tc.df.sparkSession, path, overviews)
     if built:
         meta["overviews"] = built
         with open(os.path.join(path, "_tiled_meta.json"), "w") as fh:
@@ -1299,10 +1290,7 @@ def save_tiled(
     return path
 
 
-def _build_overview_levels(
-    spark, path: str, levels, partition_by_band: bool = True,
-    existing=(),
-) -> list:
+def _build_overview_levels(spark, path: str, levels, existing=()) -> list:
     """Build overview stores under ``path/_overviews/L{k}`` from the
     STORED base, cascading level k from the COARSEST finer level j
     (just built or already stored, ``existing``) whenever the composed
@@ -1343,7 +1331,7 @@ def _build_overview_levels(
         if ov is None:
             continue
         lv_path = os.path.join(path, "_overviews", f"L{k}")
-        save_tiled(ov, lv_path, partition_by_band)
+        save_tiled(ov, lv_path)
         built.append(k)
         sources[k] = None
     return built
@@ -1908,7 +1896,11 @@ def apply_kernel_tiled_layout(
                 w = kmat[dy, dx]
                 if w == 0.0:
                     continue
-                acc += w * filled[dy:dy + T, dx:dx + T]
+                # true convolution, as the long apply_kernel and
+                # scipy.ndimage.convolve: out[c] += k[o] * in[c − o]
+                # with o = (dy − ry, dx − rx); canvas row = pixel + ry
+                sy, sx = 2 * ry - dy, 2 * rx - dx
+                acc += w * filled[sy:sy + T, sx:sx + T]
         acc *= fac
         center = canvas[ry:ry + T, rx:rx + T]
         acc[np.isnan(center)] = np.nan
@@ -2279,7 +2271,6 @@ def merge_cubes_tiled(
     tc1: TiledCube,
     tc2: TiledCube,
     overlap_resolver=None,
-    assume_disjoint: bool = False,
 ) -> TiledCube:
     """``merge_cubes`` natively on tiles — the long operator's decision
     table (``operators/merge.py``; reference
@@ -2335,7 +2326,7 @@ def merge_cubes_tiled(
             "merge_cubes_tiled: partially overlapping band sets unsupported"
         )
     if overlap_resolver is None:
-        if assume_disjoint or _times_disjoint(
+        if _times_disjoint(
             Cube(tc1.df, tc1.schema), Cube(tc2.df, tc2.schema)
         ):
             return TiledCube(
@@ -3719,7 +3710,7 @@ def _retile_python(
     (mapInPandas) + canvas assembly (applyInPandas). Kept for Tt != T
     (merge_cubes auto-retile, cross-edge resample); the same-edge
     window case dispatches to :func:`_retile_same_edge_jvm` (also the
-    scratch/filter_bbox_ab.py A/B's slow leg)."""
+    slow leg of the filter_bbox A/B recorded in PLANS.md)."""
     from typing import Iterator
 
     import numpy as np

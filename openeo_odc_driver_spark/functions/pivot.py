@@ -24,11 +24,3 @@ def bands_wide(cube: Cube, bands: Sequence[str] | None = None) -> DataFrame:
         F.max(F.when(F.col(BAND) == b, F.col(VALUE))).alias(b) for b in bands
     ]
     return cube.df.groupBy(*group).agg(*aggs)
-
-
-def bands_wide_sql(bands: Sequence[str], source: str = "cube") -> str:
-    """The DuckDB-oracle twin of :func:`bands_wide` (same semantics)."""
-    aggs = ", ".join(
-        f"max(CASE WHEN band = '{b}' THEN value END) AS {b.lower()}" for b in bands
-    )
-    return f"SELECT time, y, x, {aggs} FROM {source} GROUP BY time, y, x"

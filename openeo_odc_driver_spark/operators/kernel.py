@@ -1,19 +1,17 @@
 """`apply_kernel` — 2-D spatial convolution per (band, time)
 (openeo_odc_driver.py:1385-1418).
 
-Two physical strategies:
-
-- :func:`apply_kernel` (default): **shift-and-sum join**. Explode the
-  kernel's (dy, dx, w) triples (a tiny literal array), shift each pixel's
-  index by the offset, and group back on the shifted key summing
-  ``w * value``. Entirely JVM-side expressions + one shuffle; works for
-  the small kernels typical of openEO (3×3 … 7×7). Border mode
-  ``constant 0`` ≙ zero padding (missing neighbors contribute 0, and the
-  divisor stays the full kernel sum).
-- :func:`apply_kernel_tiled`: `applyInPandas` per spatial tile with a halo
-  — the scale path for big kernels, where the join fan-out (k² rows per
-  pixel) would dominate. Tiles carry `halo = kernel_radius` ghost pixels,
-  numpy does the stencil per tile. Preferred at 100 TB for k ≥ 7.
+:func:`apply_kernel` is the long-format convolution: a **shift-and-sum
+join**. Explode the kernel's (dy, dx, w) triples (a tiny literal array),
+shift each pixel's index by the offset, and group back on the shifted key
+summing ``w * value``. Entirely JVM-side expressions + one shuffle; works
+for the small kernels typical of openEO (3×3 … 7×7). Border mode
+``constant 0`` ≙ zero padding (missing neighbors contribute 0, and the
+divisor stays the full kernel sum). The clamp/mirror border modes take a
+gather join instead. The scale path for big kernels, where the join
+fan-out (k² rows per pixel) would dominate, is the tile tier's halo-strip
+stencil (``core/tiled.py::apply_kernel_tiled_layout``), which the planner
+picks for tiled graphs.
 
 Intentional divergence from the reference: nodata (NULL) *center* pixels
 stay NULL here, while the reference ``fillna``s the cube before convolving
@@ -28,7 +26,7 @@ from typing import Sequence
 
 from pyspark.sql import functions as F
 
-from ..core.cube import BAND, TIME, VALUE, X, Y, Cube
+from ..core.cube import VALUE, X, Y, Cube
 
 
 def apply_kernel(
@@ -54,7 +52,8 @@ def apply_kernel(
       express relationally — each target instead explodes its k² source
       indices through the same remap as the tiled path and equi-joins
       the cube back. Two shuffles instead of one; identical semantics to
-      ``apply_kernel_tiled`` (cross-parity tested).
+      the tile tier's ``apply_kernel_tiled_layout`` (cross-parity
+      tested).
     """
     if border in ("replicate", "reflect", "reflect_pixel"):
         return _apply_kernel_gather(cube, kernel, factor, border)
@@ -142,8 +141,8 @@ def apply_kernel(
 
 
 def _remap_idx(idx: F.Column, m: F.Column, border: str) -> F.Column:
-    """Out-of-scene index remap, the Catalyst twin of the tiled path's
-    numpy ``remap`` (same three modes, same arithmetic)."""
+    """Out-of-scene index remap for the clamp/mirror border modes (the
+    same arithmetic as the tile tier's numpy remap)."""
     if border == "replicate":
         return F.greatest(F.lit(0).cast("long"), F.least(idx, m))
     if border == "reflect":  # edge-inclusive mirror
@@ -166,7 +165,7 @@ def _apply_kernel_gather(
     target pixel explodes its k² (remapped) source indices and the cube
     joins back on the source key. One explode + one equi-join shuffle +
     one aggregation; NULL/absent sources contribute 0 and NULL centers
-    stay NULL (same contract as the scatter and tiled paths)."""
+    stay NULL (same contract as the scatter path and the tile tier)."""
     grid = cube.schema.grid
     if grid is None:
         raise ValueError("apply_kernel needs a GridSpec")
@@ -231,138 +230,3 @@ def _apply_kernel_gather(
         .select(*cube.key_dims, VALUE)
     )
     return cube.with_df(out)
-
-
-def apply_kernel_tiled(
-    cube: Cube,
-    kernel: Sequence[Sequence[float]],
-    factor: float = 1.0,
-    tile: int = 256,
-    border: str = "constant",
-) -> Cube:
-    """Halo-exchange stencil: duplicate each pixel into the (≤4) tiles whose
-    halo covers it, then convolve per tile in numpy via applyInPandas.
-
-    Border modes at the **scene** edge (the reference maps openEO modes to
-    scipy, openeo_odc_driver.py:1405): ``constant`` (0), ``replicate``
-    (clamp), ``reflect`` (edge-inclusive mirror), ``reflect_pixel``
-    (edge-exclusive mirror). Scene extent arrives as a broadcast scalar
-    agg — no driver action, and the remap happens on local tile indices
-    (the needed source rows are always inside the tile+halo window).
-    ``wrap`` needs the opposite scene edge, which breaks tile locality —
-    explicitly unsupported."""
-    import numpy as np
-    import pandas as pd
-
-    if border not in ("constant", 0, "0", "replicate", "reflect", "reflect_pixel"):
-        raise NotImplementedError(
-            f"border mode {border!r}: wrap needs the opposite scene edge, "
-            "which breaks tile locality — use the shift-and-sum strategy "
-            "(apply_kernel, operators/kernel.py:34), which supports wrap"
-        )
-    grid = cube.schema.grid
-    if grid is None:
-        raise ValueError("apply_kernel_tiled needs a GridSpec")
-    k = np.asarray(kernel, dtype="float64")
-    ry, rx = k.shape[0] // 2, k.shape[1] // 2
-    halo = max(ry, rx)
-    x_idx = ((F.col(X) - F.lit(grid.x0)) / F.lit(grid.resx)).cast("long")
-    y_idx = ((F.lit(grid.y0) - F.col(Y)) / F.lit(grid.resy)).cast("long")
-    group = [d for d in cube.key_dims if d not in (X, Y)]
-
-    # a pixel belongs to its own tile plus any neighbor tile whose halo
-    # region it falls into: generate candidate tile ids via explode
-    cand = F.array(*[F.lit(i) for i in (-1, 0, 1)])
-    df = (
-        cube.df.withColumn("_xi", x_idx)
-        .withColumn("_yi", y_idx)
-        .select("*", F.explode(cand).alias("_dtx"))
-        .select("*", F.explode(cand).alias("_dty"))
-        .withColumn("_tx", F.floor(F.col("_xi") / tile) + F.col("_dtx"))
-        .withColumn("_ty", F.floor(F.col("_yi") / tile) + F.col("_dty"))
-        .where(
-            (F.col("_xi") >= F.col("_tx") * tile - halo)
-            & (F.col("_xi") < (F.col("_tx") + 1) * tile + halo)
-            & (F.col("_yi") >= F.col("_ty") * tile - halo)
-            & (F.col("_yi") < (F.col("_ty") + 1) * tile + halo)
-        )
-        .drop("_dtx", "_dty")
-    )
-    if border not in ("constant", 0, "0"):
-        extent = cube.df.agg(
-            F.max(x_idx).alias("_nxm"), F.max(y_idx).alias("_nym")
-        )
-        df = df.join(F.broadcast(extent))
-
-    schema_fields = ", ".join(
-        [f"{d} {'string' if d == BAND else 'timestamp' if d == TIME else 'double'}"
-         for d in group]
-        + ["y double", "x double", "value double"]
-    )
-    x0, y0, resx, resy = grid.x0, grid.y0, grid.resx, grid.resy
-
-    def conv_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        tx = int(pdf["_tx"].iloc[0])
-        ty = int(pdf["_ty"].iloc[0])
-        xi0, yi0 = tx * tile - halo, ty * tile - halo
-        w = tile + 2 * halo
-        arr = np.full((w, w), np.nan)
-        lx = (pdf["_xi"] - xi0).to_numpy()
-        ly = (pdf["_yi"] - yi0).to_numpy()
-        arr[ly, lx] = pdf["value"].to_numpy()
-        filled = np.nan_to_num(arr, nan=0.0)
-        if border not in ("constant", 0, "0"):
-            # remap out-of-scene halo cells per the border mode (the
-            # mapped source row/col is always inside this tile's window)
-            nym, nxm = int(pdf["_nym"].iloc[0]), int(pdf["_nxm"].iloc[0])
-
-            def remap(g, m_idx):
-                if border == "replicate":
-                    g = np.clip(g, 0, m_idx)
-                elif border == "reflect":
-                    g = np.where(g < 0, -g - 1, g)
-                    g = np.where(g > m_idx, 2 * m_idx + 1 - g, g)
-                else:  # reflect_pixel
-                    g = np.where(g < 0, -g, g)
-                    g = np.where(g > m_idx, 2 * m_idx - g, g)
-                return g
-
-            rows = np.clip(remap(yi0 + np.arange(w), nym) - yi0, 0, w - 1)
-            cols = np.clip(remap(xi0 + np.arange(w), nxm) - xi0, 0, w - 1)
-            filled = filled[rows[:, None], cols[None, :]]
-        out = np.zeros_like(filled)
-        for dy in range(k.shape[0]):
-            for dx in range(k.shape[1]):
-                wgt = k[dy, dx]
-                if wgt == 0:
-                    continue
-                sy, sx = dy - ry, dx - rx
-                # true convolution: out[c] += w[o] * in[c − o], matching the
-                # shift-and-sum join path and scipy.ndimage.convolve — roll
-                # by +s so src[c] = in[c − s]
-                src = np.roll(np.roll(filled, sy, axis=0), sx, axis=1)
-                # zero out wrapped edges
-                if sy > 0:
-                    src[:sy, :] = 0
-                elif sy < 0:
-                    src[sy:, :] = 0
-                if sx > 0:
-                    src[:, :sx] = 0
-                elif sx < 0:
-                    src[:, sx:] = 0
-                out += wgt * src
-        out = np.where(np.isnan(arr), np.nan, out * factor)
-        core = pdf[
-            (pdf["_xi"] >= tx * tile)
-            & (pdf["_xi"] < (tx + 1) * tile)
-            & (pdf["_yi"] >= ty * tile)
-            & (pdf["_yi"] < (ty + 1) * tile)
-        ]
-        res = core[group].copy() if group else pd.DataFrame(index=core.index)
-        res["y"] = y0 - resy * core["_yi"]
-        res["x"] = x0 + resx * core["_xi"]
-        res["value"] = out[(core["_yi"] - yi0).to_numpy(), (core["_xi"] - xi0).to_numpy()]
-        return res
-
-    out = df.groupBy(*group, "_tx", "_ty").applyInPandas(conv_tile, schema_fields)
-    return cube.with_df(out.select(*cube.key_dims, VALUE))

@@ -15,11 +15,11 @@ Decision table (encoded in tests/test_merge.py):
 5. x,y-only cubes always need a resolver (:1260-1264).
 
 Band disjointness is schema metadata (no job); time disjointness the
-reference learns from in-memory coords. Here, in priority order:
-``assume_disjoint=True`` (caller assertion), the schemas' plan-time
-``time_extent`` bounds (populated at load / filter_temporal — comparing
-two [lo, hi] pairs costs nothing), and only when both extents overlap or
-are unknown, a key-overlap probe (an O(distinct-times) action on two
+reference learns from in-memory coords. Here, in priority order: the
+schemas' plan-time ``time_extent`` bounds (populated at load /
+filter_temporal — comparing two [lo, hi] pairs costs nothing), the
+plan-time ``time_axis`` sets, and only when neither decides, a
+key-overlap probe (an O(distinct-times) action on two
 aggregated scans). At 100 TB the extent path means merge_cubes builds
 its plan with ZERO jobs in the common case.
 """
@@ -37,7 +37,6 @@ def merge_cubes(
     cube1: Cube,
     cube2: Cube,
     overlap_resolver: Optional[Callable[[Column, Column], Column]] = None,
-    assume_disjoint: bool = False,
 ) -> Cube:
     b1, b2 = set(cube1.schema.bands), set(cube2.schema.bands)
     e1, e2 = cube1.schema.time_extent, cube2.schema.time_extent
@@ -71,7 +70,7 @@ def merge_cubes(
         raise ValueError("merge_cubes: partially overlapping band sets unsupported")
 
     if overlap_resolver is None:
-        if assume_disjoint or _times_disjoint(cube1, cube2):
+        if _times_disjoint(cube1, cube2):
             # case 2: time-axis concat
             return Cube(cube1.df.unionByName(cube2.df), schema)
         raise ValueError("merge_cubes: overlapping cubes need an overlap_resolver")

@@ -217,9 +217,9 @@ def geocode(
     the convex hull of the chunk's samples (`LinearNDInterpolator` is
     run over zeros purely as a hull/NaN mask — 0 inside, NaN outside).
     Reproduced here without scipy: per target tile (+ the reference's
-    8-cell halo offset, geocode.py:39) collect candidate samples via the
-    same candidate-explode used by apply_kernel_tiled, then numpy does
-    monotone-chain hull + vectorized point-in-hull + blockwise nearest
+    8-cell halo offset, geocode.py:39) collect candidate samples via a
+    3×3 candidate-tile explode (each sample joins every tile whose halo
+    covers it), then numpy does monotone-chain hull + vectorized point-in-hull + blockwise nearest
     inside an applyInPandas group. Every hull-interior cell gets the
     nearest sample's value — including cells no sample snapped into,
     which the `near` path leaves empty.

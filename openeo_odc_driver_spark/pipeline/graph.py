@@ -21,14 +21,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 PR_UNIT = 1_000_000  # one rank point, in micro-units
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 PR_BASE = PR_UNIT * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN  # 150000
+PR_BROADCAST_MAX_NODES = 5_000_000  # broadcast the rank table up to this |V|
 
 
-def pagerank_integer(
-    edges: DataFrame,
-    iterations: int = 3,
-    join_impl: str = "auto",
-    broadcast_max_nodes: int = 5_000_000,
-) -> DataFrame:
+def pagerank_integer(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Weighted PageRank over directed ``(src, dst, w)`` edges in exact
     integer micro-unit arithmetic, fixed ``iterations`` rounds.
 
@@ -44,20 +40,19 @@ def pagerank_integer(
     dst-keyed rank table silently dropped src-only nodes after round
     one, erasing their later contributions).
 
-    ``join_impl`` dispatches the physical rank⋈edges strategy:
+    The physical rank⋈edges strategy follows the node universe |V|
+    (one cheap aggregate, amortized over ``iterations`` rounds):
 
-    - ``"broadcast"`` — each round broadcasts the |V|-sized rank table
-      into the edge join. Right for co-occurrence/item graphs where
-      |V| ≪ |E| and the rank table fits an executor (≲ tens of
-      millions of rows at ~16 B/row).
-    - ``"shuffle"`` — edges are hash-partitioned by ``src`` ONCE before
-      the loop; each round shuffles only the |V|-sized rank table to
-      that layout (sort-merge/shuffled-hash join), so billion-node
-      graphs never materialize a broadcast. Identical integer
-      arithmetic → bit-identical scores (parity is pytest-pinned).
-    - ``"auto"`` — counts the node universe (one cheap |V| aggregate,
-      amortized over ``iterations`` rounds) and picks broadcast iff
-      ``|V| <= broadcast_max_nodes``.
+    - broadcast, at ``|V| <= PR_BROADCAST_MAX_NODES`` — each round
+      broadcasts the |V|-sized rank table into the edge join. Right for
+      co-occurrence/item graphs where |V| ≪ |E| and the rank table
+      fits an executor (≲ tens of millions of rows at ~16 B/row).
+    - shuffle, above it — edges are hash-partitioned by ``src`` ONCE
+      before the loop; each round shuffles only the |V|-sized rank
+      table to that layout (sort-merge/shuffled-hash join), so
+      billion-node graphs never materialize a broadcast. Identical
+      integer arithmetic → bit-identical scores (parity is
+      pytest-pinned).
 
     Plan shape at scale: each round is ONE join of edges against the
     rank×degree side plus one integer aggregation keyed by dst; the
@@ -67,12 +62,17 @@ def pagerank_integer(
     (the oracle unrolls the same rounds as CTEs), not a convergence
     loop.
     """
+    return _pagerank(edges, iterations, broadcast=None)
+
+
+def _pagerank(
+    edges: DataFrame, iterations: int, broadcast: bool | None
+) -> DataFrame:
+    """:func:`pagerank_integer` with the join regime pinned by a bool
+    ``broadcast`` (the copurchase gate rows cover each regime at
+    fixture scale); ``None`` picks it from |V|."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if join_impl not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(
-            f"join_impl must be auto|broadcast|shuffle, got {join_impl!r}"
-        )
     # Iterative-algorithm lineage discipline (round-15 optimization):
     # every reference to `e` / `nodes` inside the unrolled loop embeds
     # its whole upstream subtree into the plan — for a derived edge
@@ -97,10 +97,8 @@ def pagerank_integer(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    if join_impl == "auto":
-        join_impl = (
-            "broadcast" if nodes.count() <= broadcast_max_nodes else "shuffle"
-        )
+    if broadcast is None:
+        broadcast = nodes.count() <= PR_BROADCAST_MAX_NODES
     # NOTE: `e` stays LAZY in both regimes. Checkpointing it was A/B'd
     # and REGRESSED the shuffle regime 2.8× (35.1 s vs 12.6 s best,
     # interleaved): a localCheckpoint scan has no outputPartitioning, so
@@ -109,7 +107,7 @@ def pagerank_integer(
     # reuse materializes once. With edges/nodes checkpointed above, the
     # lazy `e` subtree is one shallow groupBy+join over an in-memory
     # scan — the lineage blow-up is already gone.
-    if join_impl == "broadcast":
+    if broadcast:
         e = edges.join(F.broadcast(deg), "src")
         _small = F.broadcast  # the build side of each round's two joins
     else:

@@ -1,19 +1,16 @@
 """Multimodal column plumbing: image/audio/video as opaque `binary` columns
 with typed metadata, processed by Arrow-batched pandas UDFs.
 
-The IMAGE decode step is REAL for PNG: `decode_image(fake=False)` parses
+The IMAGE decode step is REAL for PNG: `decode_image` parses
 PNG payloads with the repo's pure-stdlib codec (`..sinks.png`, zlib +
 struct — the same encoder the PNG sink uses), and `attach_png_images`
 synthesizes genuine PNG payloads, and REAL for baseline JPEG:
-`decode_image(fake=False)` dispatches on magic bytes to the pure-numpy
+`decode_image` dispatches on magic bytes to the pure-numpy
 T.81 codec (`.jpeg` — Annex-K tables, vectorized 8×8 DCT), and
 `attach_jpeg_images` synthesizes genuine JFIF payloads; round 10 adds
 `attach_webp_images` (real VP8L lossless). Lossy VP8 remains
-the documented library boundary (no PIL/cv2 in this container):
-`fake=True` keeps the deterministic hash-seeded decoder for opaque
-payloads, so the Spark-side plumbing (schema, batch shape, partition
-sizing, UDF signatures) is exercised regardless of codec availability.
-The AUDIO decode step is REAL: `decode_audio(fake=False)` parses RIFF/WAV
+the documented library boundary (no PIL/cv2 in this container).
+The AUDIO decode step is REAL: `decode_audio` parses RIFF/WAV
 (PCM16) with the stdlib `wave` module, and `attach_wav_audio` synthesizes
 genuine WAV payloads with the stdlib encoder.
 
@@ -33,9 +30,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-IMAGE_META_SCHEMA = "width int, height int, channels int, format string"
-
-
 def attach_fake_images(docs: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
     """Fixture adapter: derive a deterministic binary 'image' column from
     document text (content-addressed fake payload) + typed metadata."""
@@ -49,12 +43,6 @@ def attach_fake_images(docs: DataFrame, width: int = 32, height: int = 32) -> Da
             F.lit("fake-rgb").alias("format"),
         ).alias("image_meta"),
     )
-
-
-def _fake_decode(payload: bytes, width: int, height: int) -> np.ndarray:
-    seed = int.from_bytes(payload[:8], "big", signed=False) % (2**32)
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(height, width, 3), dtype=np.uint8)
 
 
 def _synth_rgb(seed: int, width: int, height: int) -> np.ndarray:
@@ -172,16 +160,15 @@ def attach_webp_images(docs: DataFrame, width: int = 32,
     )
 
 
-def decode_image(df: DataFrame, fake: bool = True) -> DataFrame:
+def decode_image(df: DataFrame) -> DataFrame:
     """binary → decoded pixel stats via mapInPandas (Arrow batches).
 
-    ``fake=False`` is a **real decoder**, dispatched on the payload's
+    A **real decoder**, dispatched on the payload's
     magic bytes: PNG (``\\x89PNG``, pure-stdlib codec in ``..sinks.png``),
     baseline JPEG (``\\xff\\xd8``, pure numpy codec in ``.jpeg``) and
     lossless WebP (``RIFF..WEBP``, pure-Python VP8L codec in ``.webp`` —
     round 10; lossy VP8 remains the one documented non-goal) — no
-    third-party image library anywhere. ``fake=True`` keeps the
-    hash-seeded deterministic path for opaque payloads.
+    third-party image library anywhere.
     """
     out_schema = (
         "doc_id long, width int, height int, mean_r double, mean_g double, "
@@ -192,13 +179,8 @@ def decode_image(df: DataFrame, fake: bool = True) -> DataFrame:
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
-                if fake:
-                    w = int(r["image_meta"]["width"])
-                    h = int(r["image_meta"]["height"])
-                    arr = _fake_decode(bytes(r["image"]), w, h)  # (h, w, 3)
-                else:
-                    arr = _decode_rgb(bytes(r["image"]))  # (h, w, 3)
-                    h, w = arr.shape[:2]
+                arr = _decode_rgb(bytes(r["image"]))  # (h, w, 3)
+                h, w = arr.shape[:2]
                 means = arr.reshape(-1, arr.shape[-1]).mean(axis=0)
                 rows.append(
                     (r["doc_id"], w, h, float(means[0]), float(means[1]),
@@ -314,25 +296,6 @@ def image_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(feat_batch, out_schema)
 
 
-AUDIO_META_SCHEMA = "sample_rate int, n_samples int, channels int, format string"
-
-
-def attach_fake_audio(docs: DataFrame, sample_rate: int = 16000,
-                      n_samples: int = 4096) -> DataFrame:
-    """Fixture adapter: deterministic binary 'audio' column + typed
-    metadata (same content-addressed scheme as the image path)."""
-    return docs.select(
-        "doc_id",
-        F.unhex(F.md5("text")).alias("audio"),
-        F.struct(
-            F.lit(sample_rate).alias("sample_rate"),
-            F.lit(n_samples).alias("n_samples"),
-            F.lit(1).alias("channels"),
-            F.lit("fake-pcm").alias("format"),
-        ).alias("audio_meta"),
-    )
-
-
 def synth_wav_bytes(seed: int, sample_rate: int = 8000,
                     n_samples: int = 2048) -> bytes:
     """Deterministic mono PCM16 RIFF/WAV: a seed-pitched sine plus seeded
@@ -389,14 +352,12 @@ def _check_pcm16_mono(w, doc_id) -> None:
         )
 
 
-def decode_audio(df: DataFrame, fake: bool = True) -> DataFrame:
+def decode_audio(df: DataFrame) -> DataFrame:
     """binary → waveform features via mapInPandas (Arrow batches): RMS,
     peak, zero-crossing rate, duration.
 
-    ``fake=False`` is a **real decoder**: stdlib ``wave`` + numpy parse
-    RIFF/WAV (PCM16) payloads — no third-party codec needed. ``fake=True``
-    keeps the hash-seeded synthetic path (the image-style stub) for
-    payloads that aren't WAV."""
+    A **real decoder**: stdlib ``wave`` + numpy parse RIFF/WAV (PCM16)
+    payloads — no third-party codec needed."""
     out_schema = (
         "doc_id long, duration_s double, rms double, peak double, "
         "zero_crossing_rate double"
@@ -409,20 +370,14 @@ def decode_audio(df: DataFrame, fake: bool = True) -> DataFrame:
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
-                if fake:
-                    sr = int(r["audio_meta"]["sample_rate"])
-                    n = int(r["audio_meta"]["n_samples"])
-                    seed = int.from_bytes(bytes(r["audio"])[:8], "big") % (2 ** 32)
-                    wave_f = np.random.default_rng(seed).normal(0.0, 0.25, size=n)
-                else:
-                    with _wave.open(io.BytesIO(bytes(r["audio"])), "rb") as w:
-                        _check_pcm16_mono(w, r["doc_id"])
-                        sr = w.getframerate()
-                        n = w.getnframes()
-                        raw = w.readframes(n)
-                    wave_f = (
-                        np.frombuffer(raw, dtype="<i2").astype("float64") / 32768.0
-                    )
+                with _wave.open(io.BytesIO(bytes(r["audio"])), "rb") as w:
+                    _check_pcm16_mono(w, r["doc_id"])
+                    sr = w.getframerate()
+                    n = w.getnframes()
+                    raw = w.readframes(n)
+                wave_f = (
+                    np.frombuffer(raw, dtype="<i2").astype("float64") / 32768.0
+                )
                 zc = float(np.mean(np.abs(np.diff(np.signbit(wave_f)))))
                 rows.append(
                     (r["doc_id"], n / sr, float(np.sqrt(np.mean(wave_f ** 2))),
@@ -454,7 +409,7 @@ def audio_spectral_features(df: DataFrame, rolloff: float = 0.85,
     pixels.
 
     Arrow-batched mapInPandas over the RIFF/WAV payloads (stdlib
-    ``wave`` + numpy, the decode_audio(fake=False) path); only the
+    ``wave`` + numpy, the decode_audio path); only the
     feature rows leave the executor — at scale the plan is the same
     zero-exchange scan-fused shape as every other multimodal op.
     Deterministic: rFFT of a deterministic payload; fixed-value oracle

@@ -264,7 +264,6 @@ def lsh_bucket_ann(
     k: int = 5,
     n_planes: int = 8,
     dim: int = 64,
-    multiprobe: bool = True,
     probe_bits: int = 1,
 ) -> DataFrame:
     """ANN via random-hyperplane LSH: bucket = sign-bit signature;
@@ -291,9 +290,8 @@ def lsh_bucket_ann(
     ).withColumn("_b0", lsh_bucket_col("q_emb", n_planes, dim)).withColumn(
         "q_norm", norm_expr("q_emb")
     )
-    # probe_bits=0 means "own bucket only" (≙ multiprobe=False); the
-    # legacy bool is kept for callers that predate the depth knob
-    depth = 0 if not multiprobe else max(0, probe_bits)
+    # probe_bits=0 probes the own bucket only
+    depth = max(0, probe_bits)
     from itertools import combinations
 
     masks = [0]
@@ -832,7 +830,7 @@ def assign_nearest_centroid_foldexact(
     return embeddings.select(*cols)
 
 
-VECTORIZE_K_THRESHOLD = 64  # auto assign dispatch: fold below, matmul at/above
+VECTORIZE_K_THRESHOLD = 64  # assignment engine: fold below, matmul at/above
 
 
 def centroids_for_corpus(
@@ -861,11 +859,18 @@ def centroids_for_corpus(
     return max(min_centroids, min(max_centroids, need))
 
 
+def _vectorize(k: int) -> bool:
+    """The centroid-assignment engine for ``k`` centroids: the Arrow
+    matmul of :func:`assign_nearest_centroid_vectorized` at or above
+    ``VECTORIZE_K_THRESHOLD``, the fold semantics of
+    :func:`assign_nearest_centroid_foldexact` below it."""
+    return k >= VECTORIZE_K_THRESHOLD
+
+
 def _semdedup_members(
     embeddings: DataFrame,
     n_centroids: int | None,
     centroids: DataFrame | None,
-    assign_impl: str,
 ) -> DataFrame:
     """The centroid assignment of :func:`semantic_dedup_clusters`:
     ``(cluster_id, vec_id, embedding, e_norm)`` per vector, before the
@@ -873,23 +878,15 @@ def _semdedup_members(
     if centroids is None:
         if n_centroids is None:
             n_centroids = centroids_for_corpus(embeddings.count())
-        k_known = n_centroids
+        k = n_centroids
         centroids = embeddings.where(F.col("vec_id") < n_centroids).select(
             F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_emb")
         )
     else:
-        k_known = None
-    if assign_impl == "auto":
         # the centroid table is k rows (it gets collected/broadcast
         # either way), so counting it to pick the engine is free
-        k = k_known if k_known is not None else centroids.count()
-        assign_impl = "vectorized" if k >= VECTORIZE_K_THRESHOLD else "fold"
-    if assign_impl not in ("fold", "vectorized"):
-        raise ValueError(
-            f"assign_impl must be 'auto', 'fold' or 'vectorized', "
-            f"got {assign_impl!r}"
-        )
-    if assign_impl == "vectorized":
+        k = centroids.count()
+    if _vectorize(k):
         return assign_nearest_centroid_vectorized(embeddings, centroids)
     # fold SEMANTICS, numpy execution (round-16, guide §4.2): the
     # interpreted per-(row, centroid) fold dominated the small-k
@@ -910,7 +907,6 @@ def semantic_dedup_clusters(
     n_centroids: int | None = None,
     threshold: float = 0.95,
     centroids: DataFrame | None = None,
-    assign_impl: str = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication census: partition vectors by
     nearest pseudo-centroid, then inside each cluster drop any vector
@@ -933,18 +929,16 @@ def semantic_dedup_clusters(
     clusters split under AQE; the join is shuffle-partitioned by
     cluster id.
 
-    ``assign_impl`` picks the centroid-assignment engine; the shipped
-    default is ``"auto"`` (round 7): fold expressions below
-    ``VECTORIZE_K_THRESHOLD`` centroids, the Arrow matmul of
-    :func:`assign_nearest_centroid_vectorized` at or above it — the
-    fold path is interpreted per (row, centroid) (measured 17 s → 4 s
-    at 20k×160, the gap linear in k), so SemDeDup-scale k is only
-    reachable vectorized, while small k stays on the exchange-free
-    fold plan whose floats the DuckDB oracle reproduces bit-exactly.
-    Pass ``"fold"`` / ``"vectorized"`` to pin an engine (the small-k
-    gate rows pin fold; the ulp caveat on the vectorized path is in
-    its docstring, and fold ≡ vectorized is pinned on the fixture at
-    20k×160 by tests/test_round6_ops.py).
+    The centroid-assignment engine follows k (round 7): fold
+    expressions below ``VECTORIZE_K_THRESHOLD`` centroids, the Arrow
+    matmul of :func:`assign_nearest_centroid_vectorized` at or above it
+    — the fold path is interpreted per (row, centroid) (measured 17 s →
+    4 s at 20k×160, the gap linear in k), so SemDeDup-scale k is only
+    reachable vectorized, while small k stays on the fold semantics
+    whose floats the DuckDB oracle reproduces bit-exactly (the ulp
+    caveat on the vectorized path is in its docstring, and fold ≡
+    vectorized is pinned on the fixture at 300×24 by
+    tests/test_round6_ops.py).
     """
     # Round-15 optimization (guide §3.3/§5, the pagerank/kmeans
     # discipline): `members` feeds BOTH sides of the pairwise self-join
@@ -959,7 +953,7 @@ def semantic_dedup_clusters(
     # separate per-invocation barrier job (the r15 eager barrier cost
     # semantic_dedup_auto ~1.6 s at sf0.1, driver best-of-n).
     members = _semdedup_members(
-        embeddings, n_centroids, centroids, assign_impl
+        embeddings, n_centroids, centroids
     ).localCheckpoint(eager=False)
     a = members.select(
         "cluster_id", F.col("vec_id").alias("vid_a"),
@@ -999,7 +993,6 @@ def kmeans_train(
     k: int = 16,
     iters: int = 3,
     quant: int = 6,
-    assign_impl: str = "auto",
 ) -> DataFrame:
     """Spherical k-means (Lloyd) centroid training — the real-centroid
     path that :func:`ivf_flat_ann` / :func:`semantic_dedup_clusters`
@@ -1024,8 +1017,8 @@ def kmeans_train(
     scored crossJoin), at/above it via
     :func:`assign_nearest_centroid_vectorized` (one Arrow matmul per
     batch — the fold is interpreted per (row, centroid) and Lloyd pays
-    it every iteration; ``assign_impl`` pins an engine, same contract
-    as :func:`semantic_dedup_clusters`; the per-iteration coordinate
+    it every iteration; the same engine choice as
+    :func:`semantic_dedup_clusters`; the per-iteration coordinate
     quantization absorbs the matmul's last-ulp summation-order noise
     before it can flip a later assignment, double-run-checked at
     fixture capture); then posexplode +
@@ -1079,16 +1072,8 @@ def kmeans_train(
 
     emb_n = embeddings.withColumn("e_norm", norm_expr("embedding"))
 
-    if assign_impl == "auto":
-        assign_impl = "vectorized" if k >= VECTORIZE_K_THRESHOLD else "fold"
-    if assign_impl not in ("fold", "vectorized"):
-        raise ValueError(
-            f"assign_impl must be 'auto', 'fold' or 'vectorized', "
-            f"got {assign_impl!r}"
-        )
-
     for _ in range(iters):
-        if assign_impl == "vectorized":
+        if _vectorize(k):
             assigned = assign_nearest_centroid_vectorized(
                 emb_n, cents_df(), out_col="cent_id"
             ).select("vec_id", "embedding", "cent_id")

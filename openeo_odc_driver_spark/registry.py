@@ -45,7 +45,7 @@ from .operators.dimops import (
     rename_labels,
 )
 from .operators.filters import filter_bands, filter_bbox, filter_spatial, filter_temporal
-from .operators.kernel import apply_kernel, apply_kernel_tiled
+from .operators.kernel import apply_kernel
 from .operators.mask import mask
 from .operators.merge import merge_cubes
 from .operators.reducers import quantiles, reduce_dimension
@@ -837,13 +837,20 @@ def _apply_kernel(spark, sf_dir):
 
 @q("apply_kernel_tiled", _KERNEL_ORACLE)
 def _apply_kernel_tiled(spark, sf_dir):
-    """Same semantics through the halo-tile strategy — parity between both
-    physical plans is itself part of the check. tile=16 here: one tile
-    per (band,time) at fixture scale keeps the pandas-group count (and
-    Arrow round-trip overhead) proportionate; real scenes use the default
-    256 (tests cover tile=4/8 cross-tile halos)."""
-    return apply_kernel_tiled(
-        synthetic_cube(spark), _KERNEL, factor=_KERNEL_FACTOR, tile=16
+    """Same semantics through the tile tier's halo-strip stencil
+    (core/tiled.py: apply_kernel_tiled_layout) round-tripped through
+    the packed layout — parity between both physical plans is itself
+    part of the check. tile=16 here: one tile per (band,time) at
+    fixture scale, the scene edge handled by the stencil's own border;
+    tiled_apply_kernel covers cross-tile halos at tile=8."""
+    from .core.tiled import apply_kernel_tiled_layout, from_tiled, to_tiled
+
+    return from_tiled(
+        apply_kernel_tiled_layout(
+            to_tiled(synthetic_cube(spark), tile=16, n_y=16, n_x=16),
+            _KERNEL,
+            factor=_KERNEL_FACTOR,
+        )
     ).df
 
 
@@ -1054,8 +1061,8 @@ def _tiled_apply_kernel(spark, sf_dir):
     """Convolution natively on tiles (core/tiled.py:
     apply_kernel_tiled_layout — halo exchange, 9× tile shuffle
     independent of kernel size, numpy stencil per target tile) against
-    the same oracle as the long-format scatter and gather plans: three
-    physical strategies, one pinned semantics. tile=8 forces real
+    the same oracle as the long-format scatter and gather plans: one
+    pinned semantics across the physical strategies. tile=8 forces real
     cross-tile halos on the 16×16 scene."""
     from .core.tiled import apply_kernel_tiled_layout, from_tiled, to_tiled
 
@@ -1477,16 +1484,16 @@ def _kernel_border_sweep_oracle(modes) -> str:
 )
 def _apply_kernel_border_sweep(spark, sf_dir):
     """Round-13 consolidation (was 3 gate rows): the long-tier border
-    modes, each through its own physical strategy — replicate/reflect
-    via the halo-tile path (apply_kernel_tiled, tile=16), wrap via the
-    shift-and-sum scatter (receiving cell modulo scene dims; reference
-    maps all three to scipy, openeo_odc_driver.py:1405) — joined per
-    pixel into one sweep row against per-mode convolution CTEs."""
+    modes, each through the physical strategy the planner runs for it —
+    replicate/reflect via the gather join, wrap via the shift-and-sum
+    scatter (receiving cell modulo scene dims; reference maps all three
+    to scipy, openeo_odc_driver.py:1405) — joined per pixel into one
+    sweep row against per-mode convolution CTEs."""
     cube = synthetic_cube(spark)
     out = None
     for mode in ("replicate", "reflect"):
-        d = apply_kernel_tiled(
-            cube, _KERNEL, factor=_KERNEL_FACTOR, tile=16, border=mode
+        d = apply_kernel(
+            cube, _KERNEL, factor=_KERNEL_FACTOR, border=mode
         ).df.withColumnRenamed(VALUE, mode)
         out = d if out is None else out.join(d, ["band", "time", "y", "x"])
     w = apply_kernel(
@@ -1913,9 +1920,7 @@ def _merge_bands(spark, sf_dir):
 )
 def _merge_time(spark, sf_dir):
     return merge_cubes(
-        synthetic_cube(spark),
-        synthetic_cube(spark, SPEC_B_TIMES),
-        assume_disjoint=True,
+        synthetic_cube(spark), synthetic_cube(spark, SPEC_B_TIMES)
     ).df
 
 

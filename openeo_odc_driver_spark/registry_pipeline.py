@@ -650,14 +650,14 @@ def _fingerprint(spark, sf_dir):
 def _multimodal(spark, sf_dir):
     """REAL stdlib-PNG round-trip: attach_png_images synthesizes RGB8 PNG
     payloads with the pure-stdlib encoder (sinks/png.py), and
-    decode_image(fake=False) inflates + defilters them back to pixels —
+    decode_image inflates + defilters them back to pixels —
     no PIL/cv2 anywhere. Oracle = fixed expected values on the sf0.01
     fixture (scratch/gen_fixed_oracles.py); `doc_id < 128` instead
     of `limit` so the row set is deterministic."""
     from .pipeline.multimodal import attach_png_images, decode_image
 
     docs = _docs(spark, sf_dir).where(F.col("doc_id") < 128)
-    out = decode_image(attach_png_images(docs), fake=False)
+    out = decode_image(attach_png_images(docs))
     return out.select(
         "doc_id", "width", "height",
         *[F.round(c, 7).alias(c)
@@ -670,14 +670,14 @@ def _multimodal_jpeg(spark, sf_dir):
     """REAL baseline-JPEG round-trip (the r5 'last multimodal boundary',
     now closed): attach_jpeg_images synthesizes JFIF payloads with the
     pure-numpy T.81 encoder (pipeline/jpeg.py — Annex-K tables,
-    vectorized 8×8 DCT), and decode_image(fake=False) dispatches on the
+    vectorized 8×8 DCT), and decode_image dispatches on the
     SOI magic and Huffman-decodes + IDCTs them back to pixels — no
     PIL/cv2 anywhere. Oracle = fixed expected values on the sf0.01
     fixture (integer DCT path is bit-deterministic)."""
     from .pipeline.multimodal import attach_jpeg_images, decode_image
 
     docs = _docs(spark, sf_dir).where(F.col("doc_id") < 128)
-    out = decode_image(attach_jpeg_images(docs), fake=False)
+    out = decode_image(attach_jpeg_images(docs))
     return out.select(
         "doc_id", "width", "height",
         *[F.round(c, 7).alias(c)
@@ -693,14 +693,14 @@ def _multimodal_webp(spark, sf_dir):
     pure-Python VP8L encoder (pipeline/webp.py — canonical Huffman +
     code-length codes, LZ77, color cache, subtract-green/predictor
     transforms, seed-varied so the corpus exercises each path), and
-    decode_image(fake=False) dispatches on the RIFF magic and entropy-
+    decode_image dispatches on the RIFF magic and entropy-
     decodes them back to pixels — no PIL/cv2 anywhere. Lossy VP8 stays
     a named NotImplementedError. Oracle = fixed expected values on the
     sf0.01 fixture (pure integer path, bit-deterministic)."""
     from .pipeline.multimodal import attach_webp_images, decode_image
 
     docs = _docs(spark, sf_dir).where(F.col("doc_id") < 128)
-    out = decode_image(attach_webp_images(docs), fake=False)
+    out = decode_image(attach_webp_images(docs))
     return out.select(
         "doc_id", "width", "height",
         *[F.round(c, 7).alias(c)
@@ -753,13 +753,13 @@ def _multimodal_image_features(spark, sf_dir):
 @q("multimodal_audio_decode", values_oracle_sql("multimodal_audio_decode"))
 def _multimodal_audio(spark, sf_dir):
     """REAL stdlib-WAV round-trip: attach_wav_audio synthesizes RIFF/WAV
-    PCM16 payloads, decode_audio(fake=False) parses them with the stdlib
+    PCM16 payloads, decode_audio parses them with the stdlib
     `wave` module. Oracle = fixed expected feature values (deterministic
     seed-by-doc_id synth)."""
     from .pipeline.multimodal import attach_wav_audio, decode_audio
 
     docs = _docs(spark, sf_dir).where(F.col("doc_id") < 128)
-    out = decode_audio(attach_wav_audio(docs), fake=False)
+    out = decode_audio(attach_wav_audio(docs))
     return out.select(
         "doc_id",
         *[F.round(c, 7).alias(c)
@@ -3604,12 +3604,10 @@ def _copurchase_pagerank(spark, sf_dir):
     oracle mode pins the broadcast join path (each round broadcasts the
     |parts|-sized rank table into the edge join — right for item graphs
     where |V| ≪ |E|)."""
-    from .pipeline.graph import copurchase_edges, pagerank_integer
+    from .pipeline.graph import _pagerank, copurchase_edges
 
     li = load_table(spark, sf_dir, "lineitem")
-    ranks = pagerank_integer(
-        copurchase_edges(li), iterations=3, join_impl="broadcast"
-    )
+    ranks = _pagerank(copurchase_edges(li), 3, broadcast=True)
     return (
         ranks.select(F.col("pk").alias("part_key"), F.col("r").alias("score"))
         .orderBy(F.desc("score"), F.asc("part_key"))
@@ -3620,7 +3618,8 @@ def _copurchase_pagerank(spark, sf_dir):
 @q("copurchase_pagerank_shuffle", _PR_SQL)
 def _copurchase_pagerank_shuffle(spark, sf_dir):
     """The broadcast-exceeding-|V| PageRank path (pipeline/graph.py:
-    pagerank_integer join_impl="shuffle"): edges hash-partitioned by src
+    pagerank_integer's above-PR_BROADCAST_MAX_NODES regime, pinned
+    here at fixture scale): edges hash-partitioned by src
     once, each round shuffle-joins only the |V|-sized rank table — the
     plan a billion-node graph needs, where a rank-table broadcast would
     blow the executor. Integer micro-unit arithmetic makes the two
@@ -3628,12 +3627,10 @@ def _copurchase_pagerank_shuffle(spark, sf_dir):
     row's unrolled-CTE oracle — engine agreement here IS the parity
     proof at driver level (pytest pins it on an asymmetric digraph
     too)."""
-    from .pipeline.graph import copurchase_edges, pagerank_integer
+    from .pipeline.graph import _pagerank, copurchase_edges
 
     li = load_table(spark, sf_dir, "lineitem")
-    ranks = pagerank_integer(
-        copurchase_edges(li), iterations=3, join_impl="shuffle"
-    )
+    ranks = _pagerank(copurchase_edges(li), 3, broadcast=False)
     return (
         ranks.select(F.col("pk").alias("part_key"), F.col("r").alias("score"))
         .orderBy(F.desc("score"), F.asc("part_key"))

@@ -8,11 +8,12 @@ Execution maps to Spark idioms:
 - result cache: md5(stringified graph) → artifact path (CSV-backed like
   the reference's jobs_cache.csv, odc_backend.py:62-85); hit ⇒ the
   artifact is copied to the new job folder and execution is skipped.
-- job registry + DELETE /stop_job: the reference kills the worker PID
-  (odc_backend.py:105-120); one SparkSession serves all jobs here, so a
-  job runs under a Spark job group and cancellation is
-  ``cancelJobGroup`` — the executor-side tasks abort, the session
-  survives.
+- DELETE /stop_job: the reference kills the worker PID
+  (odc_backend.py:105-120) it looked up in jobs_log.csv; one
+  SparkSession serves all jobs here, so a job runs under the Spark job
+  group ``openeo-<id>`` and cancellation is ``cancelJobGroup`` — the
+  executor-side tasks abort, the session survives. The group is a pure
+  function of the id, so no job log is kept.
 - GET /collections[/id]: STAC-shaped metadata (cube:dimensions with
   temporal/x/y/bands extents, odc_backend.py:244-305) derived from the
   fixture catalog.
@@ -53,14 +54,28 @@ def _graph_md5(payload: dict, tiled: bool = False, tile: int = 8) -> str:
     ).hexdigest()
 
 
+def _valid_job_id(job_id) -> bool:
+    """The id names the job directory under work_dir: a path-shaped id
+    ("../../x") would escape it."""
+    return (isinstance(job_id, str)
+            and re.fullmatch(r"[A-Za-z0-9._-]{1,64}", job_id) is not None
+            and job_id not in (".", ".."))
+
+
+def _job_group(job_id: str) -> str:
+    """The Spark job group a job runs under (what /stop_job cancels)."""
+    return f"openeo-{job_id}"
+
+
 class JobStore:
-    """CSV-backed cache + registry (mirrors jobs_cache.csv / jobs_log.csv)."""
+    """CSV-backed result cache (mirrors jobs_cache.csv). Jobs need no
+    registry: a job's directory is ``jobs/<id>`` and its Spark job group
+    is :func:`_job_group` of the id."""
 
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
         self.cache_csv = os.path.join(root, "jobs_cache.csv")
-        self.log_csv = os.path.join(root, "jobs_log.csv")
         self._lock = threading.Lock()
 
     def cache_lookup(self, md5: str):
@@ -81,19 +96,6 @@ class JobStore:
             csv.writer(f).writerow(
                 [md5, artifact, json.dumps(meta) if meta else ""]
             )
-
-    def log_job(self, job_id: str, group: str) -> None:
-        with self._lock, open(self.log_csv, "a", newline="") as f:
-            csv.writer(f).writerow([job_id, group])
-
-    def group_for(self, job_id: str) -> Optional[str]:
-        if not os.path.exists(self.log_csv):
-            return None
-        with open(self.log_csv) as f:
-            for row in csv.reader(f):
-                if row and row[0] == job_id:
-                    return row[1]
-        return None
 
 
 def _tiled_store_stac(cid: str, store_dir: Optional[str]) -> Optional[dict]:
@@ -173,20 +175,19 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
     app = Flask("openeo_odc_driver_spark")
     store = JobStore(work_dir)
 
+    def _invalid_job_id():
+        return jsonify({"code": "InvalidJobId",
+                        "message": "job id must match "
+                                   "[A-Za-z0-9._-]{1,64}"}), 400
+
     @app.post("/graph")
     def run_graph():
         payload = request.get_json(force=True)
         job_id = payload.get("id") or hashlib.md5(
             os.urandom(16)
         ).hexdigest()[:12]
-        # the id names the job directory under work_dir: a path-shaped
-        # id ("../../x") would escape it
-        if not (isinstance(job_id, str)
-                and re.fullmatch(r"[A-Za-z0-9._-]{1,64}", job_id)
-                and job_id not in (".", "..")):
-            return jsonify({"code": "InvalidJobId",
-                            "message": "job id must match "
-                                       "[A-Za-z0-9._-]{1,64}"}), 400
+        if not _valid_job_id(job_id):
+            return _invalid_job_id()
         # execution-mode knobs ride the payload next to the graph
         # (this service's own shape — the reference has no tiled tier)
         tiled = bool(payload.get("tiled"))
@@ -206,9 +207,8 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
             return jsonify({"job_id": job_id, "output": dest,
                             "cached": True, **meta})
 
-        group = f"openeo-{job_id}"
-        store.log_job(job_id, group)
-        spark.sparkContext.setJobGroup(group, f"process graph {job_id}",
+        spark.sparkContext.setJobGroup(_job_group(job_id),
+                                       f"process graph {job_id}",
                                        interruptOnCancel=True)
         try:
             pg = ProcessGraph(payload, sf_dir=sf_dir, save_dir=job_dir,
@@ -245,12 +245,13 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
 
     @app.delete("/stop_job")
     def stop_job():
-        payload = request.get_json(force=True)
-        group = store.group_for(payload.get("id", ""))
-        if group is None:
+        job_id = request.get_json(force=True).get("id")
+        if not _valid_job_id(job_id):
+            return _invalid_job_id()
+        if not os.path.isdir(os.path.join(store.root, "jobs", job_id)):
             return jsonify({"code": "JobNotFound"}), 404
-        spark.sparkContext.cancelJobGroup(group)
-        return jsonify({"stopped": payload["id"]})
+        spark.sparkContext.cancelJobGroup(_job_group(job_id))
+        return jsonify({"stopped": job_id})
 
     @app.get("/processes")
     def processes():
@@ -268,6 +269,8 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
             "apply_kernel", "resample_spatial", "resample_cube_temporal",
             "resample_cube_spatial", "add_dimension", "rename_labels",
             "climatological_normal", "anomaly", "array_interpolate_linear",
+            "aggregate_spatial_window", "drop_dimension", "fit_curve",
+            "predict_curve", "radar_mask", "geocode", "run_udf",
         ]
         expr_ops = sorted(
             set(_BINARY) | set(_UNARY)

@@ -19,11 +19,11 @@ from pyspark.sql import functions as F
 from ..core.cube import BAND, TIME, VALUE, X, Y, Cube
 
 
-def save_parquet(cube: Cube, path: str, partition_by_time: bool = True) -> str:
+def save_parquet(cube: Cube, path: str) -> str:
     """Distributed sink. Partitioning by month keeps file counts sane and
     gives downstream scans partition pruning on time."""
     df = cube.df
-    if partition_by_time and TIME in cube.schema.dims:
+    if TIME in cube.schema.dims:
         df = df.withColumn("_month", F.date_format(TIME, "yyyy-MM"))
         df.write.mode("overwrite").partitionBy("_month").parquet(path)
     else:

@@ -14,19 +14,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -37,11 +24,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # DuckDB oracle's date_trunc('microseconds', ts)).
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # DuckDB oracle twin: events view with ts truncated to micros so both

@@ -32,17 +32,6 @@ def tumbling_counts(
     )
 
 
-def sliding_avg(
-    events: DataFrame, window: str = "2 hours", slide: str = "1 hour"
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", "4 hours")
-        .groupBy(F.window("ts", window, slide).alias("win"), "event_type")
-        .agg(F.avg("value").alias("avg_value"))
-        .select(F.col("win.start").alias("window_start"), "event_type", "avg_value")
-    )
-
-
 def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows per user: events closer than `gap` merge into one
     session (`F.session_window` — state-backed in streaming mode; in batch

@@ -41,3 +41,35 @@ def tile_engine(monkeypatch):
 def numpy_tiles(tile_engine):
     """Every tiled operator planned in the test takes the numpy engine."""
     tile_engine("numpy")
+
+
+@pytest.fixture
+def assign_engine(monkeypatch):
+    """``pin("fold" | "vectorized")`` makes every centroid assignment
+    PLANNED after the call take that engine, whatever k (unpinned, the
+    engine follows k: fold below ``VECTORIZE_K_THRESHOLD`` centroids,
+    the Arrow matmul at or above)."""
+    from openeo_odc_driver_spark.pipeline import similarity
+
+    threshold = {"fold": sys.maxsize, "vectorized": 0}
+
+    def pin(engine: str) -> None:
+        monkeypatch.setattr(similarity, "VECTORIZE_K_THRESHOLD",
+                            threshold[engine])
+
+    return pin
+
+
+@pytest.fixture
+def pagerank_regime(monkeypatch):
+    """``pin("broadcast" | "shuffle")`` makes every ``pagerank_integer``
+    called after the pin take that join regime, whatever |V|
+    (unpinned, broadcast up to ``PR_BROADCAST_MAX_NODES`` nodes)."""
+    from openeo_odc_driver_spark.pipeline import graph
+
+    ceiling = {"broadcast": sys.maxsize, "shuffle": -1}
+
+    def pin(regime: str) -> None:
+        monkeypatch.setattr(graph, "PR_BROADCAST_MAX_NODES", ceiling[regime])
+
+    return pin

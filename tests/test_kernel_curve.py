@@ -13,11 +13,23 @@ from openeo_odc_driver_spark.operators.curve import (
     linear_model,
     predict_curve,
 )
-from openeo_odc_driver_spark.operators.kernel import apply_kernel, apply_kernel_tiled
+from openeo_odc_driver_spark.core.tiled import (
+    apply_kernel_tiled_layout,
+    from_tiled,
+    to_tiled,
+)
+from openeo_odc_driver_spark.operators.kernel import apply_kernel
 from openeo_odc_driver_spark.sources.synthetic import CubeSpec, synthetic_cube
 
 SMALL = CubeSpec(n_times=2, ny=8, nx=8)
 ASYM = [[0.0, 1.0, 0.0], [0.0, 0.0, 2.0], [0.0, 0.0, 0.0]]
+
+
+def _tiled_kernel(c, kernel, border=0):
+    """apply_kernel through the tile tier's halo-strip stencil at tile 4."""
+    return from_tiled(
+        apply_kernel_tiled_layout(to_tiled(c, tile=4), kernel, border=border)
+    )
 
 
 def test_kernel_paths_agree_on_asymmetric_kernel(spark):
@@ -25,7 +37,7 @@ def test_kernel_paths_agree_on_asymmetric_kernel(spark):
     (ADVICE r1: the tiled path was cross-correlating)."""
     c = synthetic_cube(spark, SMALL)
     a = apply_kernel(c, ASYM).df.withColumnRenamed("value", "va")
-    b = apply_kernel_tiled(c, ASYM, tile=4).df.withColumnRenamed("value", "vb")
+    b = _tiled_kernel(c, ASYM).df.withColumnRenamed("value", "vb")
     j = a.join(b, ["band", "time", "y", "x"], "full_outer")
     bad = j.where(
         ~(
@@ -170,7 +182,7 @@ def test_gather_border_modes_match_tiled_path(spark, border):
     tiled numpy remap exactly (same clamp/mirror arithmetic)."""
     c = synthetic_cube(spark, SMALL)
     a = apply_kernel(c, ASYM, border=border).df.withColumnRenamed("value", "va")
-    b = apply_kernel_tiled(c, ASYM, tile=4, border=border).df.withColumnRenamed(
+    b = _tiled_kernel(c, ASYM, border=border).df.withColumnRenamed(
         "value", "vb"
     )
     j = a.join(b, ["band", "time", "y", "x"], "full_outer")

@@ -34,7 +34,7 @@ def test_wav_roundtrip_features_match_local(spark):
     )
     got = {
         r["doc_id"]: r
-        for r in decode_audio(attach_wav_audio(docs), fake=False).collect()
+        for r in decode_audio(attach_wav_audio(docs)).collect()
     }
     assert len(got) == 8
     # reference features computed locally from the same bytes
@@ -70,7 +70,7 @@ def test_png_roundtrip_pixel_stats_match_local(spark):
     )
     got = {
         r["doc_id"]: r
-        for r in decode_image(attach_png_images(docs), fake=False).collect()
+        for r in decode_image(attach_png_images(docs)).collect()
     }
     assert len(got) == 6
     # reference stats computed locally from the same bytes
@@ -84,7 +84,7 @@ def test_png_roundtrip_pixel_stats_match_local(spark):
 def test_image_decode_real_path_rejects_non_png(spark):
     docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     with pytest.raises(Exception, match="(?i)png"):
-        decode_image(attach_fake_images(docs), fake=False).collect()
+        decode_image(attach_fake_images(docs)).collect()
 
 
 def test_missing_fixture_is_loud_not_silent():
@@ -180,7 +180,7 @@ def test_jpeg_rejects_unsupported_profiles():
 
 
 def test_decode_image_dispatches_jpeg_and_png(spark):
-    """decode_image(fake=False) routes payloads by magic bytes: one
+    """decode_image routes payloads by magic bytes: one
     frame with PNG docs, one with JPEG docs, stats agree within JPEG's
     lossy tolerance (same synth content underneath)."""
     from pyspark.sql import functions as F
@@ -196,11 +196,11 @@ def test_decode_image_dispatches_jpeg_and_png(spark):
     )
     png_stats = {
         r.doc_id: r
-        for r in decode_image(attach_png_images(docs), fake=False).collect()
+        for r in decode_image(attach_png_images(docs)).collect()
     }
     jpg_stats = {
         r.doc_id: r
-        for r in decode_image(attach_jpeg_images(docs), fake=False).collect()
+        for r in decode_image(attach_jpeg_images(docs)).collect()
     }
     assert set(png_stats) == set(jpg_stats) == set(range(6))
     for i in range(6):

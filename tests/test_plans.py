@@ -209,7 +209,7 @@ def test_semantic_dedup_no_cartesian_pairing(spark):
     from openeo_odc_driver_spark.pipeline import similarity as psim
 
     lineage = psim._semdedup_members(
-        RP._embs(spark, SF), RP._SEM_NC, None, "auto",
+        RP._embs(spark, SF), RP._SEM_NC, None,
     )._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in lineage
     # nested-loop joins are only the 16-row centroid broadcasts

@@ -121,7 +121,7 @@ def test_lossy_vp8_rejected_by_name():
 
 
 def test_decode_image_dispatches_webp(spark):
-    """decode_image(fake=False) routes RIFF payloads through the VP8L
+    """decode_image routes RIFF payloads through the VP8L
     decoder and the stats equal a local decode of the same bytes."""
     from openeo_odc_driver_spark.pipeline.multimodal import (
         attach_webp_images,
@@ -133,7 +133,7 @@ def test_decode_image_dispatches_webp(spark):
     from pyspark.sql import functions as F
 
     base = spark.range(8).select(F.col("id").alias("doc_id"))
-    out = decode_image(attach_webp_images(base), fake=False).collect()
+    out = decode_image(attach_webp_images(base)).collect()
     assert len(out) == 8
     for r in out:
         arr = _synth_rgb(int(r["doc_id"]), 32, 32)

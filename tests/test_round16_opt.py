@@ -263,7 +263,7 @@ def test_ensure_overviews_cascades_from_existing(spark, tmp_path):
     )
 
 
-def test_lazy_checkpoint_still_truncates_plan(spark):
+def test_lazy_checkpoint_still_truncates_plan(spark, pagerank_regime):
     """eager=False localCheckpoint (round 16) must keep the r15 plan
     collapse: the pagerank loop's plan stays shallow (bounded Exchange
     count) because the loop invariants are LogicalRDD leaves even
@@ -276,7 +276,8 @@ def test_lazy_checkpoint_still_truncates_plan(spark):
         [(a, b, 1) for a in range(12) for b in range(12) if a != b],
         "src long, dst long, w long",
     ).groupBy("src", "dst").agg(F.sum("w").alias("w"))
-    ranks = pagerank_integer(edges, iterations=3, join_impl="broadcast")
+    pagerank_regime("broadcast")
+    ranks = pagerank_integer(edges, iterations=3)
     plan = ranks._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan
     n_ex = plan.count("Exchange")

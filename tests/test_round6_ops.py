@@ -341,7 +341,7 @@ def test_multiprobe_depth_lifts_recall(spark):
                for r in lsh_bucket_ann(e, qs, k=5, **kw).collect()}
         return len(gt & got) / len(gt)
 
-    r0 = recall(multiprobe=False)
+    r0 = recall(probe_bits=0)
     r1 = recall(probe_bits=1)
     r2 = recall(probe_bits=2)
     assert r0 <= r1 <= r2
@@ -369,7 +369,7 @@ def test_crs_fallback_resolves_modal_dataset_crs(spark):
         mostcommon_crs(spark, "s2_l2a")  # has a default, no metadata
 
 
-def test_vectorized_assignment_equals_fold_path(spark):
+def test_vectorized_assignment_equals_fold_path(spark, assign_engine):
     """The Arrow-matmul centroid assignment must agree with the
     fold-expression path row for row (ulp ties are measure-zero on real
     embeddings; pinned here on 300 random vectors × 24 centroids)."""
@@ -386,10 +386,12 @@ def test_vectorized_assignment_equals_fold_path(spark):
         [(i, [float(x) for x in v]) for i, v in enumerate(emb)],
         "vec_id long, embedding array<float>",
     )
+    assign_engine("fold")
     fold = sorted(map(tuple, semantic_dedup_clusters(
-        e, n_centroids=24, assign_impl="fold").collect()))
+        e, n_centroids=24).collect()))
+    assign_engine("vectorized")
     vec = sorted(map(tuple, semantic_dedup_clusters(
-        e, n_centroids=24, assign_impl="vectorized").collect()))
+        e, n_centroids=24).collect()))
     assert fold == vec
 
 
@@ -415,13 +417,12 @@ def test_vectorized_assignment_empty_centroids_and_id_width(spark):
     assert got[5] == 5
 
 
-def test_assign_impl_auto_dispatches_on_k(spark):
-    """Round-7 default: assign_impl='auto' keeps the fold plan below
-    VECTORIZE_K_THRESHOLD (no Python stage in the physical plan) and
-    switches to the Arrow-matmul mapInPandas at/above it — and both
-    routes produce identical censuses on either side of the boundary."""
+def test_assign_engine_dispatches_on_k(spark, assign_engine):
+    """Round-7 default: the centroid assignment keeps the fold plan
+    below VECTORIZE_K_THRESHOLD and switches to the Arrow-matmul
+    mapInPandas at/above it — and both routes produce identical
+    censuses on either side of the boundary."""
     import numpy as np
-    import pytest
 
     from openeo_odc_driver_spark.pipeline.similarity import (
         VECTORIZE_K_THRESHOLD,
@@ -440,8 +441,8 @@ def test_assign_impl_auto_dispatches_on_k(spark):
     # the assignment DataFrame keeps its lineage visible in the physical
     # plan (semantic_dedup_clusters localCheckpoints it, truncating the
     # plan at Scan ExistingRDD)
-    small = _semdedup_members(e, 8, None, "auto")
-    large = _semdedup_members(e, VECTORIZE_K_THRESHOLD, None, "auto")
+    small = _semdedup_members(e, 8, None)
+    large = _semdedup_members(e, VECTORIZE_K_THRESHOLD, None)
     # round 16: BOTH engines are Arrow-batched numpy stages now, but the
     # dispatch stays visible in the plan — the small-k fold semantics
     # execute via assign_nearest_centroid_foldexact, a SCALAR pandas_udf
@@ -452,23 +453,21 @@ def test_assign_impl_auto_dispatches_on_k(spark):
     assert "ArrowEvalPython" in small_plan and "MapInPandas" not in small_plan
     assert "MapInPandas" in large_plan
 
-    # both engines agree with the auto choice at each k
-    for k in (8, VECTORIZE_K_THRESHOLD):
-        auto = sorted(map(tuple, semantic_dedup_clusters(
-            e, n_centroids=k, threshold=0.95).collect()))
-        fold = sorted(map(tuple, semantic_dedup_clusters(
-            e, n_centroids=k, threshold=0.95, assign_impl="fold").collect()))
-        assert auto == fold
+    # both engines agree with the k-picked choice at each k
+    ks = (8, VECTORIZE_K_THRESHOLD)
 
-    with pytest.raises(ValueError, match="assign_impl"):
-        semantic_dedup_clusters(e, assign_impl="nope")
-    with pytest.raises(ValueError, match="assign_impl"):
-        kmeans_train(e, k=4, assign_impl="nope")
+    def censuses():
+        return [sorted(map(tuple, semantic_dedup_clusters(
+            e, n_centroids=k, threshold=0.95).collect())) for k in ks]
+
+    auto = censuses()
+    assign_engine("fold")
+    assert censuses() == auto
 
     # kmeans_train dispatches identically: trained centroids match
     # between engines (quantization absorbs matmul ulp noise)
-    f = sorted(map(tuple, kmeans_train(e, k=8, iters=2,
-                                       assign_impl="fold").collect()))
-    v = sorted(map(tuple, kmeans_train(e, k=8, iters=2,
-                                       assign_impl="vectorized").collect()))
+    f = sorted(map(tuple, kmeans_train(e, k=8, iters=2).collect()))
+    assign_engine("vectorized")
+    v = sorted(map(tuple, kmeans_train(e, k=8, iters=2).collect()))
     assert f == v
+

@@ -1131,7 +1131,9 @@ def test_image_phash_pairs_cross_codec_twins(spark):
     assert twice == once
 
 
-def test_graph_ops_match_pure_python_reference_on_random_graphs(spark):
+def test_graph_ops_match_pure_python_reference_on_random_graphs(
+    spark, pagerank_regime
+):
     """Independent-implementation cross-check: pagerank_integer and
     label_propagation against straight-line Python references on seeded
     random digraphs — the engine-exactness claim (pure integer
@@ -1188,16 +1190,15 @@ def test_graph_ops_match_pure_python_reference_on_random_graphs(spark):
                 v: nxt_lab[v][0] if v in nxt_lab else lab[v] for v in nodes
             }
         df = spark.createDataFrame(edges, "src long, dst long, w long")
+        pagerank_regime("broadcast")
         got_r = {x.pk: x.r for x in pagerank_integer(df, iterations=3).collect()}
         assert got_r == r, f"pagerank mismatch seed={seed}"
         got_l = {x.pk: x.label for x in label_propagation(df, iterations=3).collect()}
         assert got_l == lab, f"lpa mismatch seed={seed}"
         # the shuffle-join physical path is bit-identical (integer math)
+        pagerank_regime("shuffle")
         got_rs = {
-            x.pk: x.r
-            for x in pagerank_integer(
-                df, iterations=3, join_impl="shuffle"
-            ).collect()
+            x.pk: x.r for x in pagerank_integer(df, iterations=3).collect()
         }
         assert got_rs == r, f"pagerank shuffle-path mismatch seed={seed}"
 

@@ -9,7 +9,7 @@ def _edges(spark, rows):
     return spark.createDataFrame(rows, "src long, dst long, w long")
 
 
-def test_pagerank_retains_src_only_nodes_hand_computed(spark):
+def test_pagerank_retains_src_only_nodes_hand_computed(spark, pagerank_regime):
     """Asymmetric digraph 1→2, 2→3, 3→2: node 1 has no in-edges. Under
     general damped PageRank it holds PR_BASE every round and KEEPS
     contributing to node 2 (the pre-round-8 dst-keyed rank table
@@ -24,36 +24,26 @@ def test_pagerank_retains_src_only_nodes_hand_computed(spark):
     # r3: 1=150000; 2=150000+127500+1464125=1741625; 3=150000+958375=1108375
     assert got == {1: 150000, 2: 1741625, 3: 1108375}
     # both physical paths agree bit-for-bit
+    pagerank_regime("shuffle")
     shuffle = {
-        r.pk: r.r
-        for r in pagerank_integer(
-            edges, iterations=3, join_impl="shuffle"
-        ).collect()
+        r.pk: r.r for r in pagerank_integer(edges, iterations=3).collect()
     }
     assert shuffle == got
 
 
-def test_pagerank_auto_dispatch_and_bad_impl(spark):
-    import pytest
-
+def test_pagerank_auto_dispatch_and_bad_impl(spark, pagerank_regime):
     from openeo_odc_driver_spark.pipeline.graph import pagerank_integer
 
     edges = _edges(spark, [(1, 2, 1), (2, 1, 1)])
-    with pytest.raises(ValueError, match="join_impl"):
-        pagerank_integer(edges, join_impl="cartesian")
-    # auto with a tiny broadcast ceiling takes the shuffle path; scores
-    # are identical either way (integer arithmetic)
+    # a broadcast ceiling below |V| takes the shuffle path; scores are
+    # identical either way (integer arithmetic)
+    pagerank_regime("shuffle")
     small = {
-        r.pk: r.r
-        for r in pagerank_integer(
-            edges, iterations=2, join_impl="auto", broadcast_max_nodes=1
-        ).collect()
+        r.pk: r.r for r in pagerank_integer(edges, iterations=2).collect()
     }
+    pagerank_regime("broadcast")
     big = {
-        r.pk: r.r
-        for r in pagerank_integer(
-            edges, iterations=2, join_impl="auto", broadcast_max_nodes=10**9
-        ).collect()
+        r.pk: r.r for r in pagerank_integer(edges, iterations=2).collect()
     }
     assert small == big
 

@@ -82,6 +82,29 @@ def test_stop_unknown_job_404(client):
     assert r.status_code == 404
 
 
+def test_processes_lists_every_dispatched_node(client):
+    """/processes names every process id ProcessGraph._dispatch runs."""
+    import inspect
+    import re
+
+    from openeo_odc_driver_spark.plans.graph import ProcessGraph
+
+    src = inspect.getsource(ProcessGraph._dispatch)
+    dispatched = set(re.findall(r'pid == "([a-z_]+)"', src))
+    ids = {p["id"] for p in client.get("/processes").get_json()["processes"]}
+    assert dispatched and dispatched <= ids, sorted(dispatched - ids)
+
+
+def test_stop_job_rejects_path_shaped_ids(client, tmp_path):
+    """/stop_job applies POST /graph's id check: a path-shaped id is a
+    400 before any lookup, whatever exists at the path it names."""
+    (tmp_path / "x").mkdir()
+    for bad in ("../x", f"../../../../../..{tmp_path}/x", "a/b", "..", 7):
+        r = client.delete("/stop_job", json={"id": bad})
+        assert r.status_code == 400, bad
+        assert r.get_json()["code"] == "InvalidJobId"
+
+
 def test_registry_endpoint_reports_verification_status(client):
     r = client.get("/registry")
     assert r.status_code == 200
