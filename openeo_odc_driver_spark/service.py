@@ -169,7 +169,12 @@ def collection_stac(cid: str, store_dir: Optional[str] = None) -> dict:
 
 def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
                sf_dir: Optional[str] = None,
-               tiled_store_dir: str = "/tmp/spark_graft_tiled_store"):
+               tiled_store_dir: str = "/tmp/spark_graft_tiled_store",
+               allow_code_udfs: bool = False):
+    """HTTP front end. A posted graph is an untrusted payload: a
+    code-string ``run_udf`` is rejected (400, ``PermissionError``)
+    unless the operator opts in with ``allow_code_udfs=True``, which
+    ``exec()``s the code on the driver (``ProcessGraph`` trust model)."""
     from flask import Flask, jsonify, request
 
     app = Flask("openeo_odc_driver_spark")
@@ -212,6 +217,7 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
                                        interruptOnCancel=True)
         try:
             pg = ProcessGraph(payload, sf_dir=sf_dir, save_dir=job_dir,
+                              allow_code_udfs=allow_code_udfs,
                               tiled=tiled, tile=tile,
                               tiled_store_dir=tiled_store_dir
                               if tiled else None)

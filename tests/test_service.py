@@ -146,11 +146,44 @@ def test_registry_endpoint_reports_verification_status(client):
     assert len(body["reports_merged"]) >= 2
 
 
-def test_concurrent_jobs_cancel_one_other_completes(client):
+def test_code_string_udf_denied_by_default(client, tmp_path):
+    """A default app never ``exec()``s a posted code-string run_udf:
+    the request answers 400 ``PermissionError`` and the code's sentinel
+    file (touched at exec time and at apply time) never appears."""
+    sentinel = tmp_path / "udf_ran"
+    udf = (
+        "import pathlib\n"
+        f"pathlib.Path({str(sentinel)!r}).touch()\n"
+        "def apply_datacube(df, context):\n"
+        f"    pathlib.Path({str(sentinel)!r}).touch()\n"
+        "    return df\n"
+    )
+    graph = {
+        "id": "codeudf",
+        "process_graph": {
+            "l": {"process_id": "load_collection",
+                  "arguments": {"id": "synthetic"}},
+            "u": {"process_id": "run_udf",
+                  "arguments": {"data": {"from_node": "l"},
+                                "udf": udf, "runtime": "Python"}},
+            "s": {"process_id": "save_result",
+                  "arguments": {"data": {"from_node": "u"},
+                                "format": "PARQUET"},
+                  "result": True},
+        },
+    }
+    r = client.post("/graph", json=graph)
+    assert r.status_code == 400
+    assert r.get_json()["code"] == "PermissionError"
+    assert not sentinel.exists()
+
+
+def test_concurrent_jobs_cancel_one_other_completes(spark, tmp_path):
     """Two graphs in flight on ONE session: /stop_job cancels the slow
     one mid-execution (cancelJobGroup, interruptOnCancel), the other
     completes, and the session stays usable — the repo's answer to the
     reference's process-per-job gunicorn isolation (gunicorn.conf.py).
+    The slow job is a code-string UDF, so this app opts in to them.
 
     Threading note: Spark job groups are JVM-thread-local;
     pyspark.InheritableThread pins each request's Python thread to its
@@ -161,6 +194,12 @@ def test_concurrent_jobs_cancel_one_other_completes(client):
 
     from pyspark import InheritableThread
 
+    from openeo_odc_driver_spark.service import create_app
+
+    app = create_app(spark, work_dir=str(tmp_path / "svc"),
+                     allow_code_udfs=True)
+    app.config["TESTING"] = True
+    client = app.test_client()
     sentinel = "/tmp/spark_graft_slow_started"
     if os.path.exists(sentinel):
         os.remove(sentinel)
