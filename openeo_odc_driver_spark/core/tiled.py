@@ -189,24 +189,6 @@ def _widen_py(tc: "TiledCube", df: DataFrame, keys: list[str]) -> DataFrame:
     return df.repartition(w, *[F.col(k) for k in keys])
 
 
-def materialize_tiled(tc: "TiledCube") -> "TiledCube":
-    """Evaluate a tiled cube's lineage once and reuse the rows across
-    several consumers (round-15 optimization, guide §3.3/§5): sweep
-    plans that fan N operator legs out of one packed fixture re-embed
-    the whole ``to_tiled`` subtree per leg — the pack's Python stage
-    nodes never canonicalize equal, so exchange reuse cannot fire, and
-    the pack recomputes N times. A localCheckpoint is tied to THIS
-    DataFrame, so every fresh invocation still computes the pack from
-    its inputs (nothing persists across runs); the fixture's dyadic
-    values make all downstream folds order-free, so results cannot
-    move. eager=False (round-16, guide §5): the plan collapses to a
-    LogicalRDD either way, but the lazy form materializes the pack
-    inside the first consuming action instead of a separate
-    per-invocation barrier job (the r15 eager barrier cost
-    tiled_reduce_time_sweep ~1 s at sf0.1, driver best-of-n)."""
-    return _dc_replace(tc, df=tc.df.localCheckpoint(eager=False))
-
-
 def _widen_df(tc: "TiledCube", df: DataFrame, keys: list[str]) -> DataFrame:
     """An arbitrary raster-carrying frame (fold input, halo pieces,
     repack fragments) pre-clustered on the group keys at the
@@ -220,24 +202,6 @@ def _widen_df(tc: "TiledCube", df: DataFrame, keys: list[str]) -> DataFrame:
     return df.repartition(w, *[F.col(k) for k in keys])
 
 
-def _widened(tc: "TiledCube", keys: list[str]) -> DataFrame:
-    """The fold input, pre-clustered on the group keys at the raster-
-    aware width (no-op under the oracle guard). HashPartitioning(keys,
-    w) satisfies the downstream groupBy/applyInPandas ClusteredDistribution,
-    so this REPLACES the default exchange instead of adding one.
-
-    Round-15 continuation, measured NEGATIVE recorded: extending the
-    pandas-stage parallelism floor here (and to the sql pack) was
-    interleaved-A/B'd and REGRESSED the sql-fold consumers at bench
-    scale (tiled_zonal_sweep 0.78, tiled_climatological_normal 0.84,
-    tiled_pipeline_e2e 0.56 old/new) — tiny JVM HOF groups pay more in
-    task/scheduling overhead than the serialization they avoid. The
-    floor stays restricted to applyInPandas stages (``_widen_py``),
-    whose per-group PYTHON cost is what byte-based AQE cannot see;
-    the numpy fold/median engines take it at their call sites."""
-    return _widen_df(tc, tc.df, keys)
-
-
 def _widened_join_sides(
     big: "TiledCube", big_df: DataFrame, other_df: DataFrame,
     keys: list[str],
@@ -246,7 +210,7 @@ def _widened_join_sides(
     raster-aware width (mask, band zip, merge resolver — the joins the
     round-13 heap telemetry shows carrying whole-raster arrays through
     the 32-partition default at 100×). Same oracle guard as
-    :func:`_widened`: no-op unless the BIG side's payload demands more
+    :func:`_widen_df`: no-op unless the BIG side's payload demands more
     than the session default; when it does, HashPartitioning(keys, w)
     on both sides satisfies the join's distribution requirement, so
     the two repartitions REPLACE the join's own exchanges."""
@@ -271,21 +235,6 @@ def _indices(cube: Cube):
     x_idx = F.round((F.col(X) - F.lit(grid.x0)) / F.lit(grid.resx)).cast("long")
     y_idx = F.round((F.lit(grid.y0) - F.col(Y)) / F.lit(grid.resy)).cast("long")
     return x_idx, y_idx
-
-
-TILE_VECTORIZE_CELLS = 4096  # engine choice: sql fold below, numpy at/above
-
-
-def _numpy_engine(tile: int) -> bool:
-    """The engine choice of every dual-engine tiled operator, a function
-    of tile size only: Arrow-batched numpy stages at/above
-    ``TILE_VECTORIZE_CELLS`` cells per tile, SQL higher-order functions
-    below. Interpreted HOFs cost ~µs per element, so scale tiles want
-    numpy; at small tiles the Python boundary dominates instead
-    (PLANS.md "Item E": the numpy pack 1.6× faster at tile 256, the sql
-    pack 1.5× faster at tile 32, a tie at 64). Every gate fixture
-    (tile ≤ 8) plans on the sql engine its oracle row pins."""
-    return tile * tile >= TILE_VECTORIZE_CELLS
 
 
 # ---- the tile payload boundary ------------------------------------------
@@ -349,24 +298,12 @@ def to_tiled(
     them to keep the plan action-free — sources that know their grid
     statically should).
 
-    Two physical engines behind one semantics, chosen by tile size
-    (:func:`_numpy_engine`): sql — collect_list + array_sort + a
-    gap-filling HOF fold, engine-exact and oracle-mode for small tiles
-    — and numpy — Arrow-batched ``applyInPandas`` position scatter per
-    tile group, the scale path (the round-12 probe measured the
-    interpreted per-element HOF at ~200k cells/s/32cores: 63 s to pack
-    12.6 M cells that the scatter does in ~2 s).
-
-    **Tiled-boundary convention (round 13)**: the packed array's ONLY
-    missing-value representation is NULL — a float NaN input VALUE
-    folds to NULL on pack in BOTH engines (the Arrow float64 transfer
-    the numpy engine rides cannot distinguish them, so the sql engine
-    folds explicitly to match; fragment shuffles already round-trip
-    NULL↔NaN the same way). With that convention the engines are
-    bit-exact on every packable input. Both raise on duplicate pixel
-    keys with the SAME message, though the exception class differs
-    (Python ``ValueError`` from the pandas scatter vs Spark's
-    ``raise_error`` runtime exception from the HOF).
+    The pack is one Arrow-batched ``applyInPandas`` position scatter
+    per tile group. The packed array's ONLY missing-value
+    representation is NULL: a float NaN input VALUE folds to NULL on
+    pack (the Arrow float64 transfer cannot distinguish them; fragment
+    shuffles round-trip NULL↔NaN the same way). Duplicate pixel keys
+    within a tile raise a named ``ValueError``.
 
     Scale shape: the groupBy is the ONLY exchange, its key count is
     pixels/tile² (e.g. 10^12 px → 15 M rows at tile=256), and each
@@ -390,72 +327,33 @@ def to_tiled(
         pos.alias("_pos"),
         VALUE,
     )
-    # Dense-array assembly in O(tile²): sort the collected (pos, value)
-    # entries once, then emit each entry preceded by NULL filler for the
-    # gap since the previous position (+ trailing filler) — missing
-    # cells become NULL padding. A map_from_entries + element_at lookup
-    # is the "obvious" spelling but Spark's ArrayBasedMapData lookup is
-    # O(n), making the tile O(tile⁴) — 4.3e9 comparisons per 256-tile
-    # (measured: hung the bench). LET idiom binds the sorted entries
-    # once (interpreted HOFs get no CSE).
+    import numpy as np
+    import pandas as pd
+
     T2 = tile * tile
-    # the trailing size check turns a malformed input (duplicate
-    # (band, time, y, x) pixel rows — a negative gap collapses to an
-    # empty filler and the array silently mis-positions every later
-    # pixel) into a NAMED executor error instead of corrupt tiles
-    assemble = (
-        "transform(transform(array(array_sort(collect_list(struct(_pos, value)))), "
-        "es -> concat("
-        "  flatten(transform(sequence(0, size(es) - 1), k -> concat("
-        "    array_repeat(CAST(NULL AS DOUBLE), "
-        "      es[k]._pos - CASE WHEN k = 0 THEN -1 "
-        "      ELSE es[k - 1]._pos END - 1), "
-        "    array(CASE WHEN isnan(es[k].value) THEN CAST(NULL AS DOUBLE) "
-        "      ELSE es[k].value END)))), "
-        f"  array_repeat(CAST(NULL AS DOUBLE), "
-        f"    {T2} - 1 - es[size(es) - 1]._pos))), "
-        f"d -> CASE WHEN size(d) = {T2} THEN d ELSE "
-        "raise_error('to_tiled: duplicate pixel keys within a tile "
-        "(one row per (band, time, y, x) required)') END)[0]"
-    )
-    if _numpy_engine(tile):
-        import numpy as np
-        import pandas as pd
+    gkeys = [*keys, "tile_row", "tile_col"]
 
-        gkeys = [*keys, "tile_row", "tile_col"]
+    def scatter(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        pos = pdf["_pos"].to_numpy()
+        if len(np.unique(pos)) != len(pos):
+            raise ValueError(
+                "to_tiled: duplicate pixel keys within a tile "
+                "(one row per (band, time, y, x) required)"
+            )
+        arr = np.full(T2, np.nan)
+        arr[pos] = pdf[VALUE].to_numpy(dtype="float64")
+        return pd.DataFrame([
+            {**_group_keys(pdf.iloc[0], gkeys), "data": _tile_list(arr)}
+        ])
 
-        def scatter(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pos = pdf["_pos"].to_numpy()
-            if len(np.unique(pos)) != len(pos):
-                raise ValueError(
-                    "to_tiled: duplicate pixel keys within a tile "
-                    "(one row per (band, time, y, x) required)"
-                )
-            arr = np.full(T2, np.nan)
-            arr[pos] = pdf[VALUE].to_numpy(dtype="float64")
-            return pd.DataFrame([
-                {**_group_keys(pdf.iloc[0], gkeys), "data": _tile_list(arr)}
-            ])
-
-        # round-15 continuation (guide §2.2/§4): the numpy pack is
-        # per-GROUP Python work invisible to byte-based AQE
-        # coalescing; pre-cluster at the pandas-stage width. The
-        # scatter is position-keyed (order-free), so the repartition
-        # cannot move a value. The sql branch deliberately stays
-        # unfloored — measured negative, see _widened's docstring.
-        _w_handle = TiledCube(staged, cube.schema, tile, n_y, n_x)
-        df = _widen_py(_w_handle, staged, gkeys).groupBy(
-            *gkeys
-        ).applyInPandas(
-            scatter, _ddl(staged.schema, gkeys, "data array<double>")
-        )
-        return TiledCube(df, cube.schema, tile, n_y, n_x)
-    # sql pack branch: NO parallelism floor — measured negative, see
-    # _widened's docstring (tiny JVM HOF groups; the floor regressed
-    # the sweep/e2e rows at bench scale)
-    df = (
-        staged.groupBy(*keys, "tile_row", "tile_col")
-        .agg(F.expr(assemble).alias("data"))
+    # the pack is per-GROUP Python work invisible to byte-based AQE
+    # coalescing; pre-cluster at the pandas-stage width. The scatter is
+    # position-keyed (order-free), so the repartition cannot move a value.
+    _w_handle = TiledCube(staged, cube.schema, tile, n_y, n_x)
+    df = _widen_py(_w_handle, staged, gkeys).groupBy(
+        *gkeys
+    ).applyInPandas(
+        scatter, _ddl(staged.schema, gkeys, "data array<double>")
     )
     return TiledCube(df, cube.schema, tile, n_y, n_x)
 
@@ -501,31 +399,6 @@ def from_tiled(tc: TiledCube) -> Cube:
     return Cube(df, tc.schema)
 
 
-# per-reducer pieces of the sorted element-wise SQL fold: the merge
-# lambda (null elements skipped) and the finisher combining the value
-# fold `s` with the non-null count fold `c` (all-NULL positions → NULL)
-_TILE_SQL_REDUCERS = {
-    "mean": (
-        "(a, v) -> a + coalesce(v, CAST(0.0 AS DOUBLE))",
-        "CASE WHEN c = 0 THEN NULL ELSE s / c END",
-    ),
-    "sum": (
-        "(a, v) -> a + coalesce(v, CAST(0.0 AS DOUBLE))",
-        "CASE WHEN c = 0 THEN NULL ELSE s END",
-    ),
-    "min": (
-        "(a, v) -> CASE WHEN v IS NULL THEN a WHEN a IS NULL THEN v "
-        "WHEN v < a THEN v ELSE a END",
-        "s",
-    ),
-    "max": (
-        "(a, v) -> CASE WHEN v IS NULL THEN a WHEN a IS NULL THEN v "
-        "WHEN v > a THEN v ELSE a END",
-        "s",
-    ),
-}
-
-
 def aggregate_temporal_period_tiled(
     tc: TiledCube, period: str, reducer: str = "mean"
 ) -> TiledCube:
@@ -537,8 +410,7 @@ def aggregate_temporal_period_tiled(
     (band, period, tile): periods multiply the key count but divide
     the per-group state, so the bound on group memory only improves.
 
-    Engines and NULL semantics are exactly :func:`reduce_time_tiled`'s
-    (sql oracle mode / numpy scale path, by tile size);
+    NULL semantics are exactly :func:`reduce_time_tiled`'s;
     period names and time-metadata handling mirror the long operator
     (stale extent dropped; a known input axis maps to its truncation
     image)."""
@@ -560,7 +432,7 @@ def aggregate_temporal_period_tiled(
     )
     if reducer == "median":
         # the reduce_time_median_tiled multiset path keyed by the
-        # truncated timestamp (numpy-only engine — see its docstring)
+        # truncated timestamp
         band = [BAND] if BAND in tc.schema.dims else []
         out = _median_groups(
             relabeled, [*band, TIME, "tile_row", "tile_col"]
@@ -585,9 +457,8 @@ def climatological_normal_tiled(
     timestamp. One exchange keyed by (band, month, tile); the time
     dimension is replaced by a ``month`` column (1..12) riding on the
     tile rows, which :func:`from_tiled` passes through to the long
-    rows exactly like the long operator emits it. Engines and NULL
-    semantics are :func:`reduce_time_tiled`'s (sql oracle mode / numpy
-    scale path)."""
+    rows exactly like the long operator emits it. NULL semantics are
+    :func:`reduce_time_tiled`'s."""
     if frequency != "monthly":
         raise ValueError("only frequency='monthly' supported (as reference)")
     if TIME not in tc.schema.dims:
@@ -610,21 +481,10 @@ def reduce_time_tiled(tc: TiledCube, reducer: str = "mean") -> TiledCube:
     / sd / variance with the long reducer's NULL semantics (NULL
     elements skipped, all-NULL positions stay NULL).
 
-    Two physical engines behind the same semantics, chosen by tile size
-    (:func:`_numpy_engine`):
-
-    - sql (below ``TILE_VECTORIZE_CELLS`` cells per tile) — a
-      time-sorted element-wise fold in pure SQL higher-order functions.
-      Engine-exact (the oracle-mode gate rows run it at tile=8), but
-      interpreted lambdas cost ~µs per element — fine for small tiles,
-      wrong for 256² arrays (measured: the SQL fold LOST to the
-      long-format codegen avg, 5.8 s vs 3.6 s on 9.4 M px).
-    - numpy (at/above) — Arrow-batched ``applyInPandas`` per tile
-      group: stack the group's arrays, one vectorized nan-reduction.
-      The scale path. Same ulp caveat as
-      `assign_nearest_centroid_vectorized` for mean/sum (numpy's
-      pairwise sums vs sequential folds — exact on dyadic inputs,
-      irrelevant for min/max); pinned ≡ sql on the fixture by pytest.
+    One Arrow-batched ``applyInPandas`` per tile group
+    (:func:`_fold_groups`): stack the group's arrays, one vectorized
+    nan-reduction. mean/sum are numpy's pairwise sums, exact on the
+    fixture's dyadic inputs.
 
     Scale shape vs the long reducer: the same single exchange, but
     keyed by tile (tile²× fewer, perfectly uniform keys) and carrying
@@ -804,9 +664,8 @@ def reduce_spatial_tiled(tc: TiledCube, dim: str, reducer: str) -> Cube:
     hash-aggregate — the fold here is per-tile arithmetic instead of a
     T²-row hash probe per tile.
 
-    Engines (by tile size, :func:`_numpy_engine`): sql — HOF folds,
-    the oracle mode; numpy — vectorized axis reductions per tile, the
-    scale path. NULL semantics match the long reducers
+    Stage 1 is a vectorized numpy axis reduction per tile
+    (``mapInPandas``). NULL semantics match the long reducers
     (NULLs skipped; empty lines → NULL value rows, the long groupBy's
     behavior on all-NULL lines of a dense cube).
 
@@ -831,80 +690,50 @@ def reduce_spatial_tiled(tc: TiledCube, dim: str, reducer: str) -> Cube:
     if reducer in _SPATIAL_MULTISET:
         return _reduce_spatial_multiset(tc, dim, reducer)
 
-    if not _numpy_engine(T):
-        # per-line element gather: reducing x folds each ROW slice;
-        # reducing y gathers each COLUMN by strided indexing
-        line_vals = (
-            f"slice(data, r * {T} + 1, {T})" if dim == X
-            else f"transform(sequence(0, {T - 1}), q -> data[q * {T} + r])"
-        )
-        fold = (
-            f"transform(sequence(0, {T - 1}), r -> aggregate({line_vals}, "
-            "named_struct("
-            "'s', CAST(0.0 AS DOUBLE), 'ss', CAST(0.0 AS DOUBLE), "
-            "'c', CAST(0 AS BIGINT), "
-            "'mn', CAST(NULL AS DOUBLE), 'mx', CAST(NULL AS DOUBLE)), "
-            "(acc, v) -> CASE WHEN v IS NULL THEN acc ELSE named_struct("
-            "'s', acc.s + v, 'ss', acc.ss + v * v, 'c', acc.c + 1, "
-            "'mn', CASE WHEN acc.mn IS NULL OR v < acc.mn THEN v "
-            "ELSE acc.mn END, "
-            "'mx', CASE WHEN acc.mx IS NULL OR v > acc.mx THEN v "
-            "ELSE acc.mx END) END))"
-        )
-        lines = tc.df.select(
-            *keys, "tile_row", "tile_col",
-            F.posexplode(F.expr(fold)).alias("_lp", "_p"),
-        ).select(
-            *keys, "tile_row", "tile_col", "_lp",
-            F.col("_p.s").alias("_s"), F.col("_p.ss").alias("_ss"),
-            F.col("_p.c").alias("_c"),
-            F.col("_p.mn").alias("_mn"), F.col("_p.mx").alias("_mx"),
-        )
-    else:
-        import numpy as np
-        import pandas as pd
-        from typing import Iterator
+    import numpy as np
+    import pandas as pd
+    from typing import Iterator
 
-        axis = 1 if dim == X else 0
-        out_schema = _ddl(
-            tc.df.schema, keys,
-            "tile_row int, tile_col int, _lp int, _s double, _ss double, "
-            "_c bigint, _mn double, _mx double",
-        )
+    axis = 1 if dim == X else 0
+    out_schema = _ddl(
+        tc.df.schema, keys,
+        "tile_row int, tile_col int, _lp int, _s double, _ss double, "
+        "_c bigint, _mn double, _mx double",
+    )
 
-        def partials(
-            batches: "Iterator[pd.DataFrame]",
-        ) -> "Iterator[pd.DataFrame]":
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out = []
-                for row in pdf.itertuples(index=False):
-                    rec = row._asdict()
-                    a = np.asarray(rec["data"], dtype="float64").reshape(T, T)
-                    nan = np.isnan(a)
-                    c = (~nan).sum(axis=axis)
-                    s = np.nansum(a, axis=axis)
-                    ss = np.nansum(a * a, axis=axis)
-                    empty = c == 0
-                    safe = np.where(
-                        (empty[:, None] if axis == 1 else empty[None, :]),
-                        0.0, a,
-                    )
-                    mn = np.nanmin(safe, axis=axis)
-                    mx = np.nanmax(safe, axis=axis)
-                    base = _group_keys(rec, [*keys, "tile_row", "tile_col"])
-                    for lp in range(T):
-                        out.append({
-                            **base, "_lp": lp,
-                            "_s": float(s[lp]), "_ss": float(ss[lp]),
-                            "_c": int(c[lp]),
-                            "_mn": None if empty[lp] else float(mn[lp]),
-                            "_mx": None if empty[lp] else float(mx[lp]),
-                        })
-                yield pd.DataFrame(out)
+    def partials(
+        batches: "Iterator[pd.DataFrame]",
+    ) -> "Iterator[pd.DataFrame]":
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = []
+            for row in pdf.itertuples(index=False):
+                rec = row._asdict()
+                a = np.asarray(rec["data"], dtype="float64").reshape(T, T)
+                nan = np.isnan(a)
+                c = (~nan).sum(axis=axis)
+                s = np.nansum(a, axis=axis)
+                ss = np.nansum(a * a, axis=axis)
+                empty = c == 0
+                safe = np.where(
+                    (empty[:, None] if axis == 1 else empty[None, :]),
+                    0.0, a,
+                )
+                mn = np.nanmin(safe, axis=axis)
+                mx = np.nanmax(safe, axis=axis)
+                base = _group_keys(rec, [*keys, "tile_row", "tile_col"])
+                for lp in range(T):
+                    out.append({
+                        **base, "_lp": lp,
+                        "_s": float(s[lp]), "_ss": float(ss[lp]),
+                        "_c": int(c[lp]),
+                        "_mn": None if empty[lp] else float(mn[lp]),
+                        "_mx": None if empty[lp] else float(mx[lp]),
+                    })
+            yield pd.DataFrame(out)
 
-        lines = tc.df.mapInPandas(partials, out_schema)
+    lines = tc.df.mapInPandas(partials, out_schema)
 
     if dim == X:
         idx = F.col("tile_row").cast("long") * T + F.col("_lp")
@@ -947,24 +776,11 @@ def _partial_finish(reducer: str):
 def _spatial_line_values(tc: TiledCube, dim: str):
     """Stage 1 of the spatial-axis multiset path: per-line non-NULL
     value arrays out of each tile, rows
-    ``(*keys, tile_row, tile_col, _lp, _vals)`` — sql HOF filter
-    (oracle mode) or numpy (scale path). NULL stripping shrinks the
+    ``(*keys, tile_row, tile_col, _lp, _vals)``, one numpy
+    ``mapInPandas`` pass. NULL stripping shrinks the
     line-keyed exchange below per-pixel keyed rows."""
     T = tc.tile
     keys = tc.key_dims
-    if not _numpy_engine(T):
-        line_vals = (
-            f"slice(data, r * {T} + 1, {T})" if dim == X
-            else f"transform(sequence(0, {T - 1}), q -> data[q * {T} + r])"
-        )
-        vals = (
-            f"transform(sequence(0, {T - 1}), "
-            f"r -> filter({line_vals}, v -> v IS NOT NULL))"
-        )
-        return tc.df.select(
-            *keys, "tile_row", "tile_col",
-            F.posexplode(F.expr(vals)).alias("_lp", "_vals"),
-        )
     import numpy as np
     import pandas as pd
     from typing import Iterator
@@ -1055,7 +871,7 @@ def quantiles_spatial_tiled(
 def _reduce_spatial_multiset(tc: TiledCube, dim: str, reducer: str) -> Cube:
     """median/product over a spatial axis (see
     :func:`reduce_spatial_tiled`): per-line non-NULL value arrays out
-    of each tile (sql HOF filter or numpy), one line-keyed exchange of
+    of each tile, one line-keyed exchange of
     COMPACT arrays, explode after the exchange, finish with the long
     reducer expressions."""
     from ..operators.reducers import median_expr, product_expr
@@ -1091,7 +907,7 @@ def _fold_time_groups(
 ) -> DataFrame:
     """Shared engine of reduce_time_tiled / aggregate_temporal_period_
     tiled: the element-wise fold over each (band, *extra_keys, tile)
-    group's arrays, sql or numpy. Band-less cubes (a band-expression
+    group's arrays. Band-less cubes (a band-expression
     reducer's output) group on the remaining keys."""
     band = [BAND] if BAND in tc.schema.dims else []
     return _fold_groups(
@@ -1104,100 +920,33 @@ def _fold_time_groups(
 def _fold_groups(
     tc: TiledCube, reducer: str, keys: list[str], sort_field: str,
 ) -> DataFrame:
-    """The element-wise fold over each key-group's arrays (sql or
-    numpy), collapsing whatever dimension is NOT in ``keys``;
-    ``sort_field`` pins the fold order (time for time reductions,
-    band label for band reductions)."""
-    if reducer not in (*_TILE_SQL_REDUCERS, "sd", "variance"):
-        raise ValueError(
-            f"reducer must be one of "
-            f"{sorted((*_TILE_SQL_REDUCERS, 'sd', 'variance'))}, "
-            f"got {reducer!r} (median has its own op: "
-            "reduce_time_median_tiled)"
-        )
-    if _numpy_engine(tc.tile):
-        return _reduce_time_numpy(tc, reducer, keys, sort_field)
-    T2 = tc.tile * tc.tile
-    if reducer in ("sd", "variance"):
-        # exact-sums sample sd/variance per position (the long tier's
-        # reducers.sd_expr arithmetic): three element-wise folds
-        # (Σx, Σx², count) combined by a nested zip_with; <2 samples
-        # → NULL, NULL elements skipped
-        # greatest(0, .): the sd_expr cancellation clamp
-        core = ("greatest(CAST(0.0 AS DOUBLE), sq.q - sq.s * sq.s / c)"
-                " / (c - 1)")
-        fin = f"sqrt({core})" if reducer == "sd" else core
-        fold = (
-            f"transform(array(array_sort(collect_list(struct({sort_field}, data)))), "
-            "ds -> zip_with("
-            "  zip_with("
-            f"    aggregate(ds, array_repeat(CAST(0.0 AS DOUBLE), {T2}), "
-            "      (acc, e) -> zip_with(acc, e.data, "
-            "        (a, v) -> a + coalesce(v, CAST(0.0 AS DOUBLE)))), "
-            f"    aggregate(ds, array_repeat(CAST(0.0 AS DOUBLE), {T2}), "
-            "      (acc, e) -> zip_with(acc, e.data, "
-            "        (a, v) -> a + coalesce(v * v, CAST(0.0 AS DOUBLE)))), "
-            "    (s, q) -> named_struct('s', s, 'q', q)), "
-            f"  aggregate(ds, array_repeat(CAST(0 AS BIGINT), {T2}), "
-            "    (acc, e) -> zip_with(acc, e.data, "
-            "      (a, v) -> a + CASE WHEN v IS NULL THEN 0 ELSE 1 END)), "
-            f"  (sq, c) -> CASE WHEN c > 1 THEN {fin} END))[0]"
-        )
-        return (
-            _widened(tc, keys).groupBy(*keys)
-            .agg(F.expr(fold).alias("data"))
-            .select(*keys, "data")
-        )
-    merge, finish = _TILE_SQL_REDUCERS[reducer]
-    init = (
-        f"array_repeat(CAST(NULL AS DOUBLE), {T2})"
-        if reducer in ("min", "max")
-        else f"array_repeat(CAST(0.0 AS DOUBLE), {T2})"
-    )
-    # LET idiom: the sorted collect_list binds ONCE as lambda var `ds`
-    # (interpreted HOFs get no CSE — a staged alias would re-evaluate)
-    fold = (
-        f"transform(array(array_sort(collect_list(struct({sort_field}, data)))), "
-        "ds -> zip_with("
-        f"  aggregate(ds, {init}, "
-        f"    (acc, s) -> zip_with(acc, s.data, {merge})), "
-        f"  aggregate(ds, array_repeat(CAST(0 AS BIGINT), {T2}), "
-        "    (acc, s) -> zip_with(acc, s.data, "
-        "      (a, v) -> a + CASE WHEN v IS NULL THEN 0 ELSE 1 END)), "
-        f"  (s, c) -> {finish}))[0]"
-    )
-    return (
-        _widened(tc, keys).groupBy(*keys)
-        .agg(F.expr(fold).alias("data"))
-        .select(*keys, "data")
-    )
-
-
-def _reduce_time_numpy(
-    tc: TiledCube, reducer: str, keys: list[str], sort_field: str
-) -> DataFrame:
+    """The element-wise fold over each key-group's arrays, collapsing
+    whatever dimension is NOT in ``keys``; ``sort_field`` pins the fold
+    order (time for time reductions, band label for band reductions).
+    One Arrow-batched ``applyInPandas`` per group: stack the group's
+    arrays, one vectorized nan-reduction."""
     import numpy as np
     import pandas as pd
 
-    nanop = {
-        "mean": None,  # sums/counts below (matches the sql fold exactly)
-        "sum": np.nansum,
-        "min": np.nanmin,
-        "max": np.nanmax,
-        "sd": None,   # exact sums below (reducers.sd_expr arithmetic)
-        "variance": None,
-    }[reducer]
+    allowed = ["max", "mean", "min", "sd", "sum", "variance"]
+    if reducer not in allowed:
+        raise ValueError(
+            f"reducer must be one of {allowed}, "
+            f"got {reducer!r} (median has its own op: "
+            "reduce_time_median_tiled)"
+        )
+    nanop = {"sum": np.nansum, "min": np.nanmin, "max": np.nanmax}.get(reducer)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        # pin the stack order by the collapsed axis: the sql fold's
-        # array_sort does exactly this, and nansum's pairwise summation
-        # is permutation-sensitive in the last ulp on non-dyadic data —
-        # without the sort, a partitioning change upstream could move a
-        # sum result (round-15 continuation; enables _widened's
-        # parallelism floor unconditionally)
+        # pin the stack order by the collapsed axis: nansum's pairwise
+        # summation is permutation-sensitive in the last ulp on
+        # non-dyadic data — without the sort, a partitioning change
+        # upstream could move a sum result
         stack = _tile_stack(pdf.sort_values(sort_field))
         all_nan = np.isnan(stack).all(axis=0)
         if reducer in ("sd", "variance"):
+            # exact sums (the long tier's reducers.sd_expr arithmetic);
+            # <2 samples → NULL, clamped at 0 against cancellation
             c = (~np.isnan(stack)).sum(axis=0)
             sm = np.nansum(stack, axis=0)
             sq = np.nansum(stack * stack, axis=0)
@@ -1710,10 +1459,9 @@ def reduce_time_median_tiled(tc: TiledCube) -> TiledCube:
     ``percentile`` and DuckDB ``quantile_cont`` at q=0.5 (exact on the
     dyadic fixture: sorting plus one mean of two dyadics).
 
-    numpy-only engine (no sql fold mode): a per-position sort in
-    interpreted HOF lambdas is O(tile² · n_t log n_t) interpreted
-    evaluations per tile — the vectorized ``np.nanmedian`` over the
-    stacked (n_t, tile²) block is the only sensible physical plan, and
+    The vectorized ``np.nanmedian`` over the stacked (n_t, tile²)
+    block (a per-position sort in interpreted SQL lambdas would be
+    O(tile² · n_t log n_t) interpreted evaluations per tile), and
     its exactness on the gate fixture is an arithmetic argument, not a
     hope (pinned against the long reducer by oracle + pytest)."""
     if TIME not in tc.schema.dims:
@@ -2373,10 +2121,9 @@ def resample_spatial_tiled(
     this is the layout paying for itself (the same reason the reference
     resamples inside dask chunks, ``load_odc_collection.py:130``).
 
-    Engines (by tile size, :func:`_numpy_engine`): sql — a nested HOF
-    fold, oracle mode at small tiles; numpy — an Arrow-batched reshape +
-    nan-reduction per tile, the scale path. Reducers: mean / sum / min /
-    max / nearest (upper-left sample — openEO ``near``)."""
+    Each tile is an Arrow-batched numpy reshape + nan-reduction
+    (``mapInPandas``). Reducers: mean / sum / min / max / nearest
+    (upper-left sample — openEO ``near``)."""
     from dataclasses import replace as _dc_replace
 
     from .cube import GridSpec
@@ -2396,75 +2143,43 @@ def resample_spatial_tiled(
     if g is None:
         raise ValueError("resample_spatial_tiled needs a GridSpec")
     OT = T // k
-    OT2, K2 = OT * OT, k * k
-    if not _numpy_engine(T):
-        gather = (
-            f"data[((p DIV {OT}) * {k} + q DIV {k}) * {T} "
-            f"+ (p % {OT}) * {k} + q % {k}]"
-        )
-        if reducer == "nearest":
-            pool = f"data[(p DIV {OT}) * {k} * {T} + (p % {OT}) * {k}]"
-        elif reducer in ("mean", "sum"):
-            finish = (
-                "CASE WHEN acc.c = 0 THEN CAST(NULL AS DOUBLE) "
-                + ("ELSE acc.s / acc.c END" if reducer == "mean"
-                   else "ELSE acc.s END")
-            )
-            pool = (
-                f"aggregate(sequence(0, {K2 - 1}), "
-                "named_struct('s', CAST(0.0 AS DOUBLE), 'c', CAST(0 AS BIGINT)), "
-                f"(acc, q) -> CASE WHEN {gather} IS NULL THEN acc "
-                f"ELSE named_struct('s', acc.s + {gather}, 'c', acc.c + 1) END, "
-                f"acc -> {finish})"
-            )
-        else:
-            cmp = "<" if reducer == "min" else ">"
-            pool = (
-                f"aggregate(sequence(0, {K2 - 1}), CAST(NULL AS DOUBLE), "
-                f"(acc, q) -> CASE WHEN {gather} IS NULL THEN acc "
-                f"WHEN acc IS NULL THEN {gather} "
-                f"WHEN {gather} {cmp} acc THEN {gather} ELSE acc END)"
-            )
-        out = F.expr(f"transform(sequence(0, {OT2 - 1}), p -> {pool})")
-        df = tc.df.withColumn("data", out)
-    else:
-        import numpy as np
-        import pandas as pd
-        from typing import Iterator
+    import numpy as np
+    import pandas as pd
+    from typing import Iterator
 
-        red = reducer
+    red = reducer
 
-        def pool_batch(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-            for pdf in batches:
-                pooled = []
-                for d in pdf["data"]:
-                    a = np.asarray(d, dtype="float64").reshape(T, T)
-                    if red == "nearest":
-                        out = a[::k, ::k]
+    def pool_batch(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        for pdf in batches:
+            pooled = []
+            for d in pdf["data"]:
+                a = np.asarray(d, dtype="float64").reshape(T, T)
+                if red == "nearest":
+                    out = a[::k, ::k]
+                else:
+                    b = a.reshape(OT, k, OT, k)
+                    nan = np.isnan(b)
+                    all_nan = nan.all(axis=(1, 3))
+                    if red == "mean":
+                        c = (~nan).sum(axis=(1, 3))
+                        s = np.nansum(b, axis=(1, 3))
+                        with np.errstate(invalid="ignore"):
+                            out = np.where(c > 0, s / np.maximum(c, 1), np.nan)
+                    elif red == "sum":
+                        out = np.where(all_nan, np.nan, np.nansum(b, axis=(1, 3)))
                     else:
-                        b = a.reshape(OT, k, OT, k)
-                        nan = np.isnan(b)
-                        all_nan = nan.all(axis=(1, 3))
-                        if red == "mean":
-                            c = (~nan).sum(axis=(1, 3))
-                            s = np.nansum(b, axis=(1, 3))
-                            with np.errstate(invalid="ignore"):
-                                out = np.where(c > 0, s / np.maximum(c, 1), np.nan)
-                        elif red == "sum":
-                            out = np.where(all_nan, np.nan, np.nansum(b, axis=(1, 3)))
-                        else:
-                            # nan-reductions warn on all-nan blocks;
-                            # zero-fill those and restore NULL after
-                            op = np.nanmin if red == "min" else np.nanmax
-                            safe = np.where(
-                                all_nan[:, None, :, None], 0.0, b
-                            )
-                            out = op(safe, axis=(1, 3))
-                            out = np.where(all_nan, np.nan, out)
-                    pooled.append(_tile_list(out))
-                yield pdf.assign(data=pooled)
+                        # nan-reductions warn on all-nan blocks;
+                        # zero-fill those and restore NULL after
+                        op = np.nanmin if red == "min" else np.nanmax
+                        safe = np.where(
+                            all_nan[:, None, :, None], 0.0, b
+                        )
+                        out = op(safe, axis=(1, 3))
+                        out = np.where(all_nan, np.nan, out)
+                pooled.append(_tile_list(out))
+            yield pdf.assign(data=pooled)
 
-        df = tc.df.mapInPandas(pool_batch, tc.df.schema)
+    df = tc.df.mapInPandas(pool_batch, tc.df.schema)
     schema = _dc_replace(
         tc.schema,
         grid=GridSpec(x0=g.x0, y0=g.y0, resx=g.resx * k, resy=g.resy * k),
@@ -2472,6 +2187,7 @@ def resample_spatial_tiled(
     n_y2 = -(-tc.n_y // k)
     n_x2 = -(-tc.n_x // k)
     return TiledCube(df, schema, OT, n_y2, n_x2)
+
 
 def resample_spatial_warp_tiled(
     tc: TiledCube, projection, resolution: float, method: str = "near"
@@ -3857,7 +3573,7 @@ def filter_bbox_tiled_native(
 def _ccw(poly):
     """Ring as float pairs, CW reversed to CCW (shoelace) — the shared
     orientation rule of convex_contains_col, the SQL zones literal and
-    the numpy zonal engine (one normalization, three consumers)."""
+    the zonal tagging stage (one normalization, three consumers)."""
     pts = [(float(x), float(y)) for x, y in poly]
     n = len(pts)
     area2 = sum(
@@ -3867,13 +3583,12 @@ def _ccw(poly):
     return pts[::-1] if area2 < 0 else pts
 
 
-def _zones_literal_sql(polygons, ccw: bool = True) -> str:
+def _zones_literal_sql(polygons) -> str:
     """The polygon list as ONE constant-foldable SQL expression:
     ``from_json('<zones json>', 'array<struct<id, bbox, edges>>')``.
-    Rings are CW→CCW-normalized via :func:`_ccw` when ``ccw`` (the
-    convex half-plane engine's requirement) and kept in ORIGINAL vertex
-    order otherwise (the crossing test must round like the long
-    ray-cast UDF); ``edges`` carries (x1, y1, x2, y2, dx, dy) per
+    Rings are CW→CCW-normalized via :func:`_ccw` (the half-plane
+    interior test's requirement; concave lists use only the bboxes);
+    ``edges`` carries (x1, y1, x2, y2, dx, dy) per
     directed edge. Doubles go through json.dumps' shortest-round-trip
     repr and Jackson's exact parse — bit-identical to the Python float
     (oracle-pinned).
@@ -3889,7 +3604,7 @@ def _zones_literal_sql(polygons, ccw: bool = True) -> str:
 
     zs = []
     for i, poly in enumerate(polygons):
-        pts = _ccw(poly) if ccw else [(float(x), float(y)) for x, y in poly]
+        pts = _ccw(poly)
         xs = [p[0] for p in pts]
         ys = [p[1] for p in pts]
         n = len(pts)
@@ -3922,18 +3637,6 @@ def _inside_sql(z: str, xc: str, yc: str) -> str:
     return (
         f"forall({z}.edges, e -> "
         f"e.dx * ({yc} - e.y1) - e.dy * ({xc} - e.x1) >= 0)"
-    )
-
-
-# even-odd ray cast of (xc, yc) against zone lambda-var z — the SAME
-# per-edge float arithmetic as operators/filters._ray_cast_contains
-# (xint = x1 + (y - y1) / (y2 - y1) * (x2 - x1)), as a boolean XOR fold
-def _crossing_sql(z: str, xc: str, yc: str) -> str:
-    return (
-        f"aggregate({z}.edges, false, (acc, e) -> "
-        f"CASE WHEN (({yc} < e.y1) != ({yc} < e.y2)) AND "
-        f"{xc} < e.x1 + ({yc} - e.y1) / (e.y2 - e.y1) * (e.x2 - e.x1) "
-        "THEN NOT acc ELSE acc END)"
     )
 
 
@@ -3990,27 +3693,22 @@ def aggregate_spatial_tiled(
     ``reducers.product_expr`` pins), so tagged pixel VALUES flow into
     one exchange instead.
 
-    Two engines behind identical semantics, chosen by tile size
-    (:func:`_numpy_engine`):
-
-    - sql — interpreted HOF folds and a posexplode boundary tagging
-      path; engine-exact, the oracle mode.
-    - numpy — ONE Arrow-batched ``mapInPandas`` pass over the
-      touched tiles does the interior folds AND the boundary per-pixel
-      tagging vectorized (half-plane tests as array ops against the
-      same CCW edges; first-match by ascending id over untagged
-      pixels), emitting per-(tile, zone) partials — no explode, no
-      per-pixel interpreted lambdas. This is the scale path for BOTH
-      regimes: zones ≫ tile (interior folds dominate) and zones ≪
-      tile (every tile is boundary — measured 33× over the sql
-      explode at 2025 sub-tile zones on 12.6 M px, PLANS.md round-10).
+    The per-tile work is ONE Arrow-batched ``mapInPandas`` pass over
+    the touched tiles (:func:`_zonal_numpy`): interior folds AND the
+    boundary per-pixel tagging vectorized (half-plane tests as array
+    ops against the same CCW edges; first-match by ascending id over
+    untagged pixels), emitting per-(tile, zone) partials — no explode,
+    no per-pixel interpreted lambdas, for both regimes: zones ≫ tile
+    (interior folds dominate) and zones ≪ tile (every tile is boundary
+    — measured 33× over a SQL posexplode tagging path at 2025 sub-tile
+    zones on 12.6 M px, PLANS.md round-10).
 
     Concave polygons are native (round 10): the long operator switches
     ALL polygons to the even-odd ray-cast rule when any is concave, so
     the tiled tier mirrors it exactly — no interior claims (the
     4-corner proof is a convex property), every touched tile runs the
-    per-pixel crossing test (:func:`_crossing_sql` / the UDF's own
-    numpy arithmetic), and outside tiles still prune at the scan."""
+    per-pixel crossing test (the long UDF's own numpy arithmetic), and
+    outside tiles still prune at the scan."""
     from ..functions.geometry import is_convex
 
     if reducer not in _ZONAL_REDUCERS:
@@ -4068,7 +3766,7 @@ def aggregate_spatial_tiled(
         (F.lit(g.y0) - F.lit(g.resy) * py_hi).alias("_ylo"),  # south edge
         (F.lit(g.y0) - F.lit(g.resy) * py_lo).alias("_yhi"),  # north edge
     )
-    zlit = _zones_literal_sql(polygons, ccw=all_cvx)
+    zlit = _zones_literal_sql(polygons)
     bbox_touch = (
         "z.xmin <= _xhi AND z.xmax >= _xlo "
         "AND z.ymin <= _yhi AND z.ymax >= _ylo"
@@ -4097,153 +3795,9 @@ def aggregate_spatial_tiled(
         F.expr(ig_expr) if all_cvx else F.lit(None).cast("int"),
     )
 
-    if _numpy_engine(T):
-        return _zonal_numpy(
-            tc, staged, polygons, reducer, target_dimension, all_cvx
-        )
-
-    # ---- sql engine (interpreted HOFs; the pinned oracle mode) ----
-    if reducer in ("median", "product"):
-        # multiset reducers: median needs the pixel value multiset for
-        # the exact percentile; product folds over the SORTED values
-        # (reducers.product_expr — sorting pins the rounding order, so
-        # the tiled fold is bit-identical to the long one)
-        from ..operators.reducers import median_expr, product_expr
-
-        agg = median_expr(VALUE) if reducer == "median" else product_expr(VALUE)
-        px = _zonal_pixels(
-            staged, zlit, bbox_touch, keys, T, tc, target_dimension,
-            interior_too=True, all_cvx=all_cvx,
-        )
-        out = (
-            px.groupBy(target_dimension, *keys)
-            .agg(agg.alias(VALUE))
-            .where(F.col(target_dimension).isNotNull())
-        )
-        return Cube(out, tc.schema.drop(X).drop(Y))
-
-    # interior tiles -> (s, ss, c, mn, mx) partials, one row per tile
-    fold = F.expr(
-        "aggregate(data, named_struct("
-        "'s', CAST(0.0 AS DOUBLE), 'ss', CAST(0.0 AS DOUBLE), "
-        "'c', CAST(0 AS BIGINT), "
-        "'mn', CAST(NULL AS DOUBLE), 'mx', CAST(NULL AS DOUBLE)), "
-        "(acc, v) -> CASE WHEN v IS NULL THEN acc ELSE named_struct("
-        "'s', acc.s + v, 'ss', acc.ss + v * v, 'c', acc.c + 1, "
-        "'mn', CASE WHEN acc.mn IS NULL OR v < acc.mn THEN v ELSE acc.mn END, "
-        "'mx', CASE WHEN acc.mx IS NULL OR v > acc.mx THEN v ELSE acc.mx END) "
-        "END)"
+    return _zonal_numpy(
+        tc, staged, polygons, reducer, target_dimension, all_cvx
     )
-    interior = (
-        staged.where(F.col("_ig").isNotNull())
-        .select(*keys, F.col("_ig").alias(target_dimension),
-                fold.alias("_p"))
-        .select(
-            target_dimension, *keys,
-            F.col("_p.s").alias("_s"), F.col("_p.ss").alias("_ss"),
-            F.col("_p.c").alias("_c"),
-            F.col("_p.mn").alias("_mn"), F.col("_p.mx").alias("_mx"),
-        )
-    )
-
-    # boundary tiles: pixels out, exact first-match tagging, then the
-    # same partial shape
-    b = _zonal_pixels(
-        staged.where(F.col("_ig").isNull()),
-        zlit, bbox_touch, keys, T, tc, target_dimension,
-        interior_too=False, all_cvx=all_cvx,
-    )
-    boundary = (
-        b.groupBy(target_dimension, *keys)
-        .agg(
-            F.coalesce(F.sum(VALUE), F.lit(0.0)).alias("_s"),
-            F.coalesce(
-                F.sum(F.col(VALUE) * F.col(VALUE)), F.lit(0.0)
-            ).alias("_ss"),
-            F.count(VALUE).alias("_c"),
-            F.min(VALUE).alias("_mn"),
-            F.max(VALUE).alias("_mx"),
-        )
-        .where(F.col(target_dimension).isNotNull())
-    )
-    return _zonal_finish(
-        interior.unionByName(boundary), reducer, target_dimension, keys, tc
-    )
-
-
-def _zonal_finish(
-    partials, reducer: str, target_dimension: str, keys, tc: TiledCube
-) -> Cube:
-    """Combine per-(tile, zone) partial rows into the final zonal
-    answer — ONE exchange keyed by (geom, band[, time]), key count
-    independent of raster size. Finisher shared with the spatial-axis
-    reducers (:func:`_partial_finish`)."""
-    out = (
-        partials.groupBy(target_dimension, *keys)
-        .agg(_partial_finish(reducer).alias(VALUE))
-    )
-    return Cube(out, tc.schema.drop(X).drop(Y))
-
-
-def _zonal_pixels(
-    staged,
-    zlit: str,
-    bbox_touch: str,
-    keys,
-    T: int,
-    tc: TiledCube,
-    target_dimension: str,
-    interior_too: bool,
-    all_cvx: bool = True,
-):
-    """SQL-engine pixel tagging: posexplode the given classified tile
-    rows to tagged pixel rows.
-
-    ``_tz`` (the tile's touching-zone list) is materialized per TILE
-    row before the Generate — per-pixel tagging then scans only the
-    touching zones (usually O(1)), never the full zone list. Interior
-    pixels (``interior_too=True``, the median path) tag with the
-    constant ``_ig`` via a short-circuiting coalesce — zero per-pixel
-    geometry off the boundary. Out-of-scene padding of edge tiles is
-    dropped by index bounds BEFORE tagging, so a zone overlapping only
-    padding can never fabricate a group the long operator lacks."""
-    g = tc.schema.grid
-    tz = (
-        F.expr(f"filter({zlit}, z -> {bbox_touch})")
-        if interior_too
-        else F.expr(
-            f"CASE WHEN _ig IS NULL THEN filter({zlit}, z -> {bbox_touch}) "
-            "END"
-        )
-    )
-    src = staged.select(
-        *keys, "tile_row", "tile_col", "_ig", tz.alias("_tz"), "data"
-    )
-    b = src.select(
-        *keys, "tile_row", "tile_col", "_ig", "_tz",
-        F.posexplode("data").alias("_pos", VALUE),
-    )
-    y_idx = F.col("tile_row").cast("long") * T + (F.col("_pos") / T).cast("long")
-    x_idx = F.col("tile_col").cast("long") * T + F.col("_pos") % T
-    b = b.where((y_idx < tc.n_y) & (x_idx < tc.n_x)).select(
-        *keys, "_ig", "_tz",
-        (F.lit(g.y0) - F.lit(g.resy) * y_idx).alias(Y),
-        (F.lit(g.x0) + F.lit(g.resx) * x_idx).alias(X),
-        VALUE,
-    )
-    contains = _inside_sql if all_cvx else _crossing_sql
-    pix_tag = F.expr(
-        f"filter(_tz, z -> {contains('z', X, Y)})[0].id"
-    )
-    tag = F.coalesce(F.col("_ig"), pix_tag) if interior_too else pix_tag
-    # NO isNotNull filter here: Catalyst pushes such a filter below the
-    # projection by substituting the alias, so the interpreted per-pixel
-    # HOF tag would evaluate TWICE per pixel (once in the Filter, once
-    # in the Project — measured 2x boundary cost). Untagged pixels ride
-    # into the aggregation as one NULL-keyed group per partition (map-
-    # side combine collapses them) and the CALLER drops that group
-    # after its groupBy.
-    return b.withColumn(target_dimension, tag).drop("_ig", "_tz")
 
 
 def _zonal_numpy(
@@ -4256,10 +3810,9 @@ def _zonal_numpy(
 ) -> Cube:
     """Vectorized zonal engine: ONE ``mapInPandas`` pass over the
     touched tiles computes interior folds AND boundary per-pixel
-    first-match tagging as numpy array ops (identical doubles to the
-    SQL engine: same CCW edges, same ``x0 + resx·ix`` coordinate
-    arithmetic, same half-plane sign test — pinned ≡ sql by pytest on
-    every reducer). Per tile the cost is
+    first-match tagging as numpy array ops (the long operator's CCW
+    edges, ``x0 + resx·ix`` coordinate arithmetic and half-plane sign
+    test — pinned ≡ the long tier by pytest on every reducer). Per tile the cost is
     O(touching zones · tile²) vectorized flops; no posexplode, no
     interpreted lambdas, no per-pixel rows except for median, where
     the tagged pixel VALUES (not coordinates) stream into one exact
@@ -4426,5 +3979,11 @@ def _zonal_numpy(
             if rows["_c"]:
                 yield pd.DataFrame(rows)
 
-    parts = staged.mapInPandas(partials, part_schema)
-    return _zonal_finish(parts, reducer, target_dimension, keys, tc)
+    # ONE exchange keyed by (geom, band[, time]) combines the
+    # per-(tile, zone) partials; key count independent of raster size
+    out = (
+        staged.mapInPandas(partials, part_schema)
+        .groupBy(target_dimension, *keys)
+        .agg(_partial_finish(reducer).alias(VALUE))
+    )
+    return Cube(out, tc.schema.drop(X).drop(Y))

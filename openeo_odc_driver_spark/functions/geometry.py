@@ -118,8 +118,8 @@ def geom_id_case_sql(polys=None, xcol: str = "x", ycol: str = "y") -> str:
 def raycast_contains_sql(poly, xcol: str = "x", ycol: str = "y") -> str:
     """Even-odd ray-cast containment as portable SQL — the SAME
     per-edge float arithmetic as the engine's ray-cast UDF
-    (operators/filters._ray_cast_contains) and the tiled crossing HOF
-    (core/tiled._crossing_sql): crossing iff (y < y1) != (y < y2) and
+    (operators/filters._ray_cast_contains), which the tiled zonal
+    engine reuses: crossing iff (y < y1) != (y < y2) and
     x < x1 + (y - y1) / (y2 - y1) * (x2 - x1), XOR-folded as an odd
     crossing COUNT (both engines evaluate IEEE doubles left-to-right,
     so the oracle matches bit-for-bit away from degenerate on-edge

@@ -886,21 +886,10 @@ def _tiled_reduce_time_sweep(spark, sf_dir):
     (NULL elements skipped, all-NULL stays NULL; sd combines exact
     (n, Σx, Σx²) partials with reducers.sd_expr arithmetic) — each
     expanded back to long and equi-joined per pixel into one sweep row
-    against a single multi-column GROUP BY oracle. The tile-8 fixture
-    plans on the sql engine (the engine-exact fold); the numpy scale
-    path is pinned ≡ sql by pytest."""
-    from .core.tiled import (
-        from_tiled,
-        materialize_tiled,
-        reduce_time_tiled,
-        to_tiled,
-    )
+    against a single multi-column GROUP BY oracle."""
+    from .core.tiled import from_tiled, reduce_time_tiled, to_tiled
 
-    # round-15: the four reducer legs shared `tc` only lazily — each
-    # re-ran the pack (48 Exchanges, 0 ReusedExchange); materialize once.
-    tc = materialize_tiled(
-        to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16)
-    )
+    tc = to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16)
     out = from_tiled(reduce_time_tiled(tc, "mean")).df
     out = out.withColumnRenamed(VALUE, "mean")
     for red in ("max", "sum", "sd"):
@@ -1021,7 +1010,7 @@ def _tiled_reduce_bands_mean(spark, sf_dir):
     """Band-axis reduction natively on tiles (core/tiled.py:
     reduce_bands_tiled — the shared fold grouped by (time, tile)
     across the band rows, band-label sort order). Shares the long
-    reduce_bands_mean oracle; tile 8 plans on the sql engine."""
+    reduce_bands_mean oracle."""
     from .core.tiled import from_tiled, reduce_bands_tiled, to_tiled
 
     return from_tiled(
@@ -1042,7 +1031,7 @@ def _tiled_atp_season(spark, sf_dir):
     aggregate_temporal_period_tiled — date_trunc relabel + the shared
     element-wise fold per (band, period, tile); time survives,
     coarsened 3→1 on the monthly fixture). Shares the long season/max
-    oracle; tile 8 plans on the sql engine."""
+    oracle."""
     from .core.tiled import (
         aggregate_temporal_period_tiled,
         from_tiled,
@@ -1222,7 +1211,7 @@ def _tiled_resample_spatial(spark, sf_dir):
     a ZERO-shuffle scan-fused projection (every output tile is a pure
     function of one input tile; only the tile edge and grid resolution
     change). Oracle: the same block reduction over the long cube,
-    upper-left grid alignment. Tile 8 plans on the sql engine."""
+    upper-left grid alignment."""
     from .core.tiled import from_tiled, resample_spatial_tiled, to_tiled
 
     return from_tiled(
@@ -1254,13 +1243,10 @@ def _tiled_zonal_sweep(spark, sf_dir):
     tile classes; 5 operator invocations equi-joined on
     (geom_id, band, time) against one GROUP BY oracle (first-match
     tagging; product folds the SORTED list — reducers.product_expr)."""
-    from .core.tiled import aggregate_spatial_tiled, materialize_tiled
+    from .core.tiled import aggregate_spatial_tiled
     from .functions.geometry import FIXTURE_POLYGONS
 
-    # round-15: pack the shared fixture ONCE (materialize_tiled) — the
-    # five legs each re-embedded the to_tiled subtree (plan: 80
-    # Exchanges, 0 ReusedExchange), so the pack ran five times.
-    tc = materialize_tiled(_tiled_fixture(spark))
+    tc = _tiled_fixture(spark)
     out = None
     for red in ("mean", "count", "median", "sd", "product"):
         d = aggregate_spatial_tiled(
@@ -1292,8 +1278,7 @@ def _tiled_clim(spark, sf_dir):
     """Round-10: climatological_normal natively on tiles (the r9
     doc-phantom made real) — month-keyed mean fold per (band, month,
     tile), the month label riding the tile rows through from_tiled.
-    Shares the long climatological_normal oracle. The tile-4 fixture
-    plans on the sql fold engine."""
+    Shares the long climatological_normal oracle."""
     from .core.tiled import climatological_normal_tiled, from_tiled
 
     return from_tiled(
@@ -1331,7 +1316,7 @@ def _tiled_zonal_concave(spark, sf_dir):
     still pruned at the scan). The oracle is the same crossing
     arithmetic in DuckDB (functions/geometry.raycast_geom_id_case_sql)
     — identical IEEE evaluation order, .5-offset vertices keep pixels
-    off every edge. The tile-4 fixture plans on the sql engine."""
+    off every edge."""
     from .core.tiled import aggregate_spatial_tiled
     from .functions.geometry import is_convex
 
@@ -1551,12 +1536,11 @@ def _resample_spatial_warp_sweep(spark, sf_dir):
     # order), so the hash gate compares the same quantization.
     from .core.tiled import (
         from_tiled,
-        materialize_tiled,
         resample_spatial_warp_tiled,
         to_tiled,
     )
 
-    tcube = materialize_tiled(to_tiled(cube, tile=16, n_y=16, n_x=16))
+    tcube = to_tiled(cube, tile=16, n_y=16, n_x=16)
     tiled = from_tiled(resample_spatial_warp_tiled(
         tcube, 32632, 400.0
     )).df.withColumnRenamed(VALUE, "tiled_near")
@@ -1870,30 +1854,17 @@ def _tiled_apply_kernel_border_sweep(spark, sf_dir):
     tile=5 to keep the partial-tile padding remap covered; the others
     at tile=8. Four operator invocations joined per pixel against
     per-mode convolution CTEs."""
-    from .core.tiled import (
-        apply_kernel_tiled_layout,
-        from_tiled,
-        materialize_tiled,
-        to_tiled,
-    )
+    from .core.tiled import apply_kernel_tiled_layout, from_tiled, to_tiled
 
-    # round-15: pack each tile size ONCE (materialize_tiled) — three of
-    # the four legs share the tile=8 pack but re-ran it per leg (48
-    # Exchanges, 0 ReusedExchange: pandas pack stages never canonicalize
-    # equal).
     cube = synthetic_cube(spark)
-    packs: dict[int, object] = {}
     out = None
     for mode, tile in (
         ("wrap", 8), ("replicate", 8), ("reflect", 5), ("reflect_pixel", 8)
     ):
-        if tile not in packs:
-            packs[tile] = materialize_tiled(
-                to_tiled(cube, tile=tile, n_y=16, n_x=16)
-            )
         d = from_tiled(
             apply_kernel_tiled_layout(
-                packs[tile], _KERNEL, factor=_KERNEL_FACTOR, border=mode,
+                to_tiled(cube, tile=tile, n_y=16, n_x=16), _KERNEL,
+                factor=_KERNEL_FACTOR, border=mode,
             )
         ).df.withColumnRenamed(VALUE, mode)
         out = d if out is None else out.join(d, ["band", "time", "y", "x"])

@@ -36,11 +36,17 @@ from .plans.catalog import COLLECTION_SPECS
 from .plans.graph import ProcessGraph
 
 
-def _graph_md5(payload: dict, tiled: bool = False, tile: int = 8) -> str:
+def _graph_md5(payload: dict, tiled: bool = False, tile: int = 8,
+               tiled_store_dir: Optional[str] = None) -> str:
     """Cache key: the process graph plus the execution mode — a tiled
     run and a long run of the same graph are separate cache entries
     (their telemetry differs, and the artifact equivalence is an oracle
     property, not a cache assumption).
+
+    A tiled run also reads ``save_tiled`` stores, so its key covers
+    ``tiled_store_dir`` and the ``(st_mtime_ns, st_size)`` of each
+    loaded collection's ``_tiled_meta.json``: a rewritten store or a
+    new overview level rewrites the sidecar and misses the cache.
 
     Long-mode keys keep the ORIGINAL bare-graph serialization so cache
     rows written before the tiled mode existed still hit (round 13 —
@@ -48,10 +54,41 @@ def _graph_md5(payload: dict, tiled: bool = False, tile: int = 8) -> str:
     pre-existing row); only tiled runs use the wrapped shape, which by
     construction can never collide with a bare-graph hash."""
     graph = payload.get("process_graph", payload)
-    body = {"g": graph, "mode": ["tiled", tile]} if tiled else graph
+    if tiled:
+        body = {"g": graph, "mode": ["tiled", tile],
+                "stores": _store_versions(graph, tiled_store_dir)}
+    else:
+        body = graph
     return hashlib.md5(
         json.dumps(body, sort_keys=True).encode()
     ).hexdigest()
+
+
+def _store_versions(graph, store_dir: Optional[str]) -> list:
+    """``[store_dir, {collection: [mtime_ns, size] | None}]`` for every
+    ``load_collection`` id anywhere in the graph."""
+    ids = set()
+    stack = [graph]
+    while stack:
+        node = stack.pop()
+        if isinstance(node, dict):
+            args = node.get("arguments")
+            if (node.get("process_id") == "load_collection"
+                    and isinstance(args, dict)
+                    and isinstance(args.get("id"), str)):
+                ids.add(args["id"])
+            stack.extend(node.values())
+        elif isinstance(node, list):
+            stack.extend(node)
+    stamps = {}
+    for cid in sorted(ids):
+        try:
+            st = os.stat(os.path.join(store_dir or "", cid,
+                                      "_tiled_meta.json"))
+            stamps[cid] = [st.st_mtime_ns, st.st_size]
+        except OSError:
+            stamps[cid] = None
+    return [store_dir, stamps]
 
 
 def _valid_job_id(job_id) -> bool:
@@ -185,9 +222,20 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
                         "message": "job id must match "
                                    "[A-Za-z0-9._-]{1,64}"}), 400
 
+    def _json_object():
+        """The request body if it is a JSON object, else None."""
+        payload = request.get_json(force=True, silent=True)
+        return payload if isinstance(payload, dict) else None
+
+    def _invalid_body():
+        return jsonify({"code": "InvalidBody",
+                        "message": "request body must be a JSON object"}), 400
+
     @app.post("/graph")
     def run_graph():
-        payload = request.get_json(force=True)
+        payload = _json_object()
+        if payload is None:
+            return _invalid_body()
         job_id = payload.get("id") or hashlib.md5(
             os.urandom(16)
         ).hexdigest()[:12]
@@ -196,8 +244,14 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
         # execution-mode knobs ride the payload next to the graph
         # (this service's own shape — the reference has no tiled tier)
         tiled = bool(payload.get("tiled"))
-        tile = int(payload.get("tile", 8))
-        md5 = _graph_md5(payload, tiled=tiled, tile=tile)
+        tile = payload.get("tile", 8)
+        # a worker allocates tile² doubles per tile; bools are ints too
+        if type(tile) is not int or not 1 <= tile <= 1024:
+            return jsonify({"code": "InvalidTile",
+                            "message": "tile must be an integer in "
+                                       "1..1024"}), 400
+        md5 = _graph_md5(payload, tiled=tiled, tile=tile,
+                         tiled_store_dir=tiled_store_dir)
         job_dir = os.path.join(store.root, "jobs", job_id)
         os.makedirs(job_dir, exist_ok=True)
 
@@ -251,7 +305,10 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
 
     @app.delete("/stop_job")
     def stop_job():
-        job_id = request.get_json(force=True).get("id")
+        payload = _json_object()
+        if payload is None:
+            return _invalid_body()
+        job_id = payload.get("id")
         if not _valid_job_id(job_id):
             return _invalid_job_id()
         if not os.path.isdir(os.path.join(store.root, "jobs", job_id)):

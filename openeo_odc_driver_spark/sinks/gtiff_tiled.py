@@ -309,16 +309,6 @@ def save_gtiff_tiled(
         # exchange (still zero driver pixels)
         tc = retile(tc, 16 if tc.tile <= 16 else 256)
 
-    if overviews:
-        # round 16 (guide §5/§6): every overview level re-embeds tc's
-        # whole lineage, and each level pays a count AND a write — with
-        # N levels the pack re-executed up to 2(N+1) times. A lazy
-        # localCheckpoint materializes tc once (inside the base count)
-        # and every later level/count/write reads the persisted rows.
-        from ..core.tiled import materialize_tiled
-
-        tc = materialize_tiled(tc)
-
     T, h, w = tc.tile, tc.n_y, tc.n_x
     has_band = BAND in tc.schema.dims
     if not has_band and BAND in tc.df.columns:

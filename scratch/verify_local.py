@@ -19,6 +19,7 @@ CORRECTNESS_r{N}.json lands::
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 import traceback
@@ -111,10 +112,11 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default=None)
-    ap.add_argument("--cpus", default="16")
+    ap.add_argument("--cpus", default=str(len(os.sched_getaffinity(0))))
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    # the checkout this script lives in, not a fixed path
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from openeo_odc_driver_spark.session import get_spark
     from openeo_odc_driver_spark.registry import QUERIES, ORACLE
 

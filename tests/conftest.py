@@ -21,29 +21,6 @@ def sf_dir():
 
 
 @pytest.fixture
-def tile_engine(monkeypatch):
-    """``pin("sql" | "numpy")`` makes every tiled operator PLANNED after
-    the call take that engine, whatever its tile size (unpinned, the
-    engine follows tile size: sql below ``TILE_VECTORIZE_CELLS`` cells
-    per tile, numpy at or above). Plans built before a pin keep the
-    engine they were built with."""
-    from openeo_odc_driver_spark.core import tiled
-
-    cells = {"sql": sys.maxsize, "numpy": 0}
-
-    def pin(engine: str) -> None:
-        monkeypatch.setattr(tiled, "TILE_VECTORIZE_CELLS", cells[engine])
-
-    return pin
-
-
-@pytest.fixture
-def numpy_tiles(tile_engine):
-    """Every tiled operator planned in the test takes the numpy engine."""
-    tile_engine("numpy")
-
-
-@pytest.fixture
 def assign_engine(monkeypatch):
     """``pin("fold" | "vectorized")`` makes every centroid assignment
     PLANNED after the call take that engine, whatever k (unpinned, the

@@ -12,6 +12,10 @@ from pyspark.sql import functions as F
 from openeo_odc_driver_spark.core import tiled as t
 from openeo_odc_driver_spark.sources.synthetic import synthetic_cube, DEFAULT_SPEC
 
+# tiled operators have one engine; the single [numpy] id keeps these
+# tests' names comparable with earlier runs that also had a sql leg
+_ONE_ENGINE = pytest.mark.parametrize("engine", ["numpy"])
+
 
 def _square_zones(m: int, extent: float = 150.0):
     """m x m disjoint axis-aligned convex squares CENTERED on the m-grid
@@ -55,7 +59,7 @@ def _zone_centers(zones):
 
 
 @pytest.mark.parametrize("m", [15, 45])  # 225 and 2025 zones
-def test_zonal_tiled_many_zones(spark, m, tile_engine):
+def test_zonal_tiled_many_zones(spark, m):
     """The round-9 build died here (driver-side O(|zones|^2) expression
     + codegen fallback); the literal-array plan must both BUILD fast
     and answer exactly at hundreds-to-thousands of zones — pinned
@@ -67,11 +71,6 @@ def test_zonal_tiled_many_zones(spark, m, tile_engine):
 
     cube = synthetic_cube(spark)
     tc = t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny, n_x=DEFAULT_SPEC.nx)
-    # m=45 runs the vectorized engine (the many-zone scale path); m=15
-    # keeps the tile-size choice (sql at tile=4) so both engines face a
-    # zone swarm
-    if m == 45:
-        tile_engine("numpy")
     cols = ["geom_id", "band", "time", "value"]
     want = (
         aggregate_spatial(cube, zones, "count")
@@ -253,10 +252,10 @@ def test_tiled_plan_build_runs_zero_spark_jobs(spark):
     assert static_scene_dims("s2_l2a") == (full.n_y, full.n_x)
 
 
-@pytest.mark.parametrize("engine", ["sql", "numpy"])
-def test_climatological_normal_tiled_matches_long(spark, engine, tile_engine):
+@_ONE_ENGINE
+def test_climatological_normal_tiled_matches_long(spark, engine):
     """Round-10: the r9 doc-phantom is now a real op — month-keyed mean
-    fold on tiles ≡ the long climatological_normal, both engines."""
+    fold on tiles ≡ the long climatological_normal."""
     from openeo_odc_driver_spark.operators.aggregates import (
         climatological_normal,
     )
@@ -268,7 +267,6 @@ def test_climatological_normal_tiled_matches_long(spark, engine, tile_engine):
         climatological_normal(cube).df.toPandas()[cols]
         .sort_values(cols[:4]).reset_index(drop=True)
     )
-    tile_engine(engine)
     got = (
         t.from_tiled(t.climatological_normal_tiled(tc))
         .df.toPandas()[cols].sort_values(cols[:4]).reset_index(drop=True)
@@ -364,13 +362,12 @@ def test_tiled_store_ndvi_storage_first(spark):
     assert any("GreaterThanOrEqual(time" in s for s in scans)
 
 
-@pytest.mark.parametrize("engine", ["sql", "numpy"])
-def test_resample_tiled_partial_edge_blocks(spark, engine, tile_engine):
+@_ONE_ENGINE
+def test_resample_tiled_partial_edge_blocks(spark, engine):
     """Round-10 ADVICE: scene dims NOT divisible by factor*tile —
     13x15 px, tile=4, factor=2 → the last row/col blocks pool only
     their in-scene pixels (1x2 / 2x1 / 1x1 slivers) and padding never
-    leaks in; pinned against an independent pandas block reference,
-    both engines."""
+    leaks in; pinned against an independent pandas block reference."""
     import numpy as np
 
     from openeo_odc_driver_spark.sources.synthetic import CubeSpec
@@ -379,7 +376,6 @@ def test_resample_tiled_partial_edge_blocks(spark, engine, tile_engine):
     cube = synthetic_cube(spark, spec)
     g = cube.schema.grid
     tc = t.to_tiled(cube, tile=4, n_y=13, n_x=15)
-    tile_engine(engine)
     out = (
         t.from_tiled(t.resample_spatial_tiled(tc, 2, "mean"))
         .df.toPandas()
@@ -404,13 +400,13 @@ def test_resample_tiled_partial_edge_blocks(spark, engine, tile_engine):
     )
 
 
-@pytest.mark.parametrize("engine", ["sql", "numpy"])
-def test_zonal_tiled_concave_native(spark, engine, tile_engine):
+@_ONE_ENGINE
+def test_zonal_tiled_concave_native(spark, engine):
     """Round-10: concave polygons natively on tiles — the long operator
     switches ALL polygons to the even-odd ray-cast rule when any is
     concave, and the tiled crossing test mirrors its float arithmetic
     bit-for-bit. L-shape (notch excluded) + overlapping rectangle,
-    first-match, every reducer class, both engines."""
+    first-match, every reducer class."""
     from openeo_odc_driver_spark.operators.aggregates import aggregate_spatial
 
     ell = [
@@ -421,7 +417,6 @@ def test_zonal_tiled_concave_native(spark, engine, tile_engine):
     zones = [ell, rect]
     cube = synthetic_cube(spark)
     tc = t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny, n_x=DEFAULT_SPEC.nx)
-    tile_engine(engine)
     cols = ["geom_id", "band", "time", "value"]
     for reducer in ("count", "mean", "median"):
         want = (
@@ -553,7 +548,11 @@ def test_zonal_tiled_prunes_stored_scan(spark, tmp_path):
     tc = t.load_tiled(spark, store)
     out = t.aggregate_spatial_tiled(tc, FIXTURE_POLYGONS, "count")
     plan = out.df._jdf.queryExecution().executedPlan().toString()
-    scans = re.findall(r"PushedFilters: \[[^\]]*\]", plan)
+    # a long filter list is truncated with "..." and has no closing
+    # "]": end the match at "]", at the ReadSchema field that follows
+    # the list, or at the end of the scan line
+    scans = re.findall(
+        r"PushedFilters: \[[^\n]*?(?:\]|, ReadSchema|$)", plan, re.M)
     assert scans and any(
         "tile_row" in f and "tile_col" in f and "GreaterThanOrEqual" in f
         for f in scans
@@ -568,13 +567,11 @@ def test_zonal_tiled_prunes_stored_scan(spark, tmp_path):
 
 
 @pytest.mark.parametrize("reducer", ["sd", "variance"])
-@pytest.mark.parametrize("engine", ["sql", "numpy"])
-def test_tiled_reduce_time_sd_variance_matches_long(
-    spark, reducer, engine, tile_engine
-):
+@_ONE_ENGINE
+def test_tiled_reduce_time_sd_variance_matches_long(spark, reducer, engine):
     """Round-10: sd/variance close the tiled named-time-reducer set —
-    exact (n, Σx, Σx²) element-wise folds, both engines, pinned
-    frame-exact against the long reducer."""
+    exact (n, Σx, Σx²) element-wise folds, pinned frame-exact against
+    the long reducer."""
     from openeo_odc_driver_spark.operators.reducers import reduce_dimension
 
     cube = synthetic_cube(spark)
@@ -584,7 +581,6 @@ def test_tiled_reduce_time_sd_variance_matches_long(
         .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
     )
     tc = t.to_tiled(cube, tile=4, n_y=DEFAULT_SPEC.ny, n_x=DEFAULT_SPEC.nx)
-    tile_engine(engine)
     got = (
         t.from_tiled(
             t.reduce_time_tiled(tc, reducer)

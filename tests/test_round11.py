@@ -266,17 +266,16 @@ def test_resample_nonuniform_stride_demotes_not_errors(spark):
 # --- x/y reducers, period median, zonal product on tiles ---------------------
 
 
-def test_reduce_spatial_tiled_engines_match_long(spark, tile_engine):
-    """Both physical engines of the spatial-axis reducers reproduce the
-    long reduce_dimension exactly — partial tiles (tile=5) under numpy,
-    aligned tiles under sql, every partial-foldable reducer."""
+def test_reduce_spatial_tiled_engines_match_long(spark):
+    """The spatial-axis reducers reproduce the long reduce_dimension
+    exactly — aligned (tile=8) and partial (tile=5) tiles, every
+    partial-foldable reducer."""
     from openeo_odc_driver_spark.operators.reducers import reduce_dimension
 
     src = synthetic_cube(spark)
     tc8 = t.to_tiled(src, tile=8, n_y=16, n_x=16)
     tc5 = t.to_tiled(src, tile=5, n_y=16, n_x=16)
-    for engine, tc in (("sql", tc8), ("numpy", tc5)):
-        tile_engine(engine)
+    for tc in (tc8, tc5):
         for dim in ("x", "y"):
             for red in ("mean", "sum", "min", "max", "count", "sd",
                         "variance"):
@@ -310,7 +309,7 @@ def test_aggregate_period_median_tiled_matches_long(spark):
         _frames_equal(long_df, t.from_tiled(tiled).df)
 
 
-def test_zonal_product_tiled_engines_match_long(spark, tile_engine):
+def test_zonal_product_tiled_engines_match_long(spark):
     from openeo_odc_driver_spark.operators.aggregates import aggregate_spatial
 
     polys = [
@@ -319,9 +318,8 @@ def test_zonal_product_tiled_engines_match_long(spark, tile_engine):
     ]
     src = synthetic_cube(spark)
     long_df = aggregate_spatial(src, polys, "product").df
-    for engine, tile in (("sql", 8), ("numpy", 5)):
+    for tile in (8, 5):
         tc = t.to_tiled(src, tile=tile, n_y=16, n_x=16)
-        tile_engine(engine)
         tiled_df = t.aggregate_spatial_tiled(tc, polys, "product").df
         _frames_equal(long_df, tiled_df)
 
@@ -765,18 +763,17 @@ def test_apply_dimension_quantiles_graph_stays_tiled(spark):
     _frames_equal(long_pg.execute(spark).df, cube.df)
 
 
-def test_reduce_spatial_multiset_tiled_matches_long(spark, tile_engine):
+def test_reduce_spatial_multiset_tiled_matches_long(spark):
     """x/y median and product ride the compact line-multiset path —
-    both engines, partial tiles, exact against the long reducers."""
+    aligned and partial tiles, exact against the long reducers."""
     from openeo_odc_driver_spark.operators.reducers import reduce_dimension
 
     src = synthetic_cube(spark)
     for dim in ("x", "y"):
         for red in ("median", "product"):
             long_df = reduce_dimension(src, dim, red).df
-            for engine, tile in (("sql", 8), ("numpy", 5)):
+            for tile in (8, 5):
                 tc = t.to_tiled(src, tile=tile, n_y=16, n_x=16)
-                tile_engine(engine)
                 tiled = t.reduce_spatial_tiled(tc, dim, red)
                 _frames_equal(long_df, tiled.df)
 
@@ -908,20 +905,18 @@ def test_apply_kernel_tiled_border_modes_match_long(spark):
         )
 
 
-def test_quantiles_spatial_tiled_matches_long(spark, tile_engine):
+def test_quantiles_spatial_tiled_matches_long(spark):
     from openeo_odc_driver_spark.operators.reducers import quantiles
 
     src = synthetic_cube(spark)
     for dim in ("x", "y"):
         long_df = quantiles(src, dim, probabilities=[0.25, 0.5, 0.75]).df
-        for engine, tile in (("sql", 8), ("numpy", 5)):
+        for tile in (8, 5):
             tc = t.to_tiled(src, tile=tile, n_y=16, n_x=16)
-            tile_engine(engine)
             tiled = t.quantiles_spatial_tiled(
                 tc, dim, probabilities=[0.25, 0.5, 0.75],
             )
             _frames_equal(long_df, tiled.df)
-    tile_engine("sql")
     _frames_equal(
         quantiles(src, "y", q=4).df,
         t.quantiles_spatial_tiled(

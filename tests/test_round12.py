@@ -105,50 +105,45 @@ def test_retile_same_edge_jvm_matches_python(spark, row0, col0, n_y, n_x):
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
-def test_to_tiled_numpy_impl_matches_sql(spark, tile_engine):
-    """to_tiled's scale engine (numpy position scatter) is row-identical
-    to the sql HOF assembly the oracles pin — including NULL cells,
-    edge-tile padding, and the duplicate-pixel named error."""
+def test_to_tiled_numpy_impl_matches_sql(spark):
+    """to_tiled's packed rows match an independent pandas packing of the
+    long cube — NULL cells, edge-tile padding, row-major positions —
+    and duplicate pixel keys raise the named error."""
+    import numpy as np
     import pandas as pd
     import pytest as _pt
 
     from openeo_odc_driver_spark.core import tiled as t
+    from openeo_odc_driver_spark.core.cube import Cube
     from openeo_odc_driver_spark.sources.synthetic import synthetic_cube
 
+    T = 5
     cube = synthetic_cube(spark)
-    tile_engine("numpy")
-    a = t.to_tiled(cube, tile=5, n_y=16, n_x=16).df
-    tile_engine("sql")
-    b = t.to_tiled(cube, tile=5, n_y=16, n_x=16).df
+    g = cube.schema.grid
+    longp = cube.df.toPandas()
+    yi = np.rint((g.y0 - longp["y"]) / g.resy).astype(int)
+    xi = np.rint((longp["x"] - g.x0) / g.resx).astype(int)
+    longp["tile_row"], longp["tile_col"] = yi // T, xi // T
+    longp["_pos"] = (yi % T) * T + xi % T
     cols = ["band", "time", "tile_row", "tile_col"]
-    pa = a.toPandas().sort_values(cols).reset_index(drop=True)
-    pb = b.toPandas().sort_values(cols).reset_index(drop=True)
-    pd.testing.assert_frame_equal(pa, pb, check_exact=True)
+    want = {}
+    for key, grp in longp.groupby(cols):
+        arr = [None] * (T * T)
+        for p, v in zip(grp["_pos"], grp["value"]):
+            arr[p] = None if pd.isna(v) else float(v)
+        want[key] = arr
+    got = t.to_tiled(cube, tile=T, n_y=16, n_x=16).df.toPandas()
+    assert len(got) == len(want)
+    for rec in got.to_dict("records"):
+        key = tuple(rec[c] for c in cols)
+        data = [None if d is None or np.isnan(d) else d for d in rec["data"]]
+        assert data == want[key], key
 
-    # duplicate pixel keys raise the same named error in both engines
     dup = cube.df.unionAll(cube.df.limit(1))
-    from openeo_odc_driver_spark.core.cube import Cube
-
-    for engine in ("numpy", "sql"):
-        tile_engine(engine)
-        with _pt.raises(Exception, match="duplicate pixel keys"):
-            t.to_tiled(
-                Cube(dup, cube.schema), tile=5, n_y=16, n_x=16
-            ).df.collect()
-
-
-def test_to_tiled_auto_picks_numpy_at_scale_tiles():
-    """The engine follows tile size: tile=256 -> numpy, fixture tiles
-    -> sql (the oracle-pinned path)."""
-    from openeo_odc_driver_spark.core.tiled import (
-        TILE_VECTORIZE_CELLS,
-        _numpy_engine,
-    )
-
-    assert 256 * 256 >= TILE_VECTORIZE_CELLS
-    assert 8 * 8 < TILE_VECTORIZE_CELLS
-    assert _numpy_engine(256) and _numpy_engine(64)
-    assert not any(_numpy_engine(t) for t in (4, 5, 8, 32))
+    with _pt.raises(Exception, match="duplicate pixel keys"):
+        t.to_tiled(
+            Cube(dup, cube.schema), tile=T, n_y=16, n_x=16
+        ).df.collect()
 
 
 def test_band_quantiles_stay_tiled(spark):

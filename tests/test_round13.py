@@ -326,32 +326,39 @@ def test_planner_resample_spatial_projection(spark):
     assert out.df.count() > 0
 
 
-def test_to_tiled_nan_folds_to_null_both_engines(spark, tile_engine):
+def test_to_tiled_nan_folds_to_null_both_engines(spark):
     """Tiled-boundary convention (round 13): a float NaN input VALUE
-    folds to NULL on pack in BOTH engines — the Arrow float64 transfer
-    cannot distinguish NaN from NULL, so the sql HOF folds explicitly
-    to stay bit-exact with the numpy scatter."""
+    folds to NULL on pack — the Arrow float64 transfer cannot
+    distinguish NaN from NULL, so NULL is the packed array's only
+    missing-value representation."""
     from pyspark.sql import functions as F
 
     src = synthetic_cube(spark)
+    nan_cells = (F.col("x") < 20) & F.col("value").isNotNull()
     df = src.df.withColumn(
         "value",
-        F.when((F.col("x") < 20) & F.col("value").isNotNull(),
-               F.lit(float("nan"))).otherwise(F.col("value")),
+        F.when(nan_cells, F.lit(float("nan"))).otherwise(F.col("value")),
     )
     cube = Cube(df, src.schema)
-    tile_engine("sql")
     a = t.to_tiled(cube, tile=8, n_y=16, n_x=16)
-    tile_engine("numpy")
-    b = t.to_tiled(cube, tile=8, n_y=16, n_x=16)
-    keys = ["band", "time", "tile_row", "tile_col"]
-    pa = a.df.toPandas().sort_values(keys).reset_index(drop=True)
-    pb = b.df.toPandas().sort_values(keys).reset_index(drop=True)
-    assert len(pa) == 3 * 24 * 4  # 2x2 tiles per (band, time)
-    pd.testing.assert_frame_equal(
-        pa[sorted(pa.columns)], pb[sorted(pb.columns)],
-        check_exact=True, check_dtype=False,
+    assert a.df.count() == 3 * 24 * 4  # 2x2 tiles per (band, time)
+    keys = ["band", "time", "y", "x"]
+    want = (
+        src.df.withColumn(
+            "value", F.when(nan_cells, F.lit(None)).otherwise(F.col("value"))
+        ).toPandas()[[*keys, "value"]]
+        .sort_values(keys).reset_index(drop=True)
     )
+    got = (
+        t.from_tiled(a).df.toPandas()[[*keys, "value"]]
+        .sort_values(keys).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(want, got, check_exact=True,
+                                  check_dtype=False)
+    # pandas shows NULL and NaN alike: count them Spark-side
+    n_null = src.df.where(F.col("value").isNull() | nan_cells).count()
+    assert n_null > src.df.where(F.col("value").isNull()).count()
+    assert t.from_tiled(a).df.where(F.col("value").isNull()).count() == n_null
     # and no NaN survives into the packed arrays
     nan_tiles = a.df.where(
         "exists(data, v -> isnan(v))"

@@ -423,13 +423,14 @@ def test_raster_exchange_width_guard_and_scale(spark):
     from openeo_odc_driver_spark.core import tiled as t
     from openeo_odc_driver_spark.core.tiled import (
         _raster_exchange_width,
-        _widened,
+        _widen_df,
     )
 
     # gate scale: 16x16 px, 3 bands, 24 steps -> ~0.2 MB payload
     small = t.to_tiled(synthetic_cube(spark), tile=16, n_y=16, n_x=16)
     assert _raster_exchange_width(small) is None
-    assert _widened(small, ["band", "tile_row", "tile_col"]) is small.df
+    keys = ["band", "tile_row", "tile_col"]
+    assert _widen_df(small, small.df, keys) is small.df
 
     # probe scale as METADATA ONLY (the rule is action-free): the sf100
     # s2 scene — 2 bands x 30 days x 4580^2 px at tile 256
@@ -449,7 +450,7 @@ def test_raster_exchange_width_guard_and_scale(spark):
     # payload = 18*18 tiles x 2 bands x 30 x 256^2 x 8 B ≈ 10.2 GB
     # -> ~300 partitions at 32 MiB/task (the band dim halves before median;
     assert w is not None and 120 <= w <= 400  # well past the default 32
-    plan = (_widened(big, ["band", "tile_row", "tile_col"])
+    plan = (_widen_df(big, big.df, keys)
             ._jdf.queryExecution().optimizedPlan().toString())
     assert "RepartitionByExpression" in plan
 

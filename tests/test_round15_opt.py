@@ -63,7 +63,7 @@ def test_kernel_results_invariant_under_stage_width(spark, t8, monkeypatch):
 # fold order pinned, bigram one-pass model build ---------------------
 
 
-def test_numpy_fold_permutation_invariant(spark, numpy_tiles):
+def test_numpy_fold_permutation_invariant(spark):
     """The numpy reduce fold sorts its group stack by the collapsed
     axis before summing — the result must be bit-identical however the
     input rows are partitioned/ordered (non-dyadic values on purpose:

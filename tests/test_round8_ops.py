@@ -256,7 +256,7 @@ def test_tiled_roundtrip_lossless_across_tile_sizes(spark):
         pd.testing.assert_frame_equal(orig, rt, check_exact=True)
 
 
-def test_tiled_time_mean_matches_long_reducer(spark, tile_engine):
+def test_tiled_time_mean_matches_long_reducer(spark):
     import pandas as pd
 
     from openeo_odc_driver_spark.core.cube import BAND, VALUE, X, Y
@@ -271,22 +271,20 @@ def test_tiled_time_mean_matches_long_reducer(spark, tile_engine):
         .sort_values(cols[:3]).reset_index(drop=True)
     )
     tc = t.to_tiled(cube, tile=7)
-    for engine in ("sql", "numpy"):
-        tile_engine(engine)
-        tiled = (
-            t.from_tiled(t.reduce_time_tiled(tc, "mean"))
-            .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(long, tiled, check_exact=True)
+    tiled = (
+        t.from_tiled(t.reduce_time_tiled(tc, "mean"))
+        .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(long, tiled, check_exact=True)
     import pytest
 
     with pytest.raises(ValueError, match="reducer"):
         t.reduce_time_tiled(tc, "median")
 
 
-def test_tiled_reducers_match_long_across_engines(spark, tile_engine):
-    """sum/min/max per pixel: sql fold == numpy fold == the long
-    relational reducer, including NULL-skip and all-NULL → NULL."""
+def test_tiled_reducers_match_long_across_engines(spark):
+    """sum/min/max per pixel: the tile fold == the long relational
+    reducer, including NULL-skip and all-NULL → NULL."""
     import pandas as pd
 
     from openeo_odc_driver_spark.core.cube import BAND, VALUE, X, Y
@@ -302,16 +300,12 @@ def test_tiled_reducers_match_long_across_engines(spark, tile_engine):
             reduce_dimension(cube, "time", red).df.toPandas()[cols]
             .sort_values(cols[:3]).reset_index(drop=True)
         )
-        for engine in ("sql", "numpy"):
-            tile_engine(engine)
-            tiled = (
-                t.from_tiled(t.reduce_time_tiled(tc, red))
-                .df.toPandas()[cols].sort_values(cols[:3])
-                .reset_index(drop=True)
-            )
-            pd.testing.assert_frame_equal(
-                long, tiled, check_exact=True,
-            ), f"{red}/{engine}"
+        tiled = (
+            t.from_tiled(t.reduce_time_tiled(tc, red))
+            .df.toPandas()[cols].sort_values(cols[:3])
+            .reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(long, tiled, check_exact=True)
 
 
 def test_tiled_kernel_matches_long_scatter(spark):
@@ -524,10 +518,10 @@ def test_tiled_mask_matches_long_including_replacement(spark):
     pd.testing.assert_frame_equal(mixed, same, check_exact=True)
 
 
-def test_tiled_temporal_period_matches_long_across_engines(spark, tile_engine):
-    """Calendar-period resample on tiles ≡ the long operator for both
-    fold engines and two (period, reducer) combos, and the time-axis
-    metadata maps to the truncation image."""
+def test_tiled_temporal_period_matches_long_across_engines(spark):
+    """Calendar-period resample on tiles ≡ the long operator for two
+    (period, reducer) combos, and the time-axis metadata maps to the
+    truncation image."""
     import pandas as pd
 
     from openeo_odc_driver_spark.operators.aggregates import (
@@ -544,14 +538,12 @@ def test_tiled_temporal_period_matches_long_across_engines(spark, tile_engine):
             aggregate_temporal_period(cube, period, red).df.toPandas()[cols]
             .sort_values(cols[:4]).reset_index(drop=True)
         )
-        for engine in ("sql", "numpy"):
-            tile_engine(engine)
-            got_tc = t.aggregate_temporal_period_tiled(tc, period, red)
-            got = (
-                t.from_tiled(got_tc).df.toPandas()[cols]
-                .sort_values(cols[:4]).reset_index(drop=True)
-            )
-            pd.testing.assert_frame_equal(long, got, check_exact=True)
+        got_tc = t.aggregate_temporal_period_tiled(tc, period, red)
+        got = (
+            t.from_tiled(got_tc).df.toPandas()[cols]
+            .sort_values(cols[:4]).reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(long, got, check_exact=True)
     season = t.aggregate_temporal_period_tiled(tc, "season", "max")
     assert season.schema.time_axis is not None
     assert len(season.schema.time_axis) == 8  # 24 months -> 8 quarters
@@ -561,7 +553,7 @@ def test_tiled_temporal_period_matches_long_across_engines(spark, tile_engine):
         t.aggregate_temporal_period_tiled(tc, "fortnight", "max")
 
 
-def test_tiled_band_reduction_matches_long(spark, tile_engine):
+def test_tiled_band_reduction_matches_long(spark):
     import pandas as pd
 
     from openeo_odc_driver_spark.operators.reducers import reduce_dimension
@@ -575,13 +567,11 @@ def test_tiled_band_reduction_matches_long(spark, tile_engine):
         reduce_dimension(cube, "bands", "mean").df.toPandas()[cols]
         .sort_values(cols[:3]).reset_index(drop=True)
     )
-    for engine in ("sql", "numpy"):
-        tile_engine(engine)
-        got = (
-            t.from_tiled(t.reduce_bands_tiled(tc, "mean"))
-            .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(long, got, check_exact=True)
+    got = (
+        t.from_tiled(t.reduce_bands_tiled(tc, "mean"))
+        .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(long, got, check_exact=True)
     import pytest
 
     flat = t.reduce_bands_tiled(tc)

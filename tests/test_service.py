@@ -383,3 +383,85 @@ def test_tiled_demotion_free_graph_reports_empty(client):
     assert r.status_code == 200
     body = r.get_json()
     assert body["tiled"]["demotions"] == []
+
+
+def test_post_graph_rejects_non_object_body(client):
+    """A JSON body that is not an object is a named 400, not a 500."""
+    for body in ([1, 2], "graph", 7, None):
+        r = client.post("/graph", json=body)
+        assert r.status_code == 400, body
+        assert r.get_json()["code"] == "InvalidBody"
+    r = client.delete("/stop_job", json=[1, 2])
+    assert r.status_code == 400
+    assert r.get_json()["code"] == "InvalidBody"
+
+
+def test_post_graph_rejects_non_integer_tile(client):
+    """``tile`` must be an int: strings, null, bools and floats are a
+    named 400 before anything runs."""
+    for tile in ("abc", None, True, 8.0, "8"):
+        r = client.post("/graph", json={**_graph(), "tiled": True,
+                                         "tile": tile})
+        assert r.status_code == 400, tile
+        assert r.get_json()["code"] == "InvalidTile"
+
+
+def test_post_graph_rejects_out_of_range_tile(client):
+    """A worker allocates tile² doubles per tile: tiles outside 1..1024
+    are a named 400, in either mode."""
+    for tiled in (True, False):
+        for tile in (0, -8, 1025, 1 << 20):
+            r = client.post("/graph", json={**_graph(), "tiled": tiled,
+                                             "tile": tile})
+            assert r.status_code == 400, (tiled, tile)
+            assert r.get_json()["code"] == "InvalidTile"
+
+
+def test_tiled_cache_misses_after_store_rewrite(spark, tmp_path):
+    """A tiled run reads the save_tiled store, so rewriting the store
+    must miss the result cache; an unchanged store still hits."""
+    from pyspark.sql import functions as F
+
+    from openeo_odc_driver_spark.core.cube import Cube
+    from openeo_odc_driver_spark.core.tiled import save_tiled, to_tiled
+    from openeo_odc_driver_spark.plans.catalog import load_collection_cube
+    from openeo_odc_driver_spark.service import create_app
+
+    store = tmp_path / "store"
+    cube = load_collection_cube(spark, "synthetic")
+
+    def write(offset: float) -> None:
+        shifted = Cube(cube.df.withColumn("value", F.col("value") + offset),
+                       cube.schema)
+        save_tiled(to_tiled(shifted, tile=8, n_y=16, n_x=16),
+                   str(store / "synthetic"))
+
+    write(0.0)
+    app = create_app(spark, work_dir=str(tmp_path / "work"),
+                     tiled_store_dir=str(store))
+    app.config["TESTING"] = True
+    c = app.test_client()
+    payload = {"process_graph": {
+        "l": {"process_id": "load_collection",
+              "arguments": {"id": "synthetic"}},
+        "m": {"process_id": "reduce_dimension",
+              "arguments": {"data": {"from_node": "l"}, "dimension": "t",
+                            "reducer": {"process_graph": {"r": {
+                                "process_id": "max",
+                                "arguments": {
+                                    "data": {"from_parameter": "data"}},
+                                "result": True}}}}},
+        "s": {"process_id": "save_result",
+              "arguments": {"data": {"from_node": "m"}, "format": "GTIFF"},
+              "result": True},
+    }, "tiled": True, "tile": 8}
+
+    first = c.post("/graph", json=payload)
+    assert first.status_code == 200, first.get_json()
+    assert first.get_json()["cached"] is False
+    assert c.post("/graph", json=payload).get_json()["cached"] is True
+
+    write(1.0)
+    after = c.post("/graph", json=payload)
+    assert after.status_code == 200, after.get_json()
+    assert after.get_json()["cached"] is False
