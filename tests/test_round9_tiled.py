@@ -243,17 +243,15 @@ def test_zonal_tiled_matches_long_aggregate_spatial(spark, reducer):
         aggregate_spatial(cube, FIXTURE_POLYGONS, reducer)
         .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
     )
-    # tile=4 on 16x16: P0/P1 produce interior AND boundary tiles;
-    # tile=5 adds partial edge tiles whose padding must never tag
-    for tile in (4, 5):
-        tc = t.to_tiled(cube, tile=tile)
-        got = (
-            t.aggregate_spatial_tiled(tc, FIXTURE_POLYGONS, reducer)
-            .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(
-            want, got, check_exact=True, check_dtype=False
-        )
+    # tile=4 on 16x16: P0/P1 produce interior AND boundary tiles
+    tc = t.to_tiled(cube, tile=4)
+    got = (
+        t.aggregate_spatial_tiled(tc, FIXTURE_POLYGONS, reducer)
+        .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(
+        want, got, check_exact=True, check_dtype=False
+    )
 
 
 def test_zonal_tiled_classifies_interior_tiles(spark):
@@ -283,3 +281,33 @@ def test_zonal_tiled_classifies_interior_tiles(spark):
     # concave polygons are NATIVE since round 10 (crossing tests) —
     # parity pinned in test_round10.test_zonal_tiled_concave_native
 
+
+@pytest.mark.parametrize("reducer", ["mean", "sum", "min", "max", "count"])
+def test_zonal_tiled_numpy_engine_matches_sql(spark, reducer):
+    """The numpy zonal engine is pinned element-exact against a plain
+    Spark SQL oracle on the dyadic fixture: the long cube tagged by the
+    first-match CASE chain of half-plane tests, then GROUP BY. tile=5
+    on 16x16 leaves partial edge tiles whose padding must never tag."""
+    from openeo_odc_driver_spark.functions.geometry import (
+        FIXTURE_POLYGONS,
+        geom_id_case_sql,
+    )
+
+    cube = synthetic_cube(spark)
+    cube.df.createOrReplaceTempView("zonal_oracle_cube")
+    agg = {"mean": "avg"}.get(reducer, reducer)
+    cols = ["geom_id", "band", "time", "value"]
+    want = spark.sql(
+        f"SELECT geom_id, band, time, {agg}(value) AS value FROM ("
+        f"SELECT *, {geom_id_case_sql(FIXTURE_POLYGONS)} AS geom_id "
+        "FROM zonal_oracle_cube) WHERE geom_id IS NOT NULL "
+        "GROUP BY geom_id, band, time"
+    ).toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
+    tc = t.to_tiled(cube, tile=5)
+    got = (
+        t.aggregate_spatial_tiled(tc, FIXTURE_POLYGONS, reducer)
+        .df.toPandas()[cols].sort_values(cols[:3]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(
+        want, got, check_exact=True, check_dtype=False
+    )
