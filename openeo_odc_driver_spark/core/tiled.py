@@ -2532,8 +2532,9 @@ def resample_cube_temporal_tiled(source: TiledCube, target) -> TiledCube:
     """``resample_cube_temporal`` (nearest-time as-of join, reference
     ``openeo_odc_driver.py:360-380``) natively on tiles — time is a key
     column on the tile rows, so the long plan transfers row-for-row at
-    tile²× fewer rows (``operators/resample.py:15`` is the long twin):
-    the target→nearest-source mapping is built from the two tiny
+    tile²× fewer rows (the long twin's unknown-axis plan,
+    ``operators/resample.py:resample_cube_temporal``): the
+    target→nearest-source mapping is built from the two tiny
     distinct time axes (broadcast cross join + rank) and broadcast-
     equi-joined onto the source tile rows, relabeling time. **The packed
     arrays never open and the big side never shuffles** — this is the
@@ -2593,8 +2594,8 @@ def _axis_winner_map(
     expressions ``operators/resample.py:resample_cube_spatial``
     evaluates per row (coordinate, quotient, floor(·+0.5), squared
     distance — a derived ``off + step·i`` form rounds differently and
-    flips winners near rational-factor ties). Ties break by the long
-    window's ORDER BY coordinate: smaller x (= smaller i, ascending
+    flips winners near rational-factor ties). Ties break as in the long
+    snap's ``(d, x, y)`` minimum: smaller x (= smaller i, ascending
     axis), smaller y (= LARGER i, descending axis). The map is strictly
     increasing (snapper sets are disjoint). Raises
     :class:`TiledRegridUnsupported` when the long output's cell set is

@@ -2,7 +2,9 @@
 
 These are pure `.where()` predicates, so Catalyst pushes them into the
 parquet scan (PushedFilters) — at 100 TB they become partition pruning on
-`time` and row-group min/max pruning on x/y. Mirrors
+`time` and row-group min/max pruning on x/y. Each is one SQL string (one
+py4j call per node), with every request value quoted by
+``functions/sqltext.lit``. Mirrors
 ``openeo_odc_driver.py:686-707,1021-1078``.
 """
 
@@ -16,14 +18,18 @@ from typing import Sequence
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..core.cube import BAND, TIME, VALUE, X, Y, Cube
+from ..core.cube import BAND, TIME, X, Y, Cube
+from ..functions.sqltext import lit
 
 
 def filter_bands(cube: Cube, bands: Sequence[str]) -> Cube:
     """Keep listed bands (openeo_odc_driver.py:1031-1034). Band *order* is
     metadata in long format — recorded on the schema, no sort needed."""
     bands = tuple(bands)
-    out = cube.df.where(F.col(BAND).isin(list(bands)))
+    if not all(isinstance(b, str) for b in bands):
+        raise ValueError(f"filter_bands: band labels must be strings: {bands!r}")
+    labels = ", ".join(lit(b) for b in bands)
+    out = cube.df.where(f"{BAND} IN ({labels})" if bands else "FALSE")
     return Cube(out, cube.schema.with_bands(bands))
 
 
@@ -37,8 +43,8 @@ def filter_temporal(cube: Cube, start: str, end: str) -> Cube:
     from datetime import datetime, timedelta
 
     out = cube.df.where(
-        (F.col(TIME) >= F.lit(start).cast("timestamp"))
-        & (F.col(TIME) < F.lit(end).cast("timestamp"))
+        f"{TIME} >= CAST({lit(str(start))} AS TIMESTAMP) "
+        f"AND {TIME} < CAST({lit(str(end))} AS TIMESTAMP)"
     )
     lo = datetime.fromisoformat(str(start))
     hi = datetime.fromisoformat(str(end)) - timedelta(microseconds=1)
@@ -88,8 +94,8 @@ def filter_bbox(
             west, east, south, north, cube.schema.crs
         )
     out = cube.df.where(
-        F.col(X).between(float(west), float(east))
-        & F.col(Y).between(float(south), float(north))
+        f"{X} BETWEEN {lit(float(west))} AND {lit(float(east))} "
+        f"AND {Y} BETWEEN {lit(float(south))} AND {lit(float(north))}"
     )
     return cube.with_df(out)
 

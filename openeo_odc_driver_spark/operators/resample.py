@@ -10,37 +10,49 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..core.cube import TIME, VALUE, X, Y, Cube, GridSpec
+from ..functions.sqltext import lit
 
 
 def resample_cube_temporal(source: Cube, target: Cube) -> Cube:
     """For each target timestamp pick the nearest source time slice and
     relabel it with the target time (openeo_odc_driver.py:360-380).
-
-    Plan: the distinct time axes are tiny relative to the data (O(10³))
-    — build the target→nearest-source mapping with a broadcast cross
-    join + rank, then broadcast-equi-join it back onto the source rows.
-    Data-side cost: one broadcast hash join, no shuffle of the big side.
     Tie-break: earlier source time (deterministic in both engines).
+
+    When both time axes are known at plan time (every catalog load), the
+    target→nearest-source mapping is built on the driver and applied as
+    a literal ``CASE`` over the source rows, exploded so one source slice
+    can feed several targets: no job. Otherwise the distinct time axes
+    (tiny relative to the data, O(10³)) are matched by a broadcast cross
+    join + rank, and the mapping is broadcast-joined back onto the source
+    rows: one broadcast hash join, no shuffle of the big side.
     """
-    src_times = source.df.select(TIME).distinct().withColumnRenamed(TIME, "_src_t")
-    tgt_times = target.df.select(TIME).distinct().withColumnRenamed(TIME, "_tgt_t")
-    pairs = tgt_times.crossJoin(F.broadcast(src_times))
-    w = Window.partitionBy("_tgt_t").orderBy(
-        F.abs(F.unix_micros("_tgt_t") - F.unix_micros("_src_t")), F.col("_src_t")
-    )
-    mapping = (
-        pairs.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("_src_t", "_tgt_t")
-    )
-    out = (
-        source.df.join(
-            F.broadcast(mapping), source.df[TIME] == mapping["_src_t"], "inner"
+    src_ax, tgt_ax = source.schema.time_axis, target.schema.time_axis
+    if src_ax is not None and tgt_ax is not None:
+        out = _relabel_nearest(source, src_ax, tgt_ax)
+    else:
+        src_times = source.df.select(TIME).distinct().withColumnRenamed(
+            TIME, "_src_t")
+        tgt_times = target.df.select(TIME).distinct().withColumnRenamed(
+            TIME, "_tgt_t")
+        pairs = tgt_times.crossJoin(F.broadcast(src_times))
+        w = Window.partitionBy("_tgt_t").orderBy(
+            F.abs(F.unix_micros("_tgt_t") - F.unix_micros("_src_t")),
+            F.col("_src_t"),
         )
-        .drop(TIME, "_src_t")
-        .withColumnRenamed("_tgt_t", TIME)
-        .select(*source.key_dims, VALUE)
-    )
+        mapping = (
+            pairs.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .select("_src_t", "_tgt_t")
+        )
+        out = (
+            source.df.join(
+                F.broadcast(mapping), source.df[TIME] == mapping["_src_t"],
+                "inner",
+            )
+            .drop(TIME, "_src_t")
+            .withColumnRenamed("_tgt_t", TIME)
+            .select(*source.key_dims, VALUE)
+        )
     # output time labels are the target's axis — inherit ITS extent + axis
     return Cube(
         out,
@@ -50,13 +62,44 @@ def resample_cube_temporal(source: Cube, target: Cube) -> Cube:
     )
 
 
+def _relabel_nearest(source: Cube, src_ax: tuple, tgt_ax: tuple):
+    """Source rows relabelled onto the target axis by the nearest-time
+    rule, from the two known (ascending) axes."""
+    from bisect import bisect_left
+
+    feeds: dict = {}  # source time → the target times it is nearest to
+    for t in tgt_ax:
+        i = bisect_left(src_ax, t)
+        near = src_ax[max(i - 1, 0):i + 1]
+        if near:
+            s = min(near, key=lambda s: (abs(t - s), s))
+            feeds.setdefault(s, []).append(t)
+
+    def stamp(t) -> str:
+        return f"TIMESTAMP {lit(t.isoformat(sep=' '))}"
+
+    if not feeds:
+        return source.df.where("FALSE").select(*source.key_dims, VALUE)
+    whens = " ".join(
+        f"WHEN {stamp(s)} THEN array({', '.join(stamp(t) for t in targets)})"
+        for s, targets in feeds.items()
+    )
+    relabel = f"explode(CASE {TIME} {whens} END) AS {TIME}"
+    return source.df.selectExpr(
+        *[relabel if d == TIME else d for d in source.key_dims], VALUE
+    )
+
+
 def resample_cube_spatial(source: Cube, target: Cube, method: str = "near") -> Cube:
     """Regrid source onto the target grid (openeo_odc_driver.py:342-358).
 
     `near` (reference default): snap each source pixel to the nearest
-    target cell center, then keep one value per cell (the minimum-distance
-    source pixel; ties by coordinate order). Pure expressions + one
-    groupBy — no join against the target data at all, only its GridSpec.
+    target cell center, then keep one value per cell: the source pixel
+    with the least ``(d, x, y)``, d the squared distance to the center.
+    Pure expressions + one hash aggregate, ``min(struct(d, x, y,
+    value))`` — no join against the target data at all, only its
+    GridSpec. The aggregate's shuffle is clustered on the target cell
+    without time, so a time reduction that follows reuses it.
 
     `bilinear`: 4-neighbor weighted blend — see
     :func:`resample_cube_spatial_bilinear`.
@@ -68,31 +111,25 @@ def resample_cube_spatial(source: Cube, target: Cube, method: str = "near") -> C
     grid = target.schema.grid
     if grid is None:
         raise ValueError("target cube lacks a GridSpec")
+    x0, y0, rx, ry = (lit(float(v)) for v in
+                      (grid.x0, grid.y0, grid.resx, grid.resy))
     # floor(v + 0.5) instead of round(): engines disagree on round-half
     # modes (HALF_UP vs half-to-even); floor+0.5 is identical everywhere
-    snap_x = F.lit(grid.x0) + F.lit(grid.resx) * F.floor(
-        (F.col(X) - F.lit(grid.x0)) / F.lit(grid.resx) + F.lit(0.5)
-    )
-    snap_y = F.lit(grid.y0) - F.lit(grid.resy) * F.floor(
-        (F.lit(grid.y0) - F.col(Y)) / F.lit(grid.resy) + F.lit(0.5)
-    )
-    dist = (F.col(X) - snap_x) * (F.col(X) - snap_x) + (
-        F.col(Y) - snap_y
-    ) * (F.col(Y) - snap_y)
-    df = (
-        source.df.withColumn("_tx", snap_x)
-        .withColumn("_ty", snap_y)
-        .withColumn("_d", dist)
-    )
     group = [d for d in source.key_dims if d not in (X, Y)]
-    w = Window.partitionBy(*group, "_tx", "_ty").orderBy("_d", X, Y)
+    snapped = source.df.selectExpr(
+        *group, X, Y, VALUE,
+        f"{x0} + {rx} * floor(({X} - {x0}) / {rx} + 0.5D) AS _tx",
+        f"{y0} - {ry} * floor(({y0} - {Y}) / {ry} + 0.5D) AS _ty",
+    )
     out = (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop(X, Y, "_d", "_rn")
-        .withColumnRenamed("_tx", X)
-        .withColumnRenamed("_ty", Y)
-        .select(*source.key_dims, VALUE)
+        snapped.repartition("_ty", "_tx")
+        .groupBy(*group, "_ty", "_tx")
+        .agg(F.expr(
+            f"min(struct(({X} - _tx) * ({X} - _tx) + ({Y} - _ty) * ({Y} - _ty)"
+            f" AS d, {X}, {Y}, {VALUE})) AS _w"
+        ))
+        .selectExpr(*group, f"_ty AS {Y}", f"_tx AS {X}",
+                    f"_w.{VALUE} AS {VALUE}")
     )
     from dataclasses import replace
 

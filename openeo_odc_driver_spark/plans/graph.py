@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..core.cube import BAND, TIME, VALUE, X, Y, Cube, GridSpec, canonical_dim
 from ..functions.pivot import bands_wide
+from ..functions.sqltext import ident
 from ..operators import math as om
 from ..operators.aggregates import aggregate_spatial, aggregate_temporal_period
 from ..operators.dimops import add_dimension, rename_labels
@@ -1256,6 +1257,10 @@ def _overlap_resolver_fn(args: dict):
     return None
 
 
+class ArrayElementNotAvailable(ValueError):
+    """openEO ``array_element``: the label or index is not in the array."""
+
+
 def _single_named_reducer(child: dict) -> Optional[str]:
     """A sub-graph that is exactly one named reducer node over
     from_parameter data → its name (ref tag-string folding,
@@ -1275,8 +1280,15 @@ def _reduce_bands_expression(cube: Cube, child: dict) -> Cube:
     def band_col(args: dict) -> Column:
         label = args.get("label")
         if label is None:
-            label = cube.schema.bands[int(args["index"])]
-        return F.col(label)
+            i = int(args["index"])
+            if not 0 <= i < len(cube.schema.bands):
+                raise ArrayElementNotAvailable(
+                    f"array_element: no band at index {i}")
+            label = cube.schema.bands[i]
+        if label not in cube.schema.bands:
+            raise ArrayElementNotAvailable(
+                f"array_element: {label!r} is not a band of the cube")
+        return F.col(ident(label))
 
     expr = _compile_expr(child, {"data": band_col})
     out = wide.select(*group, expr.alias(VALUE))

@@ -27,7 +27,6 @@ from .functions.geometry import (
     geom_id_case_sql,
     raycast_geom_id_case_sql,
 )
-from .functions.pivot import bands_wide
 from .operators import math as om
 from .operators.aggregates import (
     aggregate_spatial,

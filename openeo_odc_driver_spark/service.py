@@ -14,6 +14,11 @@ Execution maps to Spark idioms:
   group ``openeo-<id>`` and cancellation is ``cancelJobGroup`` — the
   executor-side tasks abort, the session survives. The group is a pure
   function of the id, so no job log is kept.
+- errors: a graph error (``ValueError``, ``KeyError``,
+  ``NotImplementedError``, ``PermissionError``) answers 400 with the
+  exception class as its code, a job stopped by /stop_job 400
+  ``JobCancelled``, anything else 500 ``Internal`` with a one-line
+  message (the full error goes to the log, not the body).
 - GET /collections[/id]: STAC-shaped metadata (cube:dimensions with
   temporal/x/y/bands extents, odc_backend.py:244-305) derived from the
   fixture catalog.
@@ -24,6 +29,7 @@ from __future__ import annotations
 import csv
 import hashlib
 import json
+import logging
 import os
 import re
 import shutil
@@ -34,6 +40,8 @@ from pyspark.sql import SparkSession
 
 from .plans.catalog import COLLECTION_SPECS
 from .plans.graph import ProcessGraph
+
+_log = logging.getLogger(__name__)
 
 
 def _graph_md5(payload: dict, tiled: bool = False, tile: int = 8,
@@ -216,6 +224,7 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
 
     app = Flask("openeo_odc_driver_spark")
     store = JobStore(work_dir)
+    stopping: set = set()  # job ids /stop_job cancelled while running
 
     def _invalid_job_id():
         return jsonify({"code": "InvalidJobId",
@@ -266,6 +275,7 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
             return jsonify({"job_id": job_id, "output": dest,
                             "cached": True, **meta})
 
+        stopping.discard(job_id)  # a stop sent before this run began
         spark.sparkContext.setJobGroup(_job_group(job_id),
                                        f"process graph {job_id}",
                                        interruptOnCancel=True)
@@ -277,9 +287,24 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
                               if tiled else None)
             pg.execute(spark)
         except Exception as e:  # openEO error shape
-            return jsonify({"id": job_id, "code": type(e).__name__,
-                            "message": str(e)}), 400
+            if job_id in stopping:
+                return jsonify({"id": job_id, "code": "JobCancelled",
+                                "message": "stopped by /stop_job"}), 400
+            # errors the graph itself causes (a bad argument, an unknown
+            # process or label, a denied UDF)
+            if isinstance(e, (ValueError, KeyError, NotImplementedError,
+                              PermissionError)):
+                return jsonify({"id": job_id, "code": type(e).__name__,
+                                "message": str(e)}), 400
+            # an engine fault: its text can carry JVM stack frames and
+            # host paths, so the body names only the exception class
+            _log.exception("process graph %s failed", job_id)
+            return jsonify({"id": job_id, "code": "Internal",
+                            "message": "server error while executing the "
+                                       f"process graph ({type(e).__name__})"
+                            }), 500
         finally:
+            stopping.discard(job_id)
             spark.sparkContext.setJobGroup("", "")
         # demotion telemetry (VERDICT r11 item 6): which process ids
         # fell back to the long tier — the observability the reference's
@@ -313,6 +338,7 @@ def create_app(spark: SparkSession, work_dir: str = "/tmp/spark_graft_service",
             return _invalid_job_id()
         if not os.path.isdir(os.path.join(store.root, "jobs", job_id)):
             return jsonify({"code": "JobNotFound"}), 404
+        stopping.add(job_id)
         spark.sparkContext.cancelJobGroup(_job_group(job_id))
         return jsonify({"stopped": job_id})
 

@@ -13,9 +13,11 @@ mean / variance / interpolated percentiles.
 
 Two families:
 
-- :func:`cube_sql` — dense grid from ``range()`` cross joins; mirrors the
-  reference fixture A1 in FIXTURES.md (3 bands × 24 months × 16×16 px,
-  ~4% NULLs ≙ NaN nodata).
+- :func:`cube_sql` — dense grid; mirrors the reference fixture A1 in
+  FIXTURES.md (3 bands × 24 months × 16×16 px, ~4% NULLs ≙ NaN nodata).
+  Spark generates it from one ``range()`` with index arithmetic (a scan
+  with no join, so no broadcast job per load); DuckDB from the cross
+  join of one ``range()`` per axis.
 - :data:`LINEITEM_CUBE_SQL` — a sparse cube *derived from the lineitem
   parquet* (scales with SF; used by the flagship NDVI query and bench).
 """
@@ -99,9 +101,12 @@ def cube_sql(spec: CubeSpec = DEFAULT_SPEC, dialect: str = "duckdb") -> str:
             f"timestampadd(DAY, {spec.day_offset}, "
             f"timestampadd({unit}, CAST(ti AS INT), TIMESTAMP '{spec.t0}'))"
         )
+        nt, ny, nx = spec.n_times, spec.ny, spec.nx
+        n = len(spec.bands) * nt * ny * nx
         from_clause = (
-            f"range({len(spec.bands)}) tb(b), range({spec.n_times}) tt(ti), "
-            f"range({spec.ny}) ty(yi), range({spec.nx}) tx(xi)"
+            f"(SELECT id DIV {nt * ny * nx} AS b, "
+            f"(id DIV {ny * nx}) % {nt} AS ti, (id DIV {nx}) % {ny} AS yi, "
+            f"id % {nx} AS xi FROM range({n})) grid"
         )
     else:
         time_expr = (

@@ -1,6 +1,7 @@
 """Local mirror of the driver's correctness gate: run every registry query
 in Spark AND its DuckDB oracle at sf0.01, compare row count + columns +
-exact values (sorted rows, sorted columns).
+exact values (sorted rows, sorted columns). At another scale factor the
+rows in SCALE_BOUND are reported by name as scale-bound, not compared.
 
 Usage: python scratch/verify_local.py [--sf DIR] [--only SUBSTR] [--cpus N]
 
@@ -27,6 +28,19 @@ import traceback
 import duckdb
 import numpy as np
 import pandas as pd
+
+
+# Fixed-expected-value oracles captured on the sf0.01 fixture over
+# tables whose content depends on the scale factor
+# (openeo_odc_driver_spark/fixtures/__init__.py). At any other scale
+# they cannot match by construction: the Spark side still runs, and the
+# row is reported as "scale-bound", neither a pass nor a failure.
+CAPTURE_SF = "sf0.01"
+SCALE_BOUND = (
+    "ann_recall", "ann_recall_trained", "bpe_learn_merges",
+    "ivf_pq_ann_trained", "kmeans_train", "quality_classifier_train",
+    "semantic_dedup_trained", "semantic_dedup_trained_k160",
+)
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -128,7 +142,8 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
 
     names = [n for n in QUERIES if args.only is None or args.only in n]
-    ok, fail, weak = [], [], []
+    off_scale = os.path.basename(os.path.normpath(args.sf)) != CAPTURE_SF
+    ok, fail, weak, bound = [], [], [], []
     for name in names:
         t0 = time.time()
         try:
@@ -136,6 +151,11 @@ def main() -> int:
         except Exception:
             fail.append(name)
             print(f"FAIL  {name}: SPARK ERROR\n{traceback.format_exc()}"[:2000])
+            continue
+        if off_scale and name in SCALE_BOUND:
+            bound.append(name)
+            print(f"bound {name}: rows={len(sdf)} (oracle captured at "
+                  f"{CAPTURE_SF}) [{time.time()-t0:.1f}s]")
             continue
         if name not in ORACLE:
             weak.append(name)
@@ -157,7 +177,10 @@ def main() -> int:
             ok.append(name)
             print(f"ok    {name}: rows={len(sdf)} [{time.time()-t0:.1f}s]")
 
-    print(f"\n=== {len(ok)} ok, {len(weak)} weak (no oracle), {len(fail)} FAIL of {len(names)} ===")
+    print(f"\n=== {len(ok)} ok, {len(weak)} weak (no oracle), "
+          f"{len(bound)} scale-bound, {len(fail)} FAIL of {len(names)} ===")
+    if bound:
+        print("scale-bound:", ", ".join(bound))
     if fail:
         print("failing:", ", ".join(fail))
     spark.stop()

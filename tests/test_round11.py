@@ -377,8 +377,10 @@ def test_spark_hof_lambda_pruning_canary():
     """Canary for the Spark 4.1 optimizer bug that forces the long
     tier's >16-zone tagging onto the pandas UDF (PLANS.md round-10):
     columns referenced ONLY inside higher-order-function lambdas are
-    lost over locally generated (range+project) sources —
-    [INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND] at BindReferences.
+    lost over locally generated (range+project) sources with a join
+    below the lambda — [INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND] at
+    BindReferences. The repro builds its own cross join of ranges: the
+    synthetic cube is a single range scan, which does not trigger it.
 
     Round-11 refinement (re-derived repro): the bug triggers ONLY when
     the tag query is the very FIRST job of a cold JVM — any earlier job
@@ -399,7 +401,6 @@ def test_spark_hof_lambda_pruning_canary():
 import sys
 sys.path.insert(0, %(repo)r)
 from openeo_odc_driver_spark.session import get_spark
-from openeo_odc_driver_spark.sources.synthetic import synthetic_cube
 from openeo_odc_driver_spark.core.tiled import _zones_literal_sql
 from pyspark.sql import functions as F
 spark = get_spark("canary", cpus="2")
@@ -414,7 +415,14 @@ tag = ("transform(array(filter(" + zlit + ", z -> x >= z.xmin AND x <= z.xmax "
        "AND y >= z.ymin AND y <= z.ymax AND forall(z.edges, e -> "
        "e.dx * (y - e.y1) - e.dy * (x - e.x1) >= 0.0))), "
        "tz -> CASE WHEN size(tz) > 0 THEN tz[0].id END)[0]")
-agg = (synthetic_cube(spark).df.withColumn("gid", F.expr(tag))
+# a locally generated source with a join below the lambda: a cross
+# join of ranges (a single range scan does not trigger the bug)
+src = spark.sql(
+    "SELECT CAST(b AS STRING) AS band, ti AS time, "
+    "CAST(150.0 - 10.0 * yi AS DOUBLE) AS y, CAST(10.0 * xi AS DOUBLE) AS x, "
+    "CAST(b + ti + yi + xi AS DOUBLE) AS value FROM range(3) tb(b), "
+    "range(24) tt(ti), range(16) ty(yi), range(16) tx(xi)")
+agg = (src.withColumn("gid", F.expr(tag))
        .where(F.col("gid").isNotNull())
        .groupBy("gid", "band", "time").agg(F.avg("value")))
 try:

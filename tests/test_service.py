@@ -465,3 +465,114 @@ def test_tiled_cache_misses_after_store_rewrite(spark, tmp_path):
     after = c.post("/graph", json=payload)
     assert after.status_code == 200, after.get_json()
     assert after.get_json()["cached"] is False
+
+
+def _band_math(bands: list, label: str) -> dict:
+    """load ``bands``, then one band expression reading ``label``."""
+    return {"process_graph": {
+        "l": {"process_id": "load_collection",
+              "arguments": {"id": "synthetic", "bands": bands}},
+        "r": {"process_id": "reduce_dimension", "arguments": {
+            "data": {"from_node": "l"}, "dimension": "bands",
+            "reducer": {"process_graph": {"e": {
+                "process_id": "array_element", "result": True,
+                "arguments": {"data": {"from_parameter": "data"},
+                              "label": label}}}}}},
+        "s": {"process_id": "save_result", "result": True,
+              "arguments": {"data": {"from_node": "r"},
+                            "format": "PARQUET"}}}}
+
+
+def test_graph_error_answers_400_with_openeo_code(client):
+    """A label that is not a band of the cube is a graph error: 400 with
+    the openEO code, and no Spark analysis text in the body."""
+    r = client.post("/graph", json=_band_math(["B04", "B08"], "B99"))
+    assert r.status_code == 400
+    body = r.get_json()
+    assert body["code"] == "ArrayElementNotAvailable"
+    assert "B99" in body["message"] and "org.apache" not in r.get_data(
+        as_text=True)
+
+
+def test_engine_fault_answers_500_without_stack_frames(spark, tmp_path):
+    """A failure inside a Spark task is not the graph's fault: 500
+    ``Internal`` with a one-line message, no JVM frames, no Python
+    traceback, no host paths."""
+    from openeo_odc_driver_spark.service import create_app
+
+    app = create_app(spark, work_dir=str(tmp_path / "svc"),
+                     allow_code_udfs=True)
+    udf = ("def apply_datacube(df, context):\n"
+           "    raise RuntimeError('worker side failure')\n")
+    r = app.test_client().post("/graph", json={"process_graph": {
+        "l": {"process_id": "load_collection",
+              "arguments": {"id": "synthetic"}},
+        "u": {"process_id": "run_udf",
+              "arguments": {"data": {"from_node": "l"}, "udf": udf,
+                            "runtime": "Python"}},
+        "s": {"process_id": "save_result", "result": True,
+              "arguments": {"data": {"from_node": "u"},
+                            "format": "PARQUET"}}}})
+    assert r.status_code == 500
+    body = r.get_json()
+    assert body["code"] == "Internal"
+    text = r.get_data(as_text=True)
+    assert "\n" not in body["message"]
+    for leak in ("at org.apache", "Traceback", "worker side failure",
+                 str(tmp_path)):
+        assert leak not in text, leak
+
+
+HOSTILE = ["B04'", "B0\\4", "B`04", "B04') OR ('1'='1",
+           "B04' OR band <> '", "x\\' OR TRUE OR '"]
+
+
+def _saved_rows(body: dict):
+    """The rows of a PARQUET artifact (no data files: no rows)."""
+    import glob
+
+    import pandas as pd
+
+    files = glob.glob(f"{body['output']}/**/*.parquet", recursive=True)
+    return pd.concat([pd.read_parquet(f) for f in files]
+                     or [pd.DataFrame({"band": [], "value": []})])
+
+
+@pytest.mark.parametrize("label", HOSTILE)
+def test_hostile_band_labels_select_no_extra_rows(client, label):
+    """Band labels carrying quotes, backslashes or backticks reach SQL
+    text only as quoted literals or identifiers: through filter_bands
+    and load_collection's bands they select exactly the real bands
+    listed, and a band expression reading one yields NULL or a 400 —
+    never extra rows."""
+    only = {"process_graph": {
+        "l": {"process_id": "load_collection",
+              "arguments": {"id": "synthetic", "bands": [label]}},
+        "s": {"process_id": "save_result", "result": True,
+              "arguments": {"data": {"from_node": "l"},
+                            "format": "PARQUET"}}}}
+    r = client.post("/graph", json=only)
+    assert r.status_code == 200, r.get_json()
+    assert len(_saved_rows(r.get_json())) == 0
+
+    mixed = {"process_graph": {
+        "l": {"process_id": "load_collection",
+              "arguments": {"id": "synthetic"}},
+        "f": {"process_id": "filter_bands",
+              "arguments": {"data": {"from_node": "l"},
+                            "bands": ["SCL", label]}},
+        "s": {"process_id": "save_result", "result": True,
+              "arguments": {"data": {"from_node": "f"},
+                            "format": "PARQUET"}}}}
+    r = client.post("/graph", json=mixed)
+    assert r.status_code == 200, r.get_json()
+    rows = _saved_rows(r.get_json())
+    assert set(rows["band"]) == {"SCL"} and len(rows) == 24 * 16 * 16
+
+    r = client.post("/graph", json=_band_math(["B04"], label))
+    assert r.status_code == 400
+    assert r.get_json()["code"] == "ArrayElementNotAvailable"
+    r = client.post("/graph", json=_band_math(["B04", label], label))
+    assert r.status_code == 200, r.get_json()
+    rows = _saved_rows(r.get_json())
+    assert len(rows) == 24 * 16 * 16 and rows["value"].isna().all()
