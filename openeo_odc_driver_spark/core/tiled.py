@@ -23,12 +23,15 @@ Design rules:
   the scene dims carried on the handle.
 - **Operators run natively on tiles** where the access pattern wants
   whole tiles: the time reducers (:func:`reduce_time_tiled`
-  mean/sum/min/max, :func:`reduce_time_median_tiled`) and the
-  calendar resample (:func:`aggregate_temporal_period_tiled`) fold
-  element-wise per tile (one shuffle keyed by (band[, period], tile) —
-  same exchange count as the long reducer, tile²× fewer rows); band
-  math (:func:`normalized_difference_tiled`) and masking
-  (:func:`mask_tiled`) are single tile-keyed equi-joins + zip_with;
+  mean/median/sum/min/max/sd/variance) and the calendar resample
+  (:func:`aggregate_temporal_period_tiled`) fold element-wise per
+  tile in one shared numpy fold, :func:`_fold_groups` (one shuffle
+  keyed by (band[, period], tile) — same exchange count as the long
+  reducer, tile²× fewer rows); every per-axis regrid (nearest snap,
+  window/edge retile, bilinear) is one fragment gather,
+  :func:`_gather_tiles`; band math (:func:`normalized_difference_tiled`)
+  and masking (:func:`mask_tiled`) are single tile-keyed equi-joins +
+  zip_with;
   :func:`filter_bbox_tiled` prunes whole tiles via a coarse
   tile-range predicate (parquet min/max on the stored layout) before
   the exact pixel filter; :func:`apply_kernel_tiled_layout` does the
@@ -430,15 +433,7 @@ def aggregate_temporal_period_tiled(
         tc.n_y,
         tc.n_x,
     )
-    if reducer == "median":
-        # the reduce_time_median_tiled multiset path keyed by the
-        # truncated timestamp
-        band = [BAND] if BAND in tc.schema.dims else []
-        out = _median_groups(
-            relabeled, [*band, TIME, "tile_row", "tile_col"]
-        )
-    else:
-        out = _fold_time_groups(relabeled, reducer, extra_keys=[TIME])
+    out = _fold_time_groups(relabeled, reducer, extra_keys=[TIME])
     schema = tc.schema.with_time_extent(None)
     if tc.schema.time_axis is not None:
         schema = schema.with_time_axis(
@@ -477,14 +472,15 @@ def climatological_normal_tiled(
 
 
 def reduce_time_tiled(tc: TiledCube, reducer: str = "mean") -> TiledCube:
-    """Reduce the time axis natively on tiles — mean / sum / min / max
-    / sd / variance with the long reducer's NULL semantics (NULL
-    elements skipped, all-NULL positions stay NULL).
+    """Reduce the time axis natively on tiles — mean / median / sum /
+    min / max / sd / variance with the long reducer's NULL semantics
+    (NULL elements skipped, all-NULL positions stay NULL).
 
     One Arrow-batched ``applyInPandas`` per tile group
     (:func:`_fold_groups`): stack the group's arrays, one vectorized
     nan-reduction. mean/sum are numpy's pairwise sums, exact on the
-    fixture's dyadic inputs.
+    fixture's dyadic inputs; median is ``np.nanmedian`` — the flagship
+    NDVI shape's reducer.
 
     Scale shape vs the long reducer: the same single exchange, but
     keyed by tile (tile²× fewer, perfectly uniform keys) and carrying
@@ -525,7 +521,7 @@ def quantiles_tiled(
     """openEO ``quantiles`` over the TIME axis natively on tiles (long
     twin ``operators/reducers.py:quantiles``; reference wires it under
     ``apply_dimension``, ``openeo_odc_driver.py:852-904``): the
-    reduce_time_median_tiled multiset fold generalized to a probability
+    median fold of :func:`_fold_groups` generalized to a probability
     list — per position one vectorized ``np.nanpercentile`` over the
     stacked arrays, one output tile row PER probability with a ``prob``
     column riding (``from_tiled`` passes it through exactly like the
@@ -533,7 +529,8 @@ def quantiles_tiled(
     closest ranks is the same arithmetic in numpy, Spark ``percentile``
     and DuckDB ``quantile_cont`` (lower + frac·(higher−lower)), so the
     tiers stay bit-equal on dyadic inputs; all-NULL positions stay NULL.
-    One tile-keyed exchange — same shape as the median fold.
+    One tile-keyed exchange — same shape as the median fold (its own
+    stage, because it emits one row per probability).
 
     ``dim`` picks the reduced axis: TIME (default) stacks a pixel's
     time slices, BAND (round 12 — closes the last quantiles-family
@@ -924,18 +921,20 @@ def _fold_groups(
     whatever dimension is NOT in ``keys``; ``sort_field`` pins the fold
     order (time for time reductions, band label for band reductions).
     One Arrow-batched ``applyInPandas`` per group: stack the group's
-    arrays, one vectorized nan-reduction."""
+    arrays, one vectorized nan-reduction. ``median`` is the exact
+    ``np.nanmedian`` (even counts interpolate the two middle values —
+    Spark ``percentile`` and DuckDB ``quantile_cont`` at q=0.5, exact
+    on the dyadic fixture); it does not depend on the stack order."""
     import numpy as np
     import pandas as pd
 
-    allowed = ["max", "mean", "min", "sd", "sum", "variance"]
+    allowed = ["max", "mean", "median", "min", "sd", "sum", "variance"]
     if reducer not in allowed:
         raise ValueError(
-            f"reducer must be one of {allowed}, "
-            f"got {reducer!r} (median has its own op: "
-            "reduce_time_median_tiled)"
+            f"reducer must be one of {allowed}, got {reducer!r}"
         )
-    nanop = {"sum": np.nansum, "min": np.nanmin, "max": np.nanmax}.get(reducer)
+    nanop = {"sum": np.nansum, "min": np.nanmin, "max": np.nanmax,
+             "median": np.nanmedian}.get(reducer)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         # pin the stack order by the collapsed axis: nansum's pairwise
@@ -1074,9 +1073,9 @@ def _build_overview_levels(spark, path: str, levels, existing=()) -> list:
                     )
                 src = sources[j]
                 break
-        ov = _build_overview_onto(src, g, k)
+        ov = _build_overview(src, k, g)
         if ov is None and src is not base:
-            ov = _build_overview_onto(base, g, k)  # defensive fallback
+            ov = _build_overview(base, k)  # defensive fallback
         if ov is None:
             continue
         lv_path = os.path.join(path, "_overviews", f"L{k}")
@@ -1099,41 +1098,23 @@ def _overview_cascade_ok(g, n_y: int, n_x: int, j: int, k: int) -> bool:
     )
 
 
-def _build_overview_onto(src: "TiledCube", base_grid, k: int):
-    """Level-k overview built from ``src`` (the base store or a finer
-    level), targeting the k·base_res grid at the base origin. Returns
-    None when the snap can't express the pair."""
-    from dataclasses import replace as _rpl
-
-    tgt = TiledCube(
-        src.df,
-        _rpl(src.schema,
-             grid=GridSpec(base_grid.x0, base_grid.y0,
-                           base_grid.resx * k, base_grid.resy * k)),
-        src.tile, src.n_y, src.n_x,
-    )
-    try:
-        return resample_cube_spatial_tiled(src, tgt, "near")
-    except TiledRegridUnsupported:
-        return None
-
-
-def _build_overview(tc: TiledCube, k: int):
-    """Level-k overview cube: the nearest covering-downscale snap onto
-    the k·res grid at the SAME origin — i.e. exactly what
+def _build_overview(tc: TiledCube, k: int, base_grid=None):
+    """Level-k overview cube: the nearest covering-downscale snap of
+    ``tc`` onto the k·res grid of ``base_grid`` (default: tc's own
+    grid) at the SAME origin — i.e. exactly what
     resample_cube_spatial_tiled would answer for that grid, so a query
     resolved from the overview can be bit-identical to the full-res
-    plan. Returns None when the snap can't express the pair (k ≥ scene
-    is fine — a 1-cell level; grid-less cubes have no levels)."""
-    from dataclasses import replace as _rpl
-
-    g = tc.schema.grid
+    plan. ``tc`` may be the base or a finer stored level (the cascade
+    of :func:`_build_overview_levels`, which passes the base grid).
+    Returns None when the snap can't express the pair (k ≥ scene is
+    fine — a 1-cell level; grid-less cubes have no levels)."""
+    g = tc.schema.grid if base_grid is None else base_grid
     if g is None or k < 2:
         return None
     tgt = TiledCube(
         tc.df,
-        _rpl(tc.schema,
-             grid=GridSpec(g.x0, g.y0, g.resx * k, g.resy * k)),
+        _dc_replace(tc.schema,
+                    grid=GridSpec(g.x0, g.y0, g.resx * k, g.resy * k)),
         tc.tile, tc.n_y, tc.n_x,
     )
     try:
@@ -1447,56 +1428,6 @@ def normalized_difference_tiled(
     )
     return TiledCube(
         df, tc.schema.with_bands((out_band,)), tc.tile, tc.n_y, tc.n_x
-    )
-
-
-def reduce_time_median_tiled(tc: TiledCube) -> TiledCube:
-    """Exact per-pixel median over the time axis natively on tiles —
-    the flagship NDVI shape's reducer. NULL elements are skipped
-    (matching the long reducer's ``percentile(value, 0.5)``), an
-    all-NULL position stays NULL, and even counts interpolate the two
-    middle values — numpy's median rule, identical to Spark
-    ``percentile`` and DuckDB ``quantile_cont`` at q=0.5 (exact on the
-    dyadic fixture: sorting plus one mean of two dyadics).
-
-    The vectorized ``np.nanmedian`` over the stacked (n_t, tile²)
-    block (a per-position sort in interpreted SQL lambdas would be
-    O(tile² · n_t log n_t) interpreted evaluations per tile), and
-    its exactness on the gate fixture is an arithmetic argument, not a
-    hope (pinned against the long reducer by oracle + pytest)."""
-    if TIME not in tc.schema.dims:
-        raise ValueError("reduce_time_median_tiled needs a time dimension")
-    # band-less cubes (a band-expression reducer's output) group on the
-    # tile alone
-    keys = ([BAND] if BAND in tc.schema.dims else []) + [
-        "tile_row", "tile_col"
-    ]
-    df = _median_groups(tc, keys)
-    return TiledCube(df, tc.schema.drop(TIME), tc.tile, tc.n_y, tc.n_x)
-
-
-def _median_groups(tc: TiledCube, keys: list[str]) -> DataFrame:
-    """The element-wise exact-median fold over each key-group's arrays
-    (the :func:`reduce_time_median_tiled` engine, generalized over the
-    group key the way :func:`_fold_groups` is — period median groups by
-    the truncated timestamp too). Key types come from the input schema
-    itself."""
-    import numpy as np
-    import pandas as pd
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        stack = _tile_stack(pdf)
-        all_nan = np.isnan(stack).all(axis=0)
-        # nanmedian warns on all-nan slices; mask them out first
-        safe = np.where(all_nan[None, :], 0.0, stack)
-        med = np.nanmedian(safe, axis=0)
-        med[all_nan] = np.nan
-        return pd.DataFrame([
-            {**_group_keys(pdf.iloc[0], keys), "data": _tile_list(med)}
-        ])
-
-    return _widen_py(tc, tc.df, keys).groupBy(*keys).applyInPandas(
-        fold, _ddl(tc.df.schema, keys, "data array<double>")
     )
 
 
@@ -2710,23 +2641,108 @@ def _frag_ddl(schema, keys: list[str]) -> str:
     )
 
 
-def _assemble_fragments(
-    frags: DataFrame, keys: list[str], schema: CubeSchema, tile: int,
-    n_y: int, n_x: int,
+def _nan_pad(canvas, tile: int):
+    """``canvas`` NaN-padded at the bottom and right to ``tile × tile``
+    (a partial edge tile keeps the layout's NULL padding)."""
+    import numpy as np
+
+    h, w = canvas.shape
+    return np.pad(canvas, ((0, tile - h), (0, tile - w)),
+                  constant_values=np.nan)
+
+
+def _span_feeds(maps, T: int):
+    """The overlap lookup of :func:`_gather_tiles` along one axis:
+    ``maps[R]`` is the strictly increasing int64 array of source
+    indices output tile R reads, with first and last indices
+    nondecreasing in R. Returns ``feeds(t0)`` → ``[(R, canvas offset,
+    span-local indices), ...]`` for every R that reads source span
+    ``[t0, t0+T)``: the candidates are one ``searchsorted`` range over
+    the first/last indices, and a candidate whose indices skip the
+    span is dropped."""
+    import numpy as np
+
+    first = np.array([m[0] for m in maps])
+    last = np.array([m[-1] for m in maps])
+
+    def feeds(t0: int) -> list:
+        out = []
+        for R in range(int(np.searchsorted(last, t0)),
+                       int(np.searchsorted(first, t0 + T))):
+            lo, hi = np.searchsorted(maps[R], (t0, t0 + T))
+            if lo < hi:
+                out.append((R, int(lo), maps[R][lo:hi] - t0))
+        return out
+
+    return feeds
+
+
+def _gather_tiles(
+    source: TiledCube, rows_of, cols_of, finish, schema: CubeSchema,
+    tile: int, n_y: int, n_x: int,
 ) -> TiledCube:
-    """Lay each output tile's fragments (:func:`_frag_ddl` rows) on a
-    tile×tile NaN canvas — the assembly stage shared by
-    :func:`resample_cube_spatial_tiled` and :func:`_retile_python`.
-    The canvas scatter is per-GROUP Python work (order-free — fragments
-    land in disjoint windows), so the output-raster exchange takes the
-    pandas-stage width."""
+    """The one fragment gather behind every per-axis regrid — the
+    nearest snap (:func:`resample_cube_spatial_tiled`), the window and
+    edge repack (:func:`_retile_python`) and the bilinear windows
+    (:func:`resample_cube_spatial_bilinear_tiled`). Output tile
+    ``(R, C)`` reads the source pixels ``rows_of[R] × cols_of[C]``
+    (strictly increasing int64 index arrays, one per output tile and
+    axis);
+    ``finish(R, C, canvas)`` turns that gathered canvas into the
+    ``tile × tile`` output array.
+
+    Physical plan, two stages:
+
+    1. **Scan-fused emit** (``mapInPandas``, zero exchange): each source
+       tile emits, per output tile it feeds, the block of its pixels
+       that tile reads as one :func:`_frag_ddl` row placed at the
+       block's canvas position — data volume drops to what the outputs
+       read BEFORE anything shuffles. :func:`_span_feeds` finds the
+       output tiles a source span feeds without scanning every tile; a
+       tile whose indices skip the span (a gap in a winner map) gets
+       no fragment.
+    2. **One exchange keyed by output tile** (``applyInPandas`` at the
+       pandas-stage width): fragments land in disjoint canvas windows,
+       so the scatter is order-free per group."""
+    from typing import Iterator
+
     import numpy as np
     import pandas as pd
 
+    T = source.tile
+    keys = source.key_dims
     gkeys = [*keys, "tile_row", "tile_col"]
+    row_feeds, col_feeds = _span_feeds(rows_of, T), _span_feeds(cols_of, T)
+
+    def emit(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        for pdf in batches:
+            rows = []
+            for row in pdf.itertuples(index=False):
+                rec = row._asdict()
+                rs = row_feeds(int(rec["tile_row"]) * T)
+                cs = col_feeds(int(rec["tile_col"]) * T)
+                if not rs or not cs:
+                    continue
+                a = np.asarray(rec["data"], dtype="float64").reshape(T, T)
+                for R, r0, ri in rs:
+                    band = a[ri]
+                    for C, c0, ci in cs:
+                        # NaN rides Arrow as a double (assemble re-NaNs
+                        # via np.asarray); tolist() is C-speed
+                        rows.append({
+                            **{k: rec[k] for k in keys},
+                            "tile_row": R, "tile_col": C,
+                            "_r0": r0, "_c0": c0,
+                            "_h": len(ri), "_w": len(ci),
+                            "_frag": band[:, ci].reshape(-1).tolist(),
+                        })
+            if rows:
+                yield pd.DataFrame(rows)
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        canvas = np.full((tile, tile), np.nan)
+        row0 = pdf.iloc[0]
+        R, C = int(row0["tile_row"]), int(row0["tile_col"])
+        canvas = np.full((len(rows_of[R]), len(cols_of[C])), np.nan)
         # plain tuples: itertuples RENAMES underscore-prefixed columns
         for r0, c0, h, w, frag in pdf[
             ["_r0", "_c0", "_h", "_w", "_frag"]
@@ -2734,10 +2750,12 @@ def _assemble_fragments(
             canvas[r0:r0 + h, c0:c0 + w] = np.asarray(
                 frag, dtype="float64"
             ).reshape(h, w)
-        return pd.DataFrame([
-            {**_group_keys(pdf.iloc[0], gkeys), "data": _tile_list(canvas)}
-        ])
+        return pd.DataFrame([{
+            **_group_keys(row0, gkeys),
+            "data": _tile_list(finish(R, C, canvas)),
+        }])
 
+    frags = source.df.mapInPandas(emit, _frag_ddl(source.df.schema, keys))
     w_handle = TiledCube(frags, schema, tile, n_y, n_x)
     df = _widen_py(w_handle, frags, gkeys).groupBy(*gkeys).applyInPandas(
         assemble, _ddl(frags.schema, gkeys, "data array<double>")
@@ -2757,15 +2775,11 @@ def resample_cube_spatial_tiled(
     axis as plan data (:func:`_axis_winner_map`), so no coordinate
     columns ever materialize.
 
-    Physical plan, two stages:
-
-    1. **Scan-fused sampling** (``mapInPandas``, zero exchange): each
-       source tile emits the gathered sample of its winner pixels as
-       fragments addressed to output tiles — data volume drops to the
-       output raster BEFORE anything shuffles.
-    2. **One exchange of output-raster bytes** (``applyInPandas`` keyed
-       by output tile): fragments scatter into the target-edge canvas.
-       Winners partition by source tile, so fragments never overlap.
+    Physical plan: :func:`_gather_tiles` with each output tile's slice
+    of the winner maps — source tiles emit only their winner pixels
+    (data volume drops to the output raster BEFORE anything shuffles),
+    then one exchange of output-raster bytes assembles the target-edge
+    tiles.
 
     UPSCALE pairs (target finer than source) take the relabel path
     instead (round 12, :func:`_axis_relabel`): the injective snap is a
@@ -2778,11 +2792,7 @@ def resample_cube_spatial_tiled(
     ``ORDER BY d, x, y`` could pick a non-separable winner) are not
     reproduced — they require exact d equality across unequal axis
     splits, absent from real grid pairs."""
-    from dataclasses import replace as _dc_replace
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
     if method not in ("near", "nearest"):
         raise ValueError("only near/nearest runs natively on tiles")
@@ -2829,66 +2839,14 @@ def resample_cube_spatial_tiled(
         # identity snap (same grid): pure schema swap
         out = TiledCube(source.df, schema, T, n_y, n_x)
         return out if T == Tt else retile(out, Tt)
-    keys = source.key_dims
-
-    def axis_winners(t0: int, winners) -> tuple:
-        """Output indices whose winner pixel lies in tile span
-        [t0, t0+T), with the winner's local offset — winners is
-        strictly increasing, so the slice is one searchsorted range."""
-        lo = int(np.searchsorted(winners, t0, side="left"))
-        hi = int(np.searchsorted(winners, t0 + T, side="left"))
-        idx = list(range(lo, hi))
-        local = [int(winners[i2]) - t0 for i2 in idx]
-        return idx, local
-
-    def sample(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            out_rows = []
-            for row in pdf.itertuples(index=False):
-                rec = row._asdict()
-                ri, rl = axis_winners(int(rec["tile_row"]) * T, wy)
-                ci, cl = axis_winners(int(rec["tile_col"]) * T, wx)
-                if not ri or not ci:
-                    continue
-                a = np.asarray(rec["data"], dtype="float64").reshape(T, T)
-                samp = a[np.ix_(rl, cl)]
-                # split the contiguous winner block at output-tile
-                # boundaries (the trailing edge cell may start a new one)
-                rsplit = [
-                    p for p in range(1, len(ri))
-                    if ri[p] // Tt != ri[p - 1] // Tt
-                ]
-                csplit = [
-                    p for p in range(1, len(ci))
-                    if ci[p] // Tt != ci[p - 1] // Tt
-                ]
-                for rblk, rpos in zip(
-                    np.split(samp, rsplit, axis=0),
-                    np.split(np.asarray(ri), rsplit),
-                ):
-                    for blk, cpos in zip(
-                        np.split(rblk, csplit, axis=1),
-                        np.split(np.asarray(ci), csplit),
-                    ):
-                        # NaN rides Arrow as a double (assemble re-NaNs
-                        # via np.asarray anyway); tolist() is C-speed —
-                        # the per-element None comprehension was stage
-                        # A's bottleneck at 12.6M px
-                        out_rows.append({
-                            **{c: rec[c] for c in keys},
-                            "tile_row": int(rpos[0] // Tt),
-                            "tile_col": int(cpos[0] // Tt),
-                            "_r0": int(rpos[0] % Tt),
-                            "_c0": int(cpos[0] % Tt),
-                            "_h": blk.shape[0],
-                            "_w": blk.shape[1],
-                            "_frag": blk.reshape(-1).tolist(),
-                        })
-            if out_rows:
-                yield pd.DataFrame(out_rows)
-
-    frags = source.df.mapInPandas(sample, _frag_ddl(source.df.schema, keys))
-    return _assemble_fragments(frags, keys, schema, Tt, nt_y, nt_x)
+    # output tile R reads its winner pixels: the winner map's slice
+    return _gather_tiles(
+        source,
+        [wy[R * Tt:(R + 1) * Tt] for R in range(-(-nt_y // Tt))],
+        [wx[C * Tt:(C + 1) * Tt] for C in range(-(-nt_x // Tt))],
+        lambda R, C, canvas: _nan_pad(canvas, Tt),
+        schema, Tt, nt_y, nt_x,
+    )
 
 
 def resample_cube_spatial_bilinear_tiled(
@@ -2909,24 +2867,19 @@ def resample_cube_spatial_bilinear_tiled(
     dense tile array cannot express → :class:`TiledRegridUnsupported`
     (the planner demotes).
 
-    Physical plan: (1) scan-fused ``mapInPandas`` — each source tile
-    emits its overlap with every target tile's source WINDOW (the
-    contiguous index range that tile's cells read, ≤ Tt·res_t/res_s + 2
-    per axis) as window-local fragments; (2) ONE exchange of those
-    fragments keyed by target tile; (3) the blend runs vectorized on
-    the assembled window canvas. Shuffle volume ≈ the source raster
-    once (each source pixel lands in O(1) windows), versus the long
-    plan's 4×-exploded neighbor join feeding a per-cell groupBy."""
-    from dataclasses import replace as _dc_replace
-    from typing import Iterator
-
+    Physical plan: :func:`_gather_tiles` with each target tile's
+    source WINDOW (the contiguous index range its cells read,
+    ≤ Tt·res_t/res_s + 2 per axis) — ONE exchange of window fragments
+    keyed by target tile, then the blend runs vectorized on the
+    assembled window canvas. Shuffle volume ≈ the source raster once
+    (each source pixel lands in O(1) windows), versus the long plan's
+    4×-exploded neighbor join feeding a per-cell groupBy."""
     import numpy as np
-    import pandas as pd
 
     sg, tg = source.schema.grid, target.schema.grid
     if sg is None or tg is None:
         raise ValueError("bilinear tiled regrid needs GridSpecs")
-    T, Tt = source.tile, target.tile
+    Tt = target.tile
     n_y, n_x = source.n_y, source.n_x
     nt_y, nt_x = target.n_y, target.n_x
 
@@ -2950,85 +2903,27 @@ def resample_cube_spatial_bilinear_tiled(
 
     ylo, wy = axis_geom(nt_y, tg.y0, tg.resy, sg.y0, sg.resy, True)
     xlo, wx = axis_geom(nt_x, tg.x0, tg.resx, sg.x0, sg.resx, False)
-    # per-target-tile source windows (lo/hi inclusive, scene-clipped);
-    # lo indices are monotone nondecreasing in J, so windows are ranges
-    n_tr = -(-nt_y // Tt)
-    n_tc = -(-nt_x // Tt)
 
-    def windows(lo_arr, nt, n_src, n_tiles):
-        wlo = np.empty(n_tiles, dtype="int64")
-        whi = np.empty(n_tiles, dtype="int64")
-        for R in range(n_tiles):
-            j0, j1 = R * Tt, min((R + 1) * Tt, nt) - 1
-            wlo[R] = max(int(lo_arr[j0]), 0)
-            whi[R] = min(int(lo_arr[j1]) + 1, n_src - 1)
-        return wlo, whi
+    def windows(lo_arr, nt, n_src):
+        """Per target tile, its source window (scene-clipped): lo
+        indices are nondecreasing in J, so each window is a range and
+        both its ends are nondecreasing in the tile index."""
+        wins = []
+        for j0 in range(0, nt, Tt):
+            j1 = min(j0 + Tt, nt) - 1
+            wins.append(np.arange(max(int(lo_arr[j0]), 0),
+                                  min(int(lo_arr[j1]) + 1, n_src - 1) + 1))
+        return wins
 
-    wlo_y, whi_y = windows(ylo, nt_y, n_y, n_tr)
-    wlo_x, whi_x = windows(xlo, nt_x, n_x, n_tc)
-    keys = source.key_dims
+    win_y = windows(ylo, nt_y, n_y)
+    win_x = windows(xlo, nt_x, n_x)
 
-    def overlaps(t0, wlo, whi, n_tiles):
-        """Target tiles whose source window intersects span [t0, t0+T)."""
-        return [
-            R for R in range(n_tiles)
-            if wlo[R] < t0 + T and whi[R] >= t0
-        ]
-
-    def emit(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                rec = row._asdict()
-                t0r = int(rec["tile_row"]) * T
-                t0c = int(rec["tile_col"]) * T
-                trs = overlaps(t0r, wlo_y, whi_y, n_tr)
-                tcs = overlaps(t0c, wlo_x, whi_x, n_tc)
-                if not trs or not tcs:
-                    continue
-                a = np.asarray(rec["data"], dtype="float64").reshape(T, T)
-                for R in trs:
-                    r_lo = max(wlo_y[R], t0r)
-                    r_hi = min(whi_y[R], t0r + T - 1, n_y - 1)
-                    if r_lo > r_hi:
-                        continue
-                    for C in tcs:
-                        c_lo = max(wlo_x[C], t0c)
-                        c_hi = min(whi_x[C], t0c + T - 1, n_x - 1)
-                        if c_lo > c_hi:
-                            continue
-                        blk = a[r_lo - t0r:r_hi - t0r + 1,
-                                c_lo - t0c:c_hi - t0c + 1]
-                        rows.append({
-                            **{k: rec[k] for k in keys},
-                            "tile_row": int(R), "tile_col": int(C),
-                            "_r0": int(r_lo - wlo_y[R]),
-                            "_c0": int(c_lo - wlo_x[C]),
-                            "_h": blk.shape[0], "_w": blk.shape[1],
-                            "_frag": blk.reshape(-1).tolist(),
-                        })
-            if rows:
-                yield pd.DataFrame(rows)
-
-    frags = source.df.mapInPandas(emit, _frag_ddl(source.df.schema, keys))
-    gkeys = [*keys, "tile_row", "tile_col"]
-
-    def blend(pdf: pd.DataFrame) -> pd.DataFrame:
-        row0 = pdf.iloc[0]
-        R, C = int(row0["tile_row"]), int(row0["tile_col"])
-        ch = int(whi_y[R] - wlo_y[R] + 1)
-        cw = int(whi_x[C] - wlo_x[C] + 1)
-        canvas = np.full((ch, cw), np.nan)
-        for r0, c0, h, w, frag in pdf[
-            ["_r0", "_c0", "_h", "_w", "_frag"]
-        ].itertuples(index=False, name=None):
-            canvas[r0:r0 + h, c0:c0 + w] = np.asarray(
-                frag, dtype="float64"
-            ).reshape(h, w)
+    def blend(R: int, C: int, canvas):
+        ch, cw = canvas.shape
         j0r, j1r = R * Tt, min((R + 1) * Tt, nt_y)
         j0c, j1c = C * Tt, min((C + 1) * Tt, nt_x)
-        rr = ylo[j0r:j1r] - wlo_y[R]        # canvas row of the dy=0 nbr
-        cc = xlo[j0c:j1c] - wlo_x[C]
+        rr = ylo[j0r:j1r] - win_y[R][0]     # canvas row of the dy=0 nbr
+        cc = xlo[j0c:j1c] - win_x[C][0]
         wyf = wy[j0r:j1r][:, None]
         wxf = wx[j0c:j1c][None, :]
         num = np.zeros((len(rr), len(cc)))
@@ -3048,25 +2943,11 @@ def resample_cube_spatial_bilinear_tiled(
                 num += np.where(ok, w2 * np.nan_to_num(v), 0.0)
                 den += np.where(ok, w2 * np.ones_like(v), 0.0)
         with np.errstate(invalid="ignore", divide="ignore"):
-            out = num / den
-        pad_h, pad_w = Tt - len(rr), Tt - len(cc)
-        if pad_h or pad_w:
-            out = np.pad(out, ((0, pad_h), (0, pad_w)),
-                         constant_values=np.nan)
-        return pd.DataFrame([
-            {**_group_keys(row0, gkeys), "data": _tile_list(out)}
-        ])
+            return _nan_pad(num / den, Tt)
 
-    # round-15 continuation: canvas assembly + blend is per-GROUP
-    # Python work (order-free — disjoint-window scatter, then a
-    # deterministic dy/dx accumulation), so the output-raster exchange
-    # takes the pandas-stage width
     schema = _dc_replace(source.schema, grid=tg)
-    _w_handle = TiledCube(frags, schema, Tt, nt_y, nt_x)
-    df = _widen_py(_w_handle, frags, gkeys).groupBy(*gkeys).applyInPandas(
-        blend, _ddl(frags.schema, gkeys, "data array<double>")
-    )
-    return TiledCube(df, schema, Tt, nt_y, nt_x)
+    return _gather_tiles(source, win_y, win_x, blend, schema, Tt,
+                         nt_y, nt_x)
 
 
 def _retile_same_edge_jvm(
@@ -3250,13 +3131,8 @@ def retile(
     ``grid``). One exchange keyed by destination tile: each source
     tile splits scan-fused into per-destination fragments (no
     pixel-row explosion), then fragments scatter into the destination
-    canvas — the same fragment plan as
+    canvas — the same fragment gather (:func:`_gather_tiles`) as
     :func:`resample_cube_spatial_tiled` with k=1."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     if new_tile < 1:
         raise ValueError(f"tile must be >= 1, got {new_tile}")
     windowed = row0 or col0 or (
@@ -3268,17 +3144,13 @@ def retile(
         # honor the grid override even on the no-op layout path
         # (ADVICE r11: a caller passing a re-anchored grid must get it
         # back regardless of whether any pixels move)
-        return TiledCube(
-            tc.df,
-            __import__("dataclasses").replace(tc.schema, grid=grid),
-            tc.tile, tc.n_y, tc.n_x,
-        )
+        return TiledCube(tc.df, _dc_replace(tc.schema, grid=grid),
+                         tc.tile, tc.n_y, tc.n_x)
     T, Tt = tc.tile, new_tile
     n_y = tc.n_y if n_y is None else n_y
     n_x = tc.n_x if n_x is None else n_x
-    out_schema_obj = tc.schema if grid is None else __import__(
-        "dataclasses"
-    ).replace(tc.schema, grid=grid)
+    out_schema_obj = (tc.schema if grid is None
+                      else _dc_replace(tc.schema, grid=grid))
     if Tt == T:
         # same-edge window: the fragment plan degenerates to a fixed
         # ≤4-way stencil — expressible entirely JVM-side (VERDICT r11
@@ -3423,59 +3295,26 @@ def _retile_python(
     n_x: int,
     out_schema_obj,
 ) -> TiledCube:
-    """The general tile-edge-changing repack: Python fragment split
-    (mapInPandas) + canvas assembly (applyInPandas). Kept for Tt != T
-    (merge_cubes auto-retile, cross-edge resample); the same-edge
-    window case dispatches to :func:`_retile_same_edge_jvm` (also the
-    slow leg of the filter_bbox A/B recorded in PLANS.md)."""
-    from typing import Iterator
-
+    """The general tile-edge-changing repack: :func:`_gather_tiles`
+    with the identity window map (output tile R reads source rows
+    ``row0 + [R·Tt, min((R+1)·Tt, n_y))``). Kept for Tt != T
+    (merge_cubes auto-retile, cross-edge resample, every windowed edge
+    change); the same-edge window case dispatches to
+    :func:`_retile_same_edge_jvm` (also the slow leg of the
+    filter_bbox A/B recorded in PLANS.md)."""
     import numpy as np
-    import pandas as pd
 
-    T, Tt = tc.tile, new_tile
-    keys = tc.key_dims
+    Tt = new_tile
 
-    def split_axis(t0: int, off: int, n: int):
-        """[(dest_tile, dest_offset, local_start, length), ...] for the
-        WINDOW pixels of source span [t0, t0+T): window index
-        w = global − off, kept while 0 ≤ w < n."""
-        out = []
-        g = max(t0, off)
-        hi = min(t0 + T, off + n)
-        while g < hi:
-            w = g - off
-            dt = w // Tt
-            ln = min((dt + 1) * Tt - w, hi - g)
-            out.append((dt, w % Tt, g - t0, ln))
-            g += ln
-        return out
+    def window(off: int, n: int) -> list:
+        return [off + np.arange(j0, min(j0 + Tt, n))
+                for j0 in range(0, n, Tt)]
 
-    def split(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                rec = row._asdict()
-                rspans = split_axis(int(rec["tile_row"]) * T, row0, n_y)
-                cspans = split_axis(int(rec["tile_col"]) * T, col0, n_x)
-                if not rspans or not cspans:
-                    continue
-                a = np.asarray(rec["data"], dtype="float64").reshape(T, T)
-                for dr, r0, sr, h in rspans:
-                    for dc, c0, sc, w in cspans:
-                        blk = a[sr:sr + h, sc:sc + w]
-                        rows.append({
-                            **{c: rec[c] for c in keys},
-                            "tile_row": dr, "tile_col": dc,
-                            "_r0": r0, "_c0": c0, "_h": h, "_w": w,
-                            # NaN rides Arrow; assemble re-NaNs anyway
-                            "_frag": blk.reshape(-1).tolist(),
-                        })
-            if rows:
-                yield pd.DataFrame(rows)
-
-    frags = tc.df.mapInPandas(split, _frag_ddl(tc.df.schema, keys))
-    return _assemble_fragments(frags, keys, out_schema_obj, Tt, n_y, n_x)
+    return _gather_tiles(
+        tc, window(row0, n_y), window(col0, n_x),
+        lambda R, C, canvas: _nan_pad(canvas, Tt),
+        out_schema_obj, Tt, n_y, n_x,
+    )
 
 
 def filter_bbox_tiled_native(

@@ -860,24 +860,10 @@ def bloom_decontaminate(
     bloom_filter_agg is not SQL-exposed, and this form keeps the DuckDB
     twin expressible.
     """
-    # Round-15 optimization (guide §3.3/§5): the K broadcast builds of
-    # `bit_set` plus the exact-verify join each re-embedded the
-    # reference n-gram subtree (tokenize + md5 per gram, 4 runs at
-    # K=3). Both tables are bounded by design (ref_grams by the eval
-    # suite, bit_set ≤ BLOOM_M ints), so localCheckpoint evaluates the
-    # reference side once per call; output identical (pure
-    # re-reference), every invocation still computes from the inputs.
-    # eager=False: both reference-side tables materialize inside the
-    # first screen join's broadcast build instead of two separate
-    # barrier jobs per invocation (round-16, guide §5).
-    ref_grams = (
-        _token_ngram_hashes(reference, n).select("gh").distinct()
-        .localCheckpoint(eager=False)
-    )
+    ref_grams = _token_ngram_hashes(reference, n).select("gh").distinct()
     bit_set = (
         ref_grams.select(F.explode(F.array(*_bloom_positions(F.col("gh")))).alias("pos"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     corpus_grams = _token_ngram_hashes(docs, n)
     screened = corpus_grams
@@ -892,10 +878,8 @@ def bloom_decontaminate(
         .select("doc_id")
         .distinct()
     )
-    # The checkpointed reference side carries no stats, which poisons
-    # the size estimate of `contaminated` and demoted this anti-join to
-    # sort-merge (shuffling the full corpus). The candidate-id set is
-    # bounded by the Bloom screen, so broadcast it explicitly.
+    # The candidate-id set is bounded by the Bloom screen, so broadcast
+    # it explicitly: the anti-join never shuffles the full corpus.
     return docs.join(F.broadcast(contaminated), "doc_id", "left_anti")
 
 

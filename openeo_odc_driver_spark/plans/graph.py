@@ -295,8 +295,6 @@ class ProcessGraph:
         if pid == "resample_spatial":
             # not folded into a scan (something sits between it and the
             # load) — run as an explicit regrid at this plan position
-            from dataclasses import replace
-
             cube: Cube = self._resolve(args["data"])
             res = args.get("resolution")
             if args.get("projection") is not None:
@@ -311,16 +309,7 @@ class ProcessGraph:
                     resample_spatial_warp,
                 )
 
-                if (_epsg_of(args["projection"]) is None
-                        and str(args["projection"]) != str(cube.schema.crs)):
-                    # an explicitly requested reprojection we cannot
-                    # parse must NOT silently fall through to the
-                    # resolution-only branch (None == None) — fail the
-                    # same named way validate_warp_pair does
-                    raise NotImplementedError(
-                        "resample_spatial: unsupported target CRS "
-                        f"{args['projection']!r} (EPSG codes only)"
-                    )
+                _check_projection(args["projection"], cube.schema.crs)
                 if _epsg_of(args["projection"]) != _epsg_of(cube.schema.crs):
                     if not res:
                         raise ValueError(
@@ -328,25 +317,20 @@ class ProcessGraph:
                             "needs an explicit resolution (meters)"
                         )
                     return resample_spatial_warp(
-                        cube, args["projection"],
-                        float(res[0] if isinstance(res, (list, tuple))
-                              else res),
+                        cube, args["projection"], _resolution(res),
                         args.get("method", "near"),
                     )
             if not res:
                 return cube
-            g = cube.schema.grid
-            if g is None:
+            if cube.schema.grid is None:
                 raise ValueError("resample_spatial: cube lacks a GridSpec")
-            target = Cube(
-                cube.df,
-                replace(cube.schema,
-                        grid=GridSpec(g.x0, g.y0, float(res), float(res))),
+            return resample_cube_spatial(
+                cube, _at_resolution(cube, _resolution(res)),
+                args.get("method", "near"),
             )
-            return resample_cube_spatial(cube, target,
-                                         args.get("method", "near"))
 
         if pid == "load_collection":
+            _check_load_args(args)
             cube = load_collection_cube(spark, args["id"], self.sf_dir)
             te = args.get("temporal_extent")
             if te:
@@ -371,16 +355,10 @@ class ProcessGraph:
                 cube = filter_bands(cube, bands)
             res = args.get("_target_resolution")
             if res:
-                from dataclasses import replace
-
-                g = cube.schema.grid
-                target = Cube(
-                    cube.df,
-                    replace(cube.schema,
-                            grid=GridSpec(g.x0, g.y0, float(res), float(res))),
+                cube = resample_cube_spatial(
+                    cube, _at_resolution(cube, _resolution(res)),
+                    args.get("_resample_method", "near"),
                 )
-                cube = resample_cube_spatial(cube, target,
-                                             args.get("_resample_method", "near"))
             return cube
 
         if pid == "save_result":
@@ -434,7 +412,8 @@ class ProcessGraph:
             return cube.with_df(cube.df.withColumn(VALUE, expr))
 
         if pid == "filter_bands":
-            return filter_bands(self._resolve(args["data"]), args["bands"])
+            return filter_bands(self._resolve(args["data"]),
+                                _band_list(args["bands"]))
         if pid == "filter_temporal":
             ext = args.get("extent") or [args.get("start"), args.get("end")]
             return filter_temporal(self._resolve(args["data"]),
@@ -637,6 +616,7 @@ class ProcessGraph:
         changes the grid extent, a long-format concern)."""
         import os
 
+        _check_load_args(args)
         if not (self.tiled_store_dir and isinstance(args.get("id"), str)):
             return None
         path = os.path.join(self.tiled_store_dir, args["id"])
@@ -646,6 +626,7 @@ class ProcessGraph:
 
         tc = tl.load_tiled(self._spark, path)
         tres = args.get("_target_resolution")
+        r = _resolution(tres) if tres else None
         if tres and (
             tc.schema.grid is None
             or str(args.get("_resample_method", "near"))
@@ -679,8 +660,6 @@ class ProcessGraph:
             # difference between scanning k²× fewer tile bytes and
             # scanning the full-res scene for a 600 m answer. No
             # exact level → read the base store as before.
-            r = float(tres[0] if isinstance(tres, (list, tuple))
-                      else tres)
             lvl = tl.select_overview_level(
                 path, tc.schema.grid, tc.n_y, tc.n_x, r
             )
@@ -704,17 +683,10 @@ class ProcessGraph:
             # same bytes read, the covering-downscale snap on tiles,
             # applied AFTER band/temporal pruning so the snap moves
             # only the kept slices. Unsupported grid pairs fall back.
-            from dataclasses import replace as _rpl
-
-            g = tc.schema.grid
-            r = float(tres[0] if isinstance(tres, (list, tuple))
-                      else tres)
-            tgt = tl.TiledCube(
-                tc.df, _rpl(tc.schema, grid=GridSpec(g.x0, g.y0, r, r)),
-                tc.tile, tc.n_y, tc.n_x,
-            )
             try:
-                tc = tl.resample_cube_spatial_tiled(tc, tgt, "near")
+                tc = tl.resample_cube_spatial_tiled(
+                    tc, _at_resolution(tc, r), "near"
+                )
             except tl.TiledRegridUnsupported:
                 return None
         return tc
@@ -832,7 +804,7 @@ class ProcessGraph:
 
         if pid == "filter_bands" and is_tiled("data"):
             return tl.filter_bands_tiled(
-                self._resolve_raw(args["data"]), args["bands"]
+                self._resolve_raw(args["data"]), _band_list(args["bands"])
             )
         if pid == "filter_temporal" and is_tiled("data"):
             ext = args.get("extent") or [args.get("start"), args.get("end")]
@@ -867,11 +839,9 @@ class ProcessGraph:
             child = args["reducer"]["process_graph"]
             named = _single_named_reducer(child)
             if dim == TIME and named in (
-                "mean", "sum", "min", "max", "sd", "variance"
+                "mean", "median", "sum", "min", "max", "sd", "variance"
             ):
                 return tl.reduce_time_tiled(tc, named)
-            if dim == TIME and named == "median":
-                return tl.reduce_time_median_tiled(tc)
             if dim == BAND and named in (
                 "mean", "sum", "min", "max", "sd", "variance"
             ):
@@ -1000,23 +970,14 @@ class ProcessGraph:
             # resample_spatial_warp_tiled (raster stays packed, one
             # exchange); resolution-only routes to the native
             # covering-downscale snap below
+            res = args.get("resolution")
             if args.get("projection") is not None:
                 from ..operators.resample import _epsg_of
 
                 tcube = self._resolve_raw(args["data"])
-                if (_epsg_of(args["projection"]) is None
-                        and str(args["projection"])
-                        != str(tcube.schema.crs)):
-                    # same guard as the long branch: an unparseable
-                    # explicit reprojection raises instead of silently
-                    # routing to the resolution-only snap
-                    raise NotImplementedError(
-                        "resample_spatial: unsupported target CRS "
-                        f"{args['projection']!r} (EPSG codes only)"
-                    )
+                _check_projection(args["projection"], tcube.schema.crs)
                 if (_epsg_of(args["projection"])
                         != _epsg_of(tcube.schema.crs)):
-                    res = args.get("resolution")
                     if not res:
                         raise ValueError(
                             "resample_spatial with a projection change "
@@ -1024,9 +985,7 @@ class ProcessGraph:
                         )
                     try:
                         return tl.resample_spatial_warp_tiled(
-                            tcube, args["projection"],
-                            float(res[0] if isinstance(res, (list, tuple))
-                                  else res),
+                            tcube, args["projection"], _resolution(res),
                             args.get("method", "near"),
                         )
                     except tl.TiledRegridUnsupported:
@@ -1038,25 +997,14 @@ class ProcessGraph:
             # onto the scaled grid — the same covering-downscale snap
             # resample_cube_spatial_tiled runs natively (round 14);
             # unsupported grid pairs demote as usual
-            res = args.get("resolution")
             if res and str(args.get("method", "near")) in ("near",
                                                            "nearest"):
-                from dataclasses import replace as _rpl
-
                 tcube = self._resolve_raw(args["data"])
-                g = tcube.schema.grid
-                if g is not None:
-                    r = float(res[0] if isinstance(res, (list, tuple))
-                              else res)
-                    tgt = tl.TiledCube(
-                        tcube.df,
-                        _rpl(tcube.schema,
-                             grid=GridSpec(g.x0, g.y0, r, r)),
-                        tcube.tile, tcube.n_y, tcube.n_x,
-                    )
+                if tcube.schema.grid is not None:
                     try:
                         return tl.resample_cube_spatial_tiled(
-                            tcube, tgt, "near"
+                            tcube, _at_resolution(tcube, _resolution(res)),
+                            "near",
                         )
                     except tl.TiledRegridUnsupported:
                         return NotImplemented
@@ -1259,6 +1207,78 @@ def _overlap_resolver_fn(args: dict):
 
 class ArrayElementNotAvailable(ValueError):
     """openEO ``array_element``: the label or index is not in the array."""
+
+
+# ---- argument shapes ------------------------------------------------------
+# A malformed argument is the graph's fault: these raise ValueError (a
+# named 400), never a TypeError/AttributeError from deep in a plan.
+
+
+def _band_list(bands) -> list:
+    """A ``bands`` argument: a list of band labels. A bare string is
+    refused rather than read as its characters."""
+    if not (isinstance(bands, (list, tuple))
+            and all(isinstance(b, str) for b in bands)):
+        raise ValueError(f"bands must be a list of labels, got {bands!r}")
+    return list(bands)
+
+
+def _check_load_args(args: dict) -> None:
+    """load_collection's argument shapes: ``bands`` a label list,
+    ``spatial_extent`` an object, ``temporal_extent`` a pair."""
+    if args.get("bands") is not None:
+        _band_list(args["bands"])
+    se = args.get("spatial_extent")
+    if se is not None and not isinstance(se, dict):
+        raise ValueError(f"spatial_extent must be an object, got {se!r}")
+    te = args.get("temporal_extent")
+    if te is not None and not (isinstance(te, (list, tuple))
+                               and len(te) == 2):
+        raise ValueError(
+            f"temporal_extent must be a [start, end] pair, got {te!r}"
+        )
+
+
+def _resolution(res) -> float:
+    """The cell size of a ``resolution`` argument: a number, or openEO's
+    [x, y] pair when both are equal. Every snap here targets a square
+    grid, so an unequal pair is refused rather than read as its first
+    value."""
+    try:
+        if isinstance(res, (list, tuple)):
+            if len(res) != 2 or float(res[0]) != float(res[1]):
+                raise ValueError
+            res = res[0]
+        return float(res)
+    except (TypeError, ValueError):
+        raise ValueError(
+            f"resolution must be a number or an equal [x, y] pair, "
+            f"got {res!r}"
+        ) from None
+
+
+def _at_resolution(h, r: float):
+    """``h`` (a Cube or TiledCube) relabeled onto the r × r grid at its
+    own origin — the target handle of a resolution-only snap."""
+    from dataclasses import replace
+
+    g = h.schema.grid
+    return replace(
+        h, schema=replace(h.schema, grid=GridSpec(g.x0, g.y0, r, r))
+    )
+
+
+def _check_projection(projection, crs) -> None:
+    """An explicitly requested CRS that does not parse raises instead
+    of silently routing to the resolution-only branch (None == None);
+    the cube's own CRS spelled verbatim still routes there."""
+    from ..operators.resample import _epsg_of
+
+    if _epsg_of(projection) is None and str(projection) != str(crs):
+        raise NotImplementedError(
+            "resample_spatial: unsupported target CRS "
+            f"{projection!r} (EPSG codes only)"
+        )
 
 
 def _single_named_reducer(child: dict) -> Optional[str]:

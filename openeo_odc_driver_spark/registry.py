@@ -974,7 +974,7 @@ def _tiled_pipeline_e2e(spark, sf_dir):
     openEO pipeline — store → load → cloud-mask → NDVI → time median —
     executed ENTIRELY on the tiled layout (core/tiled.py: save_tiled /
     load_tiled / mask_tiled / normalized_difference_tiled /
-    reduce_time_median_tiled), against one independent long-format SQL
+    reduce_time_tiled median), against one independent long-format SQL
     composition. Every stage is individually gated; this row pins
     their COMPOSITION (schema handoffs, NULL propagation across
     stages, padding discipline) end to end."""
@@ -985,7 +985,7 @@ def _tiled_pipeline_e2e(spark, sf_dir):
         load_tiled,
         mask_tiled,
         normalized_difference_tiled,
-        reduce_time_median_tiled,
+        reduce_time_tiled,
         save_tiled,
         to_tiled,
     )
@@ -995,7 +995,7 @@ def _tiled_pipeline_e2e(spark, sf_dir):
     data = load_tiled(spark, path)
     m = to_tiled(synthetic_cube(spark, MASK_SPEC), tile=8, n_y=16, n_x=16)
     nd = normalized_difference_tiled(mask_tiled(data, m), "B08", "B04")
-    return from_tiled(reduce_time_median_tiled(nd)).df.select(
+    return from_tiled(reduce_time_tiled(nd, "median")).df.select(
         Y, X, F.col(VALUE).alias("ndvi_median")
     )
 
@@ -1370,12 +1370,12 @@ def _tiled_reduce_y_max(spark, sf_dir):
     "quantile_cont(value, 0.5) AS value FROM cube GROUP BY 1, 2, 3, 4",
 )
 def _tiled_aggregate_period_median(spark, sf_dir):
-    """Round-11: period median natively on tiles — the
-    reduce_time_median_tiled multiset fold keyed by the date_trunc
-    label (core/tiled.py: aggregate_temporal_period_tiled median
-    branch). Seasons give 3-element groups on the monthly fixture, and
-    the ~4% NULLs shrink some to 2/1/0 — exercising the even-count
-    interpolation and the all-NULL → NULL rule per position."""
+    """Round-11: period median natively on tiles — the shared
+    ``_fold_groups`` median keyed by the date_trunc label
+    (core/tiled.py: aggregate_temporal_period_tiled). Seasons give
+    3-element groups on the monthly fixture, and the ~4% NULLs shrink
+    some to 2/1/0 — exercising the even-count interpolation and the
+    all-NULL → NULL rule per position."""
     from .core.tiled import aggregate_temporal_period_tiled, from_tiled
 
     return from_tiled(
@@ -1407,13 +1407,13 @@ def _tiled_ndvi_median(spark, sf_dir):
     from .core.tiled import (
         from_tiled,
         normalized_difference_tiled,
-        reduce_time_median_tiled,
+        reduce_time_tiled,
         to_tiled,
     )
 
     tc = to_tiled(synthetic_cube(spark), tile=8, n_y=16, n_x=16)
     nd = normalized_difference_tiled(tc, "B08", "B04")
-    return from_tiled(reduce_time_median_tiled(nd)).df.select(
+    return from_tiled(reduce_time_tiled(nd, "median")).df.select(
         Y, X, F.col(VALUE).alias("ndvi_median")
     )
 

@@ -796,6 +796,9 @@ def test_bilinear_tiled_matches_long(spark):
         (CubeSpec(resx=15.0, resy=15.0, nx=10, ny=10), 8, 4),
         (CubeSpec(resx=15.0, resy=15.0, nx=11, ny=11, x0=7.5, y0=142.5),
          5, 4),
+        # windows straddling two source tiles per axis, a 1-px last
+        # target tile
+        (CubeSpec(resx=15.0, resy=15.0, nx=10, ny=10), 4, 3),
     ):
         tgt = synthetic_cube(spark, spec)
         long_df = resample_cube_spatial(src, tgt, method="bilinear").df

@@ -278,8 +278,9 @@ def test_tiled_time_mean_matches_long_reducer(spark):
     pd.testing.assert_frame_equal(long, tiled, check_exact=True)
     import pytest
 
+    # median runs through the same fold; an unknown name still raises
     with pytest.raises(ValueError, match="reducer"):
-        t.reduce_time_tiled(tc, "median")
+        t.reduce_time_tiled(tc, "mode")
 
 
 def test_tiled_reducers_match_long_across_engines(spark):
@@ -365,8 +366,8 @@ def test_tiled_ndvi_median_matches_long_pipeline(spark):
     tc = t.to_tiled(cube, tile=5)  # partial tiles on purpose
     tiled = (
         t.from_tiled(
-            t.reduce_time_median_tiled(
-                t.normalized_difference_tiled(tc, "B08", "B04")
+            t.reduce_time_tiled(
+                t.normalized_difference_tiled(tc, "B08", "B04"), "median"
             )
         )
         .df.select("y", "x", "value")

@@ -576,3 +576,77 @@ def test_hostile_band_labels_select_no_extra_rows(client, label):
     assert r.status_code == 200, r.get_json()
     rows = _saved_rows(r.get_json())
     assert len(rows) == 24 * 16 * 16 and rows["value"].isna().all()
+
+
+def _load_only(**load_args):
+    return {"process_graph": {
+        "l": {"process_id": "load_collection",
+              "arguments": {"id": "synthetic", **load_args}},
+        "s": {"process_id": "save_result", "result": True,
+              "arguments": {"data": {"from_node": "l"},
+                            "format": "PARQUET"}}}}
+
+
+@pytest.mark.parametrize("tiled", [False, True])
+@pytest.mark.parametrize("arg,value", [
+    ("bands", 5),
+    ("bands", "B04"),
+    ("spatial_extent", [1, 2]),
+    ("temporal_extent", ["2021-01-01"]),
+])
+def test_malformed_load_argument_answers_400(client, arg, value, tiled):
+    """An argument of the wrong shape is the graph's fault: a named 400
+    in either mode — never a 500, and a bare band string is never read
+    as its characters."""
+    r = client.post("/graph", json={**_load_only(**{arg: value}),
+                                     "tiled": tiled})
+    assert r.status_code == 400, r.get_json()
+    assert r.get_json()["code"] == "ValueError"
+    assert arg in r.get_json()["message"]
+
+
+def _resample_graph(resolution, explicit: bool):
+    """resample_pushdown.json at ``resolution``; ``explicit`` puts a
+    whole-scene filter_bbox between load and resample, so the resample
+    runs at its own plan position instead of folding into the scan."""
+    with open(f"{HERE}/process_graphs/resample_pushdown.json") as f:
+        g = json.load(f)
+    pg = g["process_graph"]
+    pg["coarsen"]["arguments"]["resolution"] = resolution
+    if explicit:
+        pg["box"] = {"process_id": "filter_bbox", "arguments": {
+            "data": {"from_node": "load"},
+            "extent": {"west": 0, "east": 150, "south": 0, "north": 150}}}
+        pg["coarsen"]["arguments"]["data"] = {"from_node": "box"}
+    return g
+
+
+@pytest.mark.parametrize("tiled", [False, True])
+@pytest.mark.parametrize("explicit", [False, True])
+def test_resolution_pair_equals_number(spark, tmp_path, tiled, explicit):
+    """openEO's array form ``[20, 20]`` regrids exactly like ``20``, at
+    the scan and at an explicit plan position, in either mode."""
+    import pandas as pd
+
+    from openeo_odc_driver_spark.plans.graph import ProcessGraph
+
+    frames = []
+    for i, res in enumerate((20.0, [20, 20])):
+        pg = ProcessGraph(_resample_graph(res, explicit),
+                          save_dir=str(tmp_path / f"r{i}"), tiled=tiled)
+        frames.append(pg.execute(spark).df.toPandas())
+    cols = sorted(frames[0].columns)
+    a, b = (f[cols].sort_values(cols).reset_index(drop=True)
+            for f in frames)
+    assert len(a) == 3 * 9 * 9
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
+def test_unequal_resolution_pair_answers_400(client):
+    """An unequal [x, y] resolution is refused, not read as x."""
+    for explicit in (False, True):
+        r = client.post("/graph",
+                        json=_resample_graph([20, 30], explicit))
+        assert r.status_code == 400, r.get_json()
+        assert r.get_json()["code"] == "ValueError"
+        assert "resolution" in r.get_json()["message"]
